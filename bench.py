@@ -3,7 +3,8 @@
 
 Default mode: run every headline query from ``__spark_entry__.queries()``
 against ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32) and print ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run on)
+and print ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"<name>": sec, ...}, "sf": <sf>, ...extras}
@@ -34,7 +35,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def make_spark(

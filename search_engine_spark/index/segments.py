@@ -66,6 +66,7 @@ import time
 from pathlib import Path
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -112,6 +113,21 @@ LINEAGE_SCHEMA = StructType(
         StructField("segment_path", StringType(), False),
         StructField("input_docs", LongType(), False),
         StructField("committed_at", DoubleType(), False),
+    ]
+)
+
+METRICS_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("bucket", IntegerType()),
+        StructField("input_docs", LongType()),
+        StructField("dl_sum", LongType()),
+        StructField("n_terms", LongType()),
+        StructField("n_postings", LongType()),
+        StructField("segment_bytes", LongType()),
+        StructField("encode_secs", DoubleType()),
+        StructField("docs_per_sec", DoubleType()),
+        StructField("postings_per_sec", DoubleType()),
     ]
 )
 
@@ -474,6 +490,9 @@ def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
     the per-term ``enc_bytes`` sum — no binary column is ever read
     (summing length(postings) would scan the whole segment payload,
     a fixed serial tail that hurt the high-parallelism bench levels).
+    The lineage and metrics rows go to Spark as pandas frames, i.e.
+    Arrow-built LocalRelations: their writes run JVM-only tasks, where a
+    pickled row list would add a Python task wave to every commit.
     """
     agg_rows = (
         spark.read.parquet(str(out / "index"))
@@ -496,9 +515,10 @@ def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
          int(by_bucket[bkt].input_docs if bkt in by_bucket else 0), now)
         for bkt in sorted(todo_set)
     ]
-    spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(out / "lineage.parquet"))
+    spark.createDataFrame(
+        pd.DataFrame(lineage_rows, columns=LINEAGE_SCHEMA.fieldNames()),
+        LINEAGE_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(str(out / "lineage.parquet"))
 
     metric_rows = []
     for bkt in sorted(todo_set):
@@ -513,11 +533,10 @@ def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
              (r.input_docs / es) if es else None,
              (r.n_postings / es) if es else None)
         )
+    # None -> NaN in the float columns -> null again in the Arrow build
     spark.createDataFrame(
-        metric_rows,
-        "run_id string, bucket int, input_docs long, dl_sum long, "
-        "n_terms long, n_postings long, segment_bytes long, "
-        "encode_secs double, docs_per_sec double, postings_per_sec double",
+        pd.DataFrame(metric_rows, columns=METRICS_SCHEMA.fieldNames()),
+        METRICS_SCHEMA,
     ).coalesce(1).write.mode("append").parquet(str(out / "metrics.parquet"))
 
 

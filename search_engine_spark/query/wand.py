@@ -35,26 +35,48 @@ a final window aggregation merges per-bucket partials into the global
 top-k (the reference's ``aggregate_result`` merge, ``src/lib.rs:190-226``,
 which Catalyst plans as partial/final automatically).
 
+Placement: the kernel stage runs ``P = min(n_buckets, defaultParallelism)``
+tasks, ONE task wave. Each bucket gets a distinct int group key whose
+Spark hash partition (Murmur3, seed 42, pmod P) is ``bucket % P``
+(:func:`_group_keys`, computed in Python, no Spark job), so every task
+holds ``floor`` or ``ceil(n_buckets / P)`` buckets. Grouping on the raw
+bucket id instead lands buckets 0-7 in partitions ``[7,3,6,3,6,2,1,3]``
+of 8: one task carries three buckets while three sit empty. The cogroup
+is keyed on the group key, so each group is still exactly one bucket.
+
+Why one wave matters: on a 4-CPU host a 1-task pandas-UDF job costs
+0.25-0.35 s against 0.05-0.08 s for a JVM-only job. Most of that is the
+reused Python worker's per-task ``setup_spark_files`` ->
+``importlib.invalidate_caches()``, which re-reads ``pyspark.zip``'s
+directory once per zipimporter (~0.3 CPU-s a task). So the serving path
+keeps Python out of every stage but the kernel: the single-query
+relation is built through Arrow (a JVM ``LocalRelation``, not a pickled
+Python RDD) and an all-OOV query returns a ``Limit 0`` relation that
+collects with no Spark job at all.
+
 Data access: the per-bucket kernel's grouped input is the union of
 three relations — term rows (ONE parquet scan filtered to the query
 vocabulary by an int64 ``term_hash`` predicate, parquet-stats
 friendly), doc rows (doc_idx, dl) from the per-index serving cache
-(persisted DataFrame -> block manager, no per-call filesystem read),
-and the plan-tokenized (query_id, term, qtf, idf) relation fanned out
-to every bucket as kind=2 rows. Everything flows through Spark's data
-source / block manager (locality, pushdown); there is no executor-side
-filesystem side-channel and no driver-side tokenization. The
-per-query-batch cost of shipping each bucket's dl array is amortized
-over the whole query batch — batch serving scores thousands of queries
-against one shipment. Inside the kernel, postings are matched by the
-full term STRING (carried in the segment rows), so a 60-bit hash
-collision between a query term and another term in the bucket cannot
-mis-score; the hash is only a pushdown filter.
+(persisted in P hash partitions of the group key -> block manager, no
+per-call filesystem read, no per-call Exchange), and the plan-tokenized
+(query_id, term, qtf, idf) relation fanned out to every bucket's group
+key as kind=2 rows. Everything flows through Spark's data source /
+block manager (locality, pushdown); there is no executor-side
+filesystem side-channel. The per-query-batch cost of shipping each
+bucket's dl array is amortized over the whole query batch — batch
+serving scores thousands of queries against one shipment. Inside the
+kernel, postings are matched by the full term STRING (carried in the
+segment rows), so a 60-bit hash collision between a query term and
+another term in the bucket cannot mis-score; the hash is only a
+pushdown filter.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -63,8 +85,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -153,18 +173,67 @@ def maxscore_topk(
 
 # --- per-index serving state (cached across wand_topk calls) --------------
 #
-# Doc rows (bucket, doc_idx, dl, url) and termstats (term, term_hash, idf)
+# Doc rows (gkey, doc_idx, dl, url) and termstats (term, term_hash, idf)
 # are immutable once an index is committed (stats.json is written last),
 # so serving caches them as persisted DataFrames: single-query latency no
 # longer re-reads the kind=0 half of the index or the termstats parquet
 # per call — both come from the block manager (InMemoryTableScan,
 # plan-asserted in tests/test_segments_wand.py). The cache key folds in
 # stats.json's (mtime, size) fingerprint so a rebuilt index at the same
-# path is never reused stale, and entries are evicted LRU-ish at
-# _SERVE_CACHE_MAX to keep long test sessions bounded.
+# path is never reused stale, and entries are evicted oldest-first at
+# _SERVE_CACHE_MAX to keep long test sessions bounded. A caller that
+# unions several indexes' lazy results (query_generations) looks them up
+# inside ``serving_states_pinned()``, so a later lookup in the same call
+# never evicts a cache the union still reads.
 
 _SERVE_CACHE: dict[tuple, dict] = {}
 _SERVE_CACHE_MAX = 8
+_PIN_SCOPES: list[set] = []
+
+
+@contextmanager
+def serving_states_pinned():
+    """Serving states looked up inside this block are not evicted by
+    other lookups inside it (the cache may exceed its bound meanwhile)."""
+    scope: set = set()
+    _PIN_SCOPES.append(scope)
+    try:
+        yield
+    finally:
+        # by identity: another thread's scope may have been pushed since
+        _PIN_SCOPES[:] = [s for s in _PIN_SCOPES if s is not scope]
+
+
+def _murmur3_int(v: int) -> int:
+    """Spark's ``hash()`` of an int column (Murmur3_x86_32.hashInt with
+    seed 42), the hash behind ``HashPartitioning``."""
+    m = 0xFFFFFFFF
+    k = (v & m) * 0xCC9E2D51 & m
+    k = ((k << 15) | (k >> 17)) & m
+    h = 42 ^ (k * 0x1B873593 & m)
+    h = ((h << 13) | (h >> 19)) & m
+    h = (h * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & m
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.lru_cache(maxsize=None)
+def _group_keys(n_buckets: int, p: int) -> tuple[int, ...]:
+    """One distinct int per bucket; hash-partitioned into ``p``
+    partitions, bucket b's key lands in partition ``b % p``."""
+    todo = {r: list(range(r, n_buckets, p)) for r in range(p)}
+    keys = [0] * n_buckets
+    left, c = n_buckets, 0
+    while left:
+        wanting = todo[_murmur3_int(c) % p]  # Python % == Spark pmod
+        if wanting:
+            keys[wanting.pop(0)] = c
+            left -= 1
+        c += 1
+    return tuple(keys)
 
 
 def _index_fingerprint(index_dir: str) -> tuple:
@@ -180,6 +249,8 @@ def _serving_state(
         _index_fingerprint(stats_dir) if stats_dir else None,
         spark.sparkContext.applicationId,
     )
+    if _PIN_SCOPES:
+        _PIN_SCOPES[-1].add(key)
     state = _SERVE_CACHE.get(key)
     if state is not None:
         return state
@@ -193,9 +264,12 @@ def _serving_state(
         and (k[1] is None or k[1][0] == key[1][0])
     ]:
         _evict(k)
-    while len(_SERVE_CACHE) >= _SERVE_CACHE_MAX:
-        _evict(next(iter(_SERVE_CACHE)))
+    pinned = set().union(*_PIN_SCOPES)
+    victims = [k for k in _SERVE_CACHE if k not in pinned]
+    while victims and len(_SERVE_CACHE) >= _SERVE_CACHE_MAX:
+        _evict(victims.pop(0))
     stats = load_stats(index_dir)
+    n_buckets = int(stats["n_buckets"])
     if stats_dir is not None:
         # Global-stats overlay (streaming generations between
         # compactions): corpus-wide N/avgdl + the merged termstats
@@ -209,17 +283,23 @@ def _serving_state(
             "n_docs": overlay["n_docs"],
             "avgdl": overlay["avgdl"],
         }
-    # doc rows are pre-shuffled by bucket ONCE per index and cached in
-    # that partitioning: the serving cogroup's required distribution is
-    # satisfied by the cache's hashpartitioning(bucket), so a query
-    # batch never re-shuffles the (large, static) doc side — only the
-    # tiny term+query relation moves per call (plan-asserted in
+    # doc rows are pre-shuffled by group key ONCE per index and cached
+    # in P partitions of it: the serving cogroup's required
+    # distribution is satisfied by the cache's hashpartitioning(gkey,
+    # P), so a query batch never re-shuffles the (large, static) doc
+    # side — only the tiny term+query relation moves per call, into
+    # the same P partitions (plan-asserted in
     # tests/test_segments_wand.py::test_wand_serving_plan_cached_docs_and_pushdown)
+    p = min(n_buckets, spark.sparkContext.defaultParallelism)
+    gkeys = _group_keys(n_buckets, p)
+    gkey = F.element_at(
+        F.array(*[F.lit(g) for g in gkeys]), F.col("bucket") + 1
+    ).alias("gkey")
     docs = (
         read_index(spark, index_dir)
         .filter(F.col("kind") == 0)
-        .select("bucket", "doc_idx", "dl", "url")
-        .repartition(F.col("bucket"))
+        .select(gkey, "doc_idx", "dl", "url")
+        .repartition(p, "gkey")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ts = (
@@ -252,7 +332,7 @@ def _serving_state(
         read_index(spark, index_dir)
         .filter(F.col("kind") == 1)
         .select(
-            "bucket", "kind", "term", "postings", "blockmeta",
+            gkey, "kind", "term", "postings", "blockmeta",
             _null("string").alias("query_id"),
             _null("long").alias("qtf"),
             _null("double").alias("idf"),
@@ -262,6 +342,7 @@ def _serving_state(
     state = {
         "stats": stats,
         "docs": docs,
+        "gkeys": gkeys,
         "term_rows_base": term_rows_base,
         "ts": ts,
         "vocab": vocab,
@@ -295,9 +376,12 @@ def _null(t: str):
 # unified term+query row: term rows (kind=1) and query rows (kind=2)
 # share this shape so ONE relation carries both to the per-bucket
 # kernel; doc rows arrive on the other (static, pre-partitioned,
-# cached) side of the cogroup
+# cached) side of the cogroup. ``gkey`` is the bucket's group key.
+_TQ_COLS = [
+    "gkey", "kind", "term", "postings", "blockmeta", "query_id", "qtf", "idf"
+]
 _TQ_DDL = (
-    "bucket int, kind int, term string, postings binary, "
+    "gkey int, kind int, term string, postings binary, "
     "blockmeta binary, query_id string, qtf long, idf double"
 )
 
@@ -369,9 +453,9 @@ def wand_topk(
     batch/pipeline shape — or a plain ``[(query_id, query_string)]``
     list for serving front-ends that already hold the batch on the
     driver (TCP server, REPL, latency bench): the list form always takes
-    the zero-pre-job fast path, which an Arrow-converted
-    ``createDataFrame`` batch cannot be sniffed into (it arrives as a
-    LogicalRDD, not a LocalRelation).
+    the zero-pre-job fast path, which a ``createDataFrame`` batch built
+    from a Python list cannot be sniffed into (it arrives as a
+    LogicalRDD over pickled rows, not a LocalRelation).
 
     ``k=None`` returns the FULL ranked list per query (every matched
     doc, ranked) — parity with the reference poll endpoint, which
@@ -386,10 +470,11 @@ def wand_topk(
     term-row parquet scan (the query *vocabulary*, bounded by the
     lexicon, not the batch size). Doc rows (dl) come from the per-index
     serving cache (block manager, not the filesystem). The (query_id,
-    term, qtf, idf) relation fans out to every bucket as kind=2 rows of
-    the kernel's grouped input -> applyInPandas per bucket (local
-    top-k, urls resolved in-kernel from the doc rows already in the
-    group) -> window for the global top-k merge. No post-kernel join:
+    term, qtf, idf) relation fans out to every bucket's group key as
+    kind=2 rows of the kernel's grouped input -> applyInPandas per
+    bucket, one wave of P tasks (local top-k, urls resolved in-kernel
+    from the doc rows already in the group) -> window for the global
+    top-k merge. No post-kernel join:
     the candidate relation is already (query_id, url, score).
 
     The term_hash is ONLY a pushdown filter — the kernel matches
@@ -399,7 +484,7 @@ def wand_topk(
     state = _serving_state(spark, index_dir, stats_dir)
     stats = state["stats"]
     avgdl, k1, b = stats["avgdl"], stats["k1"], stats["b"]
-    n_buckets = int(stats["n_buckets"])
+    gkeys = state["gkeys"]
 
     if isinstance(queries, list):
         qrows = [(str(qid), str(qs)) for qid, qs in queries]
@@ -409,7 +494,8 @@ def wand_topk(
         # Fast path (small driver-local batch): tokenize with the exact
         # Python parity kernel and resolve (qtf, idf, term_hash) from
         # the cached lexicon — ZERO Spark jobs before the main serving
-        # job; the fanned-out kind=2 rows become one literal relation.
+        # job; the fanned-out kind=2 rows become one Arrow-built
+        # LocalRelation, so no Python task runs before the kernel.
         from ..functions.tokenize import query_tokens_py
 
         qk_rows: list[tuple] = []
@@ -424,13 +510,15 @@ def wand_topk(
                 hashes_set.add(int(h))
                 qtf = toks.count(t)
                 qk_rows.extend(
-                    (bkt, 2, t, None, None, qid, qtf, float(idf))
-                    for bkt in range(n_buckets)
+                    (g, 2, t, None, None, qid, qtf, float(idf))
+                    for g in gkeys
                 )
         if not qk_rows:
             return _empty_result(spark)
         hashes = sorted(hashes_set)
-        qk = spark.createDataFrame(qk_rows, schema=_TQ_DDL)
+        qk = spark.createDataFrame(
+            pd.DataFrame(qk_rows, columns=_TQ_COLS), schema=_TQ_DDL
+        )
     else:
         # Plan path (large / distributed batch): pre-job — ONE narrow
         # stage (explode + md5, no join/shuffle/broadcast) collects the
@@ -490,15 +578,13 @@ def wand_topk(
             "query_id", "term", "qtf", "idf"
         )
         # fan the query relation out to every bucket by exploding a
-        # literal bucket array — no join, no broadcast build (n_buckets
-        # is a build constant from stats.json)
+        # literal group-key array — no join, no broadcast build
+        # (n_buckets is a build constant from stats.json)
         qk = qrel.select(
             "*",
-            F.explode(
-                F.array(*[F.lit(i).cast("int") for i in range(n_buckets)])
-            ).alias("bucket"),
+            F.explode(F.array(*[F.lit(g) for g in gkeys])).alias("gkey"),
         ).select(
-            "bucket",
+            "gkey",
             F.lit(2).alias("kind"),
             "term",
             _null("binary").alias("postings"),
@@ -563,12 +649,13 @@ def wand_topk(
         return pd.DataFrame(rows, columns=["query_id", "url", "score"])
 
     # scatter: the static doc side arrives via its cached
-    # hashpartitioning(bucket) — NO Exchange; the term+query side (tiny:
-    # query vocabulary x buckets) is the only per-batch shuffle
+    # hashpartitioning(gkey, P) — NO Exchange; the term+query side
+    # (tiny: query vocabulary x buckets) is the only per-batch shuffle,
+    # into the same P partitions: one task wave, one bucket per group
     candidates = (
         state["docs"]
-        .groupBy("bucket")
-        .cogroup(tq.groupBy("bucket"))
+        .groupBy("gkey")
+        .cogroup(tq.groupBy("gkey"))
         .applyInPandas(run_bucket, schema=CANDIDATE_SCHEMA)
     )
 
@@ -580,12 +667,15 @@ def wand_topk(
 
 
 def _empty_result(spark: SparkSession) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("query_id", StringType(), False),
-            StructField("rank", IntegerType(), False),
-            StructField("url", StringType(), False),
-            StructField("score", DoubleType(), False),
-        ]
+    # the optimizer folds Limit 0 into an empty LocalRelation, so
+    # collecting this runs no Spark job (createDataFrame([]) runs one)
+    return (
+        spark.range(1)
+        .selectExpr(
+            "CAST(NULL AS STRING) AS query_id",
+            "CAST(NULL AS INT) AS rank",
+            "CAST(NULL AS STRING) AS url",
+            "CAST(NULL AS DOUBLE) AS score",
+        )
+        .limit(0)
     )
-    return spark.createDataFrame([], schema)

@@ -427,7 +427,7 @@ def query_generations(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..query.wand import wand_topk
+    from ..query.wand import serving_states_pinned, wand_topk
 
     gens = list_generations(out_dir)
     if not gens:
@@ -435,16 +435,20 @@ def query_generations(
     sidecar, covers = (None, set())
     if global_stats:
         sidecar, covers = latest_global_stats(out_dir)
-    parts = [
-        wand_topk(
-            spark,
-            g,
-            queries,
-            k=k,
-            stats_dir=sidecar if Path(g).name in covers else None,
-        )
-        for g in gens
-    ]
+    # pinned: with more generations than the serving cache holds, a
+    # later generation's lookup must not evict the doc cache an earlier
+    # part of this (lazy) union still reads
+    with serving_states_pinned():
+        parts = [
+            wand_topk(
+                spark,
+                g,
+                queries,
+                k=k,
+                stats_dir=sidecar if Path(g).name in covers else None,
+            )
+            for g in gens
+        ]
     unioned = parts[0]
     for p in parts[1:]:
         unioned = unioned.unionByName(p)
