@@ -13,9 +13,9 @@ TCP/CLI search server) re-expressed Spark-first:
 - query serving as batch DataFrame jobs: a tf-sum parity scorer matching the
   reference's summed-term-frequency ranking (src/lib.rs:374-411) and a BM25
   top-k scorer with a block-max WAND fast path,
-- scale features the reference lacks: partitioned/checkpointed index builds
-  with lineage + metrics, head-term salting, dedup / similarity / text-quality
-  operators for training-data pipelines.
+- scale features the reference lacks: doc-sharded, checkpointed index builds
+  with lineage + metrics, dedup / similarity / text-quality operators for
+  training-data pipelines.
 """
 
 __version__ = "0.1.0"

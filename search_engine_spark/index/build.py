@@ -20,9 +20,10 @@ Scale notes (100 TB design):
   so the shuffle carries (term, url, partial_count), not raw occurrences.
 - Head-term skew does not concentrate on single keys here because ``url``
   is part of the grouping key; the term-only aggregations (``term_stats``)
-  are partial-aggregated counts (tiny per-map output). The term-partitioned
-  segment *merge* is where head terms concentrate — handled with explicit
-  salting in ``segments.py``.
+  are partial-aggregated counts (tiny per-map output). The compressed
+  segments are doc-sharded (``segments.py``): url hash keeps bucket sizes
+  uniform, and the only term-keyed shuffle there is the vocabulary-sized
+  termstats aggregate.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Compressed index segments: fused one-pass build, checkpoint/resume,
-lineage, metrics.
+"""Compressed index segments: one builder with two input fronts,
+checkpoint/resume, lineage, metrics.
 
 Layout v2 (parquet-backed; an Iceberg table would use the same schema
 with a ``bucket(n, url)`` partition transform — the sandbox has no
@@ -9,7 +9,8 @@ Iceberg runtime jars, so this is the documented fallback per SURVEY.md
     <out_dir>/
       layout.json               written FIRST: n_buckets, mode, k1, b,
                                 codec version — resume validation record
-      index/bucket=K/*.parquet  unified rows, discriminated by ``kind``:
+      index/bucket=K/*.parquet  unified rows (``INDEX_SCHEMA``),
+                                discriminated by ``kind``:
                                 kind=0 doc rows  (doc_idx, url, dl)
                                 kind=1 term rows (term_hash, term, df,
                                 postings, blockmeta, encode_secs)
@@ -19,17 +20,29 @@ Iceberg runtime jars, so this is the documented fallback per SURVEY.md
       stats.json                written LAST (completion marker):
                                 N, avgdl, n_buckets, k1, b
 
-**One corpus pass.** Doc metadata and encoded postings are emitted by a
-single mapInArrow kernel per bucket: tokenize once (pyarrow C++
-utf8_lower + utf8_split_whitespace), yield the doc rows, then
-dictionary-encode + sort + run-length + varint-encode the postings from
-the same token arrays. This is possible because the codec's block
-metadata stores the avgdl-independent bound pair ``(max_tf, min_dl)``
-(codec.py): nothing in a segment depends on corpus-global statistics, so
-no pre-pass over the corpus is needed and the dominant kernel cost
-(tokenization) is paid exactly once. Global stats (N, avgdl, idf) are
-derived afterwards from the *already-written* doc rows — a metadata-only
-aggregation, no text involved.
+**One builder, two fronts.** Every index is written by one driver
+(:func:`_build`: layout record, resume, commit, stats/termstats) around
+one Arrow kernel per bucket. A *front* turns the bucket's Arrow
+input into its docs (urls, dl in doc_idx order), a term dictionary and
+the (term code, doc, tf) postings sorted by term then doc; the shared
+encode tail emits the doc rows, then one term row per distinct term:
+batched varint/PFor encode and the 60-bit term hash. The fronts:
+
+- text (:func:`build_segments`) — tokenize once (pyarrow C++
+  utf8_lower + utf8_split_whitespace), dictionary-encode, one in-place
+  sort of int64 (term, doc) keys, run-length into tf;
+- postings (:func:`build_segments_from_postings`, generation
+  compaction) — rows already decoded from segments
+  (:func:`read_postings_relation`): doc boundaries, term
+  dictionary-encode, argsort.
+
+**One corpus pass.** The text front tokenizes exactly once and the
+kernel needs nothing else: the codec's block metadata stores the
+avgdl-independent bound pair ``(max_tf, min_dl)`` (codec.py), so
+nothing in a segment depends on corpus-global statistics and no
+pre-pass over the corpus is needed. Global stats (N, avgdl, idf) are
+derived afterwards from the *already-written* doc rows — a
+metadata-only aggregation, no text involved.
 
 Partitioning choice: **documents** are hash-partitioned into buckets and
 each bucket holds a full mini-index over its docs (local dense doc_idx).
@@ -37,16 +50,16 @@ Query serving scatters every query to all buckets and gathers per-bucket
 top-k (reference mode 4 scatter-gather, ``src/processor.rs:146-369``, but
 doc-sharded instead of term-sharded — doc sharding keeps per-partition
 top-k semantics exact and is how web-scale engines shard). Skew: bucket
-sizes are uniform by url-hash regardless of term distribution, so head
-terms never concentrate a shuffle partition; the term-partitioned variant
-with explicit head-term salting lives in ``term_merge.py``.
+sizes are uniform by url hash regardless of term distribution, so head
+terms never concentrate a partition; the only term-keyed shuffle in a
+build is the vocabulary-sized termstats aggregate.
 
 Checkpoint/resume (north_rule): each bucket is an idempotent unit. A
 bucket is *committed* iff a lineage row exists for it; on resume,
 uncommitted bucket directories (partial writes from a crash) are deleted
 and only missing buckets are rebuilt — the per-bucket output is a pure
 function of the input corpus, so a resumed build is identical to an
-uninterrupted one (tested in tests/test_segments_wand.py). ``layout.json``
+uninterrupted one (tested in tests/test_segment_build.py). ``layout.json``
 is written before any bucket and re-validated on resume: resuming with a
 different bucket count (e.g. a changed file listing or
 ``spark.sql.files.maxPartitionBytes`` in map-side mode) fails fast
@@ -59,9 +72,7 @@ termstats is durable, so its presence IS the completion marker
 from __future__ import annotations
 
 import json
-import os
 import shutil
-import sys
 import time
 from pathlib import Path
 
@@ -84,26 +95,32 @@ from .codec import encode_postings_batch
 
 CODEC_VERSION = 2
 
-# Unified index-row schema: kind=0 doc rows, kind=1 term rows. One
-# parquet table carries both — the build emits them from ONE kernel and
-# readers prune by ``kind`` (columnar reads never touch the other kind's
-# columns; predicate pushdown skips its row groups).
+# The segment row format: kind=0 doc rows, kind=1 term rows. One parquet
+# table carries both — the build emits them from ONE kernel and readers
+# prune by ``kind`` (columnar reads never touch the other kind's
+# columns; predicate pushdown skips its row groups). Every column is
+# nullable, as written since layout v2.
 INDEX_SCHEMA = StructType(
     [
-        StructField("bucket", IntegerType(), False),
-        StructField("kind", IntegerType(), False),
-        StructField("doc_idx", LongType(), True),
-        StructField("url", StringType(), True),
-        StructField("dl", LongType(), True),
-        StructField("term_hash", LongType(), True),
-        StructField("term", StringType(), True),
-        StructField("df", LongType(), True),
-        StructField("postings", BinaryType(), True),
-        StructField("blockmeta", BinaryType(), True),
-        StructField("enc_bytes", LongType(), True),
-        StructField("encode_secs", DoubleType(), True),
+        StructField("bucket", IntegerType()),
+        StructField("kind", IntegerType()),
+        StructField("doc_idx", LongType()),
+        StructField("url", StringType()),
+        StructField("dl", LongType()),
+        StructField("term_hash", LongType()),
+        StructField("term", StringType()),
+        StructField("df", LongType()),
+        StructField("postings", BinaryType()),
+        StructField("blockmeta", BinaryType()),
+        StructField("enc_bytes", LongType()),
+        StructField("encode_secs", DoubleType()),
     ]
 )
+
+# Identity of a document decoded back from segments: a url may be
+# captured again by a later generation, and each capture stays its own
+# document, as in a text build over the same pages.
+POSTINGS_DOC_KEY = ("url", "gen", "bucket", "doc_idx")
 
 LINEAGE_SCHEMA = StructType(
     [
@@ -132,28 +149,6 @@ METRICS_SCHEMA = StructType(
 )
 
 
-_PHASE_LOG = os.environ.get("SEGMENTS_PHASE_LOG", "") == "1"
-
-
-class _phase:
-    """Optional phase timer (SEGMENTS_PHASE_LOG=1) for build diagnostics."""
-
-    def __init__(self, name: str):
-        self.name = name
-
-    def __enter__(self):
-        self.t0 = time.monotonic()
-        return self
-
-    def __exit__(self, *exc):
-        if _PHASE_LOG:
-            print(
-                f"[segments] {self.name}: {time.monotonic() - self.t0:.2f}s",
-                file=sys.stderr,
-                flush=True,
-            )
-
-
 def build_segments(
     spark: SparkSession,
     pages: DataFrame,
@@ -180,10 +175,6 @@ def build_segments(
 
     Returns a summary dict (buckets built, docs, elapsed).
     """
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    t0 = time.monotonic()
-
     # Bucket layout — two modes:
     #   n_buckets > 0: url-hash bucketing (repartition + url sort) —
     #     deterministic under ANY input layout; used by tests/small runs.
@@ -203,6 +194,55 @@ def build_segments(
     else:
         mode = "map-side"
         n_buckets = part.rdd.getNumPartitions()
+    return _build(
+        spark, part, _text_front, out_dir, n_buckets, mode, run_id, k1, b,
+        pfor, fail_after_buckets,
+    )
+
+
+def build_segments_from_postings(
+    spark: SparkSession,
+    postings: DataFrame,
+    out_dir: str,
+    n_buckets: int = 16,
+    run_id: str = "compact-0",
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    pfor: bool = False,
+) -> dict:
+    """Build a segment index from postings decoded out of existing
+    segments — the generation-compaction path (streaming/ingest.py): no
+    text pass, same builder and layout as :func:`build_segments`, global
+    stats (N, avgdl, idf) over the union, which is exactly what
+    compaction exists to restore.
+
+    ``postings`` has one row per (document, term): the document key
+    ``POSTINGS_DOC_KEY`` — what :func:`read_postings_relation` yields
+    plus a ``gen`` source ordinal — and ``term, tf, dl`` (``dl``
+    repeated per row). ``pfor`` selects the per-block codec choice as in
+    :func:`build_segments`.
+    """
+    part = (
+        postings.select(*POSTINGS_DOC_KEY, "term", "tf", "dl")
+        .repartition(n_buckets, "url")
+        .sortWithinPartitions(*POSTINGS_DOC_KEY, "term")
+    )
+    return _build(
+        spark, part, _postings_front, out_dir, n_buckets, "url-hash-postings",
+        run_id, k1, b, pfor,
+    )
+
+
+def _build(
+    spark, part, front, out_dir, n_buckets, mode, run_id, k1, b, pfor,
+    fail_after_buckets=None,
+) -> dict:
+    """The one build driver: layout record and check, resume clean-up,
+    the bucket kernel over ``front``, commit, then the stats/termstats
+    finalize once every bucket is committed."""
+    out = Path(out_dir)
+    out.mkdir(parents=True, exist_ok=True)
+    t0 = time.monotonic()
 
     # Resume-safety: the bucket layout must match the recorded one, or a
     # resumed run would renumber buckets against the old lineage and
@@ -232,29 +272,25 @@ def build_segments(
     committed = _committed_buckets(spark, out)
     _clean_uncommitted(out, committed)
 
-    missing = sorted(set(range(n_buckets)) - committed)
-    todo = missing
+    todo = sorted(set(range(n_buckets)) - committed)
     if fail_after_buckets is not None:
         todo = todo[:fail_after_buckets]
     if todo:
-        with _phase("build_buckets"):
-            _build_buckets(spark, part, out, todo, run_id, pfor)
+        _build_buckets(spark, part, front, out, todo, run_id, pfor)
 
     complete = len(_committed_buckets(spark, out)) == n_buckets
     n_docs = avgdl = None
     if complete:
         # Corpus stats + global term stats from the committed index —
         # metadata-only aggregations (no corpus/text pass).
-        with _phase("stats"):
-            agg = (
-                spark.read.parquet(str(out / "index"))
-                .filter(F.col("kind") == 0)
-                .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-                .collect()[0]
-            )
+        agg = (
+            spark.read.parquet(str(out / "index"))
+            .filter(F.col("kind") == 0)
+            .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
+            .collect()[0]
+        )
         n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-        with _phase("termstats"):
-            _write_termstats(spark, out, n_docs)
+        _write_termstats(spark, out, n_docs)
         stats = {
             "n_docs": n_docs,
             "avgdl": avgdl,
@@ -299,6 +335,14 @@ def _clean_uncommitted(out: Path, committed: set[int]) -> None:
 _MID_MASK = (1 << 33) - 1
 
 
+def _runs(sorted_vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the runs of equal values in a sorted array."""
+    edge = np.ones(len(sorted_vals) + 1, dtype=bool)
+    edge[1:-1] = sorted_vals[1:] != sorted_vals[:-1]
+    bounds = np.flatnonzero(edge)
+    return bounds[:-1], bounds[1:]
+
+
 def _arrow_tokens(text_array):
     """Arrow-side reference tokenizer: lower + Unicode-whitespace split.
 
@@ -321,112 +365,118 @@ def _arrow_tokens(text_array):
     return flat, doc_of, dl
 
 
-def _build_buckets(spark, part, out: Path, todo, run_id, pfor=False) -> None:
-    """The single corpus pass — ZERO-SHUFFLE fused map-side indexing.
+def _text_front(tbl):
+    """(url, text) rows in bucket order -> (urls, dl, term dictionary,
+    p_codes, p_docs, p_tfs): tokenize, dictionary-encode, then one
+    in-place sort of int64 ``(term code << 33) | doc`` keys whose runs
+    are the postings."""
+    import pyarrow.compute as pc
 
-    Each partition (= bucket) of ``part`` flows through ONE mapInArrow
+    flat, doc_of, dl = _arrow_tokens(tbl.column("text").combine_chunks())
+    de = pc.dictionary_encode(flat)
+    key = de.indices.to_numpy(zero_copy_only=False).astype(np.int64) << 33
+    key |= doc_of
+    key.sort()  # in place: the per-token hot path
+    starts, ends = _runs(key)
+    p_key = key[starts]
+    return (
+        tbl.column("url").combine_chunks(), dl, de.dictionary,
+        p_key >> 33, p_key & _MID_MASK, ends - starts,
+    )
+
+
+def _postings_front(tbl):
+    """Decoded postings rows sorted by ``(*POSTINGS_DOC_KEY, term)`` ->
+    the same tuple as :func:`_text_front`: a document starts where its
+    key changes, then term dictionary-encode and an argsort of the
+    ``(term code << 33) | doc`` keys."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    urls = tbl.column("url").combine_chunks()
+    new_doc = np.ones(len(urls), dtype=bool)
+    new_doc[1:] = pc.not_equal(urls[1:], urls[:-1]).to_numpy(
+        zero_copy_only=False
+    )
+    for c in POSTINGS_DOC_KEY[1:]:
+        v = tbl.column(c).to_numpy()
+        new_doc[1:] |= v[1:] != v[:-1]
+    doc_starts = np.flatnonzero(new_doc)
+    doc_of = np.cumsum(new_doc, dtype=np.int64) - 1
+    te = pc.dictionary_encode(tbl.column("term").combine_chunks())
+    codes = te.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    order = np.argsort((codes << 33) | doc_of, kind="stable")
+    tf = tbl.column("tf").to_numpy().astype(np.int64)
+    return (
+        urls.take(pa.array(doc_starts)),
+        tbl.column("dl").to_numpy().astype(np.int64)[doc_starts],
+        te.dictionary, codes[order], doc_of[order], tf[order],
+    )
+
+
+def _build_buckets(spark, part, front, out: Path, todo, run_id, pfor) -> None:
+    """The bucket kernel — ZERO-SHUFFLE fused map-side indexing.
+
+    Each partition (= bucket) of ``part`` flows through ONE Arrow
     kernel that does the whole per-bucket index build in Arrow/numpy:
-    tokenize (pyarrow C++ utf8_lower + utf8_split_whitespace — string
-    data never becomes Python objects), emit the doc rows (doc_idx, url,
-    dl), then dictionary-encode terms, sort+run-length into
-    (term, doc, tf) postings, and the batched varint/block-meta encode
-    with avgdl-independent (max_tf, min_dl) bounds. The corpus is
-    tokenized exactly once and never crosses an exchange; the only
-    shuffled relation in the whole build is vocabulary-sized (termstats).
-    This mirrors how doc-sharded web indexes scale: posting construction
-    is embarrassingly parallel per shard.
+    ``front`` yields the docs and the sorted (term, doc, tf) postings
+    (string data never becomes Python objects), the kernel emits the
+    doc rows (doc_idx, url, dl), then the batched varint/block-meta
+    encode with avgdl-independent (max_tf, min_dl) bounds. The input
+    never crosses another exchange; the only shuffled relation after it
+    is vocabulary-sized (termstats). This mirrors how doc-sharded web
+    indexes scale: posting construction is embarrassingly parallel per
+    shard.
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    schema = to_arrow_schema(INDEX_SCHEMA)
     todo_set = set(todo)
     part_f = part.filter(F.spark_partition_id().isin(list(todo_set)))
 
-    arrow_schema = pa.schema(
-        [
-            ("bucket", pa.int32()),
-            ("kind", pa.int32()),
-            ("doc_idx", pa.int64()),
-            ("url", pa.string()),
-            ("dl", pa.int64()),
-            ("term_hash", pa.int64()),
-            ("term", pa.string()),
-            ("df", pa.int64()),
-            ("postings", pa.binary()),
-            ("blockmeta", pa.binary()),
-            ("enc_bytes", pa.int64()),
-            ("encode_secs", pa.float64()),
-        ]
-    )
+    def rows(bucket, kind, n, **cols):
+        # one batch of n segment rows; the columns not given are null
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.full(n, bucket, dtype=np.int32)),
+                pa.array(np.full(n, kind, dtype=np.int32)),
+            ]
+            + [
+                pa.array(cols[f.name], type=f.type, from_pandas=True)
+                if f.name in cols
+                else pa.nulls(n, type=f.type)
+                for f in list(schema)[2:]
+            ],
+            schema=schema,
+        )
 
     def encode_partition(batches):
         import hashlib
 
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         t_start = time.monotonic()
-        url_chunks, text_chunks = [], []
-        for rb in batches:
-            url_chunks.append(rb.column(0))
-            text_chunks.append(rb.column(1))
-        if not text_chunks:
+        batches = list(batches)
+        if not batches:
             return
+        tbl = pa.Table.from_batches(batches)
+        if tbl.num_rows == 0:
+            return
+        urls, dl, terms, p_codes, p_docs, p_tfs = front(tbl)
         bucket = TaskContext.get().partitionId()
-        urls = pa.chunked_array(url_chunks).combine_chunks()
-        text = pa.chunked_array(text_chunks).combine_chunks()
-        flat, doc_of, dl = _arrow_tokens(text)
         n_docs = len(urls)
-
-        def nulls(t):
-            return pa.nulls(n_docs, type=t)
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_docs, bucket, dtype=np.int32)),
-                pa.array(np.zeros(n_docs, dtype=np.int32)),
-                pa.array(np.arange(n_docs, dtype=np.int64)),
-                urls,
-                pa.array(dl),
-                nulls(pa.int64()),
-                nulls(pa.string()),
-                nulls(pa.int64()),
-                nulls(pa.binary()),
-                nulls(pa.binary()),
-                nulls(pa.int64()),
-                nulls(pa.float64()),
-            ],
-            schema=arrow_schema,
-        )
-        if len(flat) == 0:
+        yield rows(bucket, 0, n_docs, doc_idx=np.arange(n_docs), url=urls, dl=dl)
+        if len(p_codes) == 0:
             return
-
-        de = pc.dictionary_encode(flat)
-        codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        # One int64 sort key: (term code << 33) | doc position.
-        key = (codes << 33) | doc_of
-        key.sort()
-        codes_s = key >> 33
-        docs_s = key & _MID_MASK
-        new_run = np.concatenate(([True], key[1:] != key[:-1]))
-        run_starts = np.flatnonzero(new_run)
-        run_ends = np.concatenate((run_starts[1:], [len(key)]))
-        p_codes = codes_s[run_starts]
-        p_docs = docs_s[run_starts]
-        p_tfs = (run_ends - run_starts).astype(np.int64)
-        t_change = np.flatnonzero(
-            np.concatenate(([True], p_codes[1:] != p_codes[:-1]))
-        )
-        bounds = np.concatenate((t_change, [len(p_codes)]))
-        starts, ends = bounds[:-1], bounds[1:]
+        starts, ends = _runs(p_codes)
         encoded = encode_postings_batch(
             p_docs, p_tfs, dl[p_docs], starts, ends, pfor=pfor
         )
         # Term strings via Arrow take (no Python string materialization);
         # hash60 per DISTINCT term only (vocabulary-sized) — identical to
         # int(md5[:15], 16) everywhere else in the engine.
-        seg_terms = de.dictionary.take(
-            pa.array(p_codes[starts], type=pa.int32())
-        )
+        seg_terms = terms.take(pa.array(p_codes[starts], type=pa.int32()))
         hashes = np.array(
             [
                 int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
@@ -434,51 +484,27 @@ def _build_buckets(spark, part, out: Path, todo, run_id, pfor=False) -> None:
             ],
             dtype=np.int64,
         )
-        n_terms = len(starts)
-        secs = np.full(n_terms, np.nan)
-        if n_terms:
-            secs[0] = time.monotonic() - t_start
-
-        def tnulls(t):
-            return pa.nulls(n_terms, type=t)
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_terms, bucket, dtype=np.int32)),
-                pa.array(np.ones(n_terms, dtype=np.int32)),
-                tnulls(pa.int64()),
-                tnulls(pa.string()),
-                tnulls(pa.int64()),
-                pa.array(hashes),
-                seg_terms,
-                pa.array((ends - starts).astype(np.int64)),
-                pa.array([e.postings for e in encoded], type=pa.binary()),
-                pa.array([e.blockmeta for e in encoded], type=pa.binary()),
-                # per-term encoded size: lets the commit metrics sum a
-                # cheap int column instead of scanning the binary bytes
-                pa.array(
-                    np.array(
-                        [len(e.postings) + len(e.blockmeta) for e in encoded],
-                        dtype=np.int64,
-                    )
-                ),
-                pa.array(secs, from_pandas=True),  # NaN -> null
-            ],
-            schema=arrow_schema,
+        secs = np.full(len(starts), np.nan)  # NaN -> null
+        secs[0] = time.monotonic() - t_start
+        yield rows(
+            bucket, 1, len(starts),
+            term_hash=hashes,
+            term=seg_terms,
+            df=ends - starts,
+            postings=[e.postings for e in encoded],
+            blockmeta=[e.blockmeta for e in encoded],
+            # per-term encoded size: lets the commit metrics sum a cheap
+            # int column instead of scanning the binary bytes
+            enc_bytes=np.array(
+                [len(e.postings) + len(e.blockmeta) for e in encoded],
+                dtype=np.int64,
+            ),
+            encode_secs=secs,
         )
 
-    rows = part_f.mapInArrow(
-        encode_partition,
-        schema=(
-            "bucket int, kind int, doc_idx long, url string, dl long, "
-            "term_hash long, term string, df long, postings binary, "
-            "blockmeta binary, enc_bytes long, encode_secs double"
-        ),
-    )
-    with _phase("encode+write"):
-        rows.write.partitionBy("bucket").mode("append").parquet(
-            str(out / "index")
-        )
+    part_f.mapInArrow(encode_partition, schema=INDEX_SCHEMA).write.partitionBy(
+        "bucket"
+    ).mode("append").parquet(str(out / "index"))
     _commit_buckets(spark, out, todo_set, run_id)
 
 
@@ -540,209 +566,6 @@ def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
     ).coalesce(1).write.mode("append").parquet(str(out / "metrics.parquet"))
 
 
-def build_segments_from_postings(
-    spark: SparkSession,
-    postings: DataFrame,
-    out_dir: str,
-    n_buckets: int = 16,
-    run_id: str = "compact-0",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    pfor: bool = False,
-) -> dict:
-    """Build a segment index from an already-tokenized postings relation
-    ``(url, term, tf, dl)`` — one row per (url, term), ``dl`` repeated
-    per row. No text pass: this is the generation-compaction path
-    (streaming/ingest.py) where the inputs are decoded from existing
-    segments, and it doubles as a general "index from relation" ctor
-    (SURVEY.md §2 B2). Produces the same unified layout as
-    :func:`build_segments`; global stats (N, avgdl, idf) are computed
-    over the union, which is exactly what compaction exists to restore.
-    ``pfor`` selects the same per-block codec choice as
-    :func:`build_segments` — compaction passes the source index's
-    recorded choice through so a PFor index stays PFor after merge.
-
-    ``url`` must be unique per document across the input (each (url,
-    term) row carries the doc's full tf — true for the union of
-    doc-disjoint generations).
-    """
-    import pyarrow as pa
-
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    t0 = time.monotonic()
-
-    part = postings.select("url", "term", "tf", "dl").repartition(
-        n_buckets, "url"
-    ).sortWithinPartitions("url", "term")
-
-    layout_path = out / "layout.json"
-    layout = {
-        "n_buckets": n_buckets,
-        "mode": "url-hash-postings",
-        "k1": k1,
-        "b": b,
-        "codec": CODEC_VERSION,
-        "pfor": pfor,
-    }
-    if layout_path.exists():
-        prev = json.loads(layout_path.read_text())
-        prev.setdefault("pfor", False)  # records from before the option
-        if prev != layout:
-            raise ValueError(
-                f"index layout mismatch under {out_dir}: {prev} != {layout}"
-            )
-    else:
-        layout_path.write_text(json.dumps(layout))
-
-    arrow_schema_str = (
-        "bucket int, kind int, doc_idx long, url string, dl long, "
-        "term_hash long, term string, df long, postings binary, "
-        "blockmeta binary, enc_bytes long, encode_secs double"
-    )
-
-    def encode_partition(batches):
-        import hashlib
-
-        import pyarrow.compute as pc
-        from pyspark import TaskContext
-
-        t_start = time.monotonic()
-        tbl_chunks = [pa.Table.from_batches([rb]) for rb in batches]
-        if not tbl_chunks:
-            return
-        bucket = TaskContext.get().partitionId()
-        tbl = pa.concat_tables(tbl_chunks).combine_chunks()
-        if len(tbl) == 0:
-            return
-        urls = tbl.column("url").combine_chunks()
-        terms = tbl.column("term").combine_chunks()
-        tf = tbl.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-        dlr = tbl.column("dl").to_numpy(zero_copy_only=False).astype(np.int64)
-        # Rows arrive sorted by (url, term): doc_idx = rank of url.
-        u_enc = pc.dictionary_encode(urls)
-        doc_of = u_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        uniq_urls = u_enc.dictionary  # first-occurrence order == url order
-        n_docs = len(uniq_urls)
-        dl_per_doc = np.zeros(n_docs, dtype=np.int64)
-        dl_per_doc[doc_of] = dlr
-
-        arrow_schema = pa.schema(
-            [
-                ("bucket", pa.int32()), ("kind", pa.int32()),
-                ("doc_idx", pa.int64()), ("url", pa.string()),
-                ("dl", pa.int64()), ("term_hash", pa.int64()),
-                ("term", pa.string()), ("df", pa.int64()),
-                ("postings", pa.binary()), ("blockmeta", pa.binary()),
-                ("enc_bytes", pa.int64()), ("encode_secs", pa.float64()),
-            ]
-        )
-
-        def nulls(n, t):
-            return pa.nulls(n, type=t)
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_docs, bucket, dtype=np.int32)),
-                pa.array(np.zeros(n_docs, dtype=np.int32)),
-                pa.array(np.arange(n_docs, dtype=np.int64)),
-                uniq_urls,
-                pa.array(dl_per_doc),
-                nulls(n_docs, pa.int64()), nulls(n_docs, pa.string()),
-                nulls(n_docs, pa.int64()), nulls(n_docs, pa.binary()),
-                nulls(n_docs, pa.binary()), nulls(n_docs, pa.int64()),
-                nulls(n_docs, pa.float64()),
-            ],
-            schema=arrow_schema,
-        )
-
-        t_enc = pc.dictionary_encode(terms)
-        codes = t_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        key = (codes << 33) | doc_of
-        order = np.argsort(key, kind="stable")
-        p_codes = codes[order]
-        p_docs = doc_of[order]
-        p_tfs = tf[order]
-        t_change = np.flatnonzero(
-            np.concatenate(([True], p_codes[1:] != p_codes[:-1]))
-        )
-        bounds = np.concatenate((t_change, [len(p_codes)]))
-        starts, ends = bounds[:-1], bounds[1:]
-        encoded = encode_postings_batch(
-            p_docs, p_tfs, dl_per_doc[p_docs], starts, ends, pfor=pfor
-        )
-        seg_terms = t_enc.dictionary.take(
-            pa.array(p_codes[starts], type=pa.int32())
-        )
-        hashes = np.array(
-            [
-                int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                for t in seg_terms.to_pylist()
-            ],
-            dtype=np.int64,
-        )
-        n_terms = len(starts)
-        secs = np.full(n_terms, np.nan)
-        if n_terms:
-            secs[0] = time.monotonic() - t_start
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_terms, bucket, dtype=np.int32)),
-                pa.array(np.ones(n_terms, dtype=np.int32)),
-                nulls(n_terms, pa.int64()), nulls(n_terms, pa.string()),
-                nulls(n_terms, pa.int64()),
-                pa.array(hashes),
-                seg_terms,
-                pa.array((ends - starts).astype(np.int64)),
-                pa.array([e.postings for e in encoded], type=pa.binary()),
-                pa.array([e.blockmeta for e in encoded], type=pa.binary()),
-                pa.array(
-                    np.array(
-                        [len(e.postings) + len(e.blockmeta) for e in encoded],
-                        dtype=np.int64,
-                    )
-                ),
-                pa.array(secs, from_pandas=True),
-            ],
-            schema=arrow_schema,
-        )
-
-    committed = _committed_buckets(spark, out)
-    _clean_uncommitted(out, committed)
-    todo = sorted(set(range(n_buckets)) - committed)
-    if todo:
-        part_f = part.filter(F.spark_partition_id().isin(todo))
-        rows = part_f.mapInArrow(encode_partition, schema=arrow_schema_str)
-        rows.write.partitionBy("bucket").mode("append").parquet(
-            str(out / "index")
-        )
-        _commit_buckets(spark, out, set(todo), run_id)
-
-    n_docs = avgdl = None
-    if len(_committed_buckets(spark, out)) == n_buckets:
-        agg = (
-            spark.read.parquet(str(out / "index"))
-            .filter(F.col("kind") == 0)
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-            .collect()[0]
-        )
-        n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-        _write_termstats(spark, out, n_docs)
-        (out / "stats.json").write_text(
-            json.dumps(
-                {"n_docs": n_docs, "avgdl": avgdl, "n_buckets": n_buckets,
-                 "k1": k1, "b": b}
-            )
-        )
-    elapsed = time.monotonic() - t0
-    return {
-        "built_buckets": len(todo),
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "elapsed_secs": elapsed,
-    }
-
-
 def bm25_idf_col(df_col, n_docs: int):
     """``ln(1 + (N - df + 0.5) / (df + 0.5))`` — the build's BM25 idf.
 
@@ -781,12 +604,9 @@ def read_index(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/index")
 
 
-def read_segments(
-    spark: SparkSession, out_dir: str, with_terms: bool = True
-) -> DataFrame:
+def read_segments(spark: SparkSession, out_dir: str) -> DataFrame:
     # term strings live in the segment rows themselves (parquet dictionary
-    # encoding makes the column vocabulary-sized on disk); with_terms is
-    # kept for API compatibility and simply no-ops.
+    # encoding makes the column vocabulary-sized on disk)
     return (
         read_index(spark, out_dir)
         .filter(F.col("kind") == 1)
@@ -795,11 +615,6 @@ def read_segments(
             "encode_secs",
         )
     )
-
-
-def read_lexicon(spark: SparkSession, out_dir: str) -> DataFrame:
-    """(term, term_hash) vocabulary — derived from segments."""
-    return read_segments(spark, out_dir).select("term", "term_hash").distinct()
 
 
 def read_docmeta(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -811,20 +626,21 @@ def read_docmeta(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_postings_relation(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Decode the compressed segments back to ``(url, term, tf, dl)``.
+    """Decode the compressed segments back to
+    ``(url, bucket, doc_idx, term, tf, dl)``.
 
     The inverse of the build: one grouped scan per bucket decodes every
     posting list and resolves doc_idx -> (url, dl) against the bucket's
-    doc rows — no text involved. This is what generation compaction
-    feeds into :func:`build_segments_from_postings`.
+    doc rows — no text involved. ``(bucket, doc_idx)`` keeps documents
+    that share a url apart. This is what generation compaction feeds
+    into :func:`build_segments_from_postings`.
     """
-    import pandas as pd
-
     from .codec import decode_postings
 
     idx = read_index(spark, out_dir).select(
         "bucket", "kind", "doc_idx", "url", "dl", "term", "postings", "blockmeta"
     )
+    out_cols = ["url", "bucket", "doc_idx", "term", "tf", "dl"]
 
     def decode_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         kinds = pdf["kind"].to_numpy()
@@ -832,32 +648,35 @@ def read_postings_relation(spark: SparkSession, out_dir: str) -> DataFrame:
         terms = pdf[kinds == 1]
         n_docs = len(docs)
         if n_docs == 0 or len(terms) == 0:
-            return pd.DataFrame(columns=["url", "term", "tf", "dl"]).astype(
-                {"tf": "int64", "dl": "int64"}
+            return pd.DataFrame(columns=out_cols).astype(
+                {"bucket": "int32", "doc_idx": "int64", "tf": "int64", "dl": "int64"}
             )
         urls = np.empty(n_docs, dtype=object)
         dls = np.zeros(n_docs, dtype=np.int64)
         di = docs["doc_idx"].to_numpy(dtype=np.int64)
         urls[di] = docs["url"].to_numpy()
         dls[di] = docs["dl"].to_numpy(dtype=np.int64)
-        url_parts, term_parts, tf_parts, dl_parts = [], [], [], []
+        id_parts, term_parts, tf_parts = [], [], []
         for t, p, m in zip(terms["term"], terms["postings"], terms["blockmeta"]):
             ids, tfs = decode_postings(bytes(p), bytes(m))
-            url_parts.append(urls[ids])
+            id_parts.append(ids.astype(np.int64))
             term_parts.append(np.full(len(ids), t, dtype=object))
             tf_parts.append(tfs.astype(np.int64))
-            dl_parts.append(dls[ids])
+        ids = np.concatenate(id_parts)
         return pd.DataFrame(
             {
-                "url": np.concatenate(url_parts),
+                "url": urls[ids],
+                "bucket": np.full(len(ids), pdf["bucket"].iloc[0], dtype=np.int32),
+                "doc_idx": ids,
                 "term": np.concatenate(term_parts),
                 "tf": np.concatenate(tf_parts),
-                "dl": np.concatenate(dl_parts),
+                "dl": dls[ids],
             }
         )
 
     return idx.groupBy("bucket").applyInPandas(
-        decode_bucket, schema="url string, term string, tf long, dl long"
+        decode_bucket,
+        schema="url string, bucket int, doc_idx long, term string, tf long, dl long",
     )
 
 

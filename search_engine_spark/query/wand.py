@@ -385,45 +385,6 @@ _TQ_DDL = (
     "blockmeta binary, query_id string, qtf long, idf double"
 )
 
-# Batches at or below this size that are already driver-local
-# (LocalRelation) take the zero-job fast path; larger or distributed
-# batches always go through the plan.
-LOCAL_QUERY_FAST_MAX = 256
-
-
-def _local_query_rows(queries: DataFrame) -> list[tuple[str, str]] | None:
-    """[(query_id, query_string)] when the batch is a SMALL driver-local
-    relation (``createDataFrame`` literals — the CLI / REPL /
-    single-query-latency shape), else None.
-
-    The data of a LocalRelation already lives on the driver, so reading
-    it back is not a scalability regression — while a distributed plan
-    (range, scan, transform) is never collected: a 10^5-query batch
-    keeps tokenizing executor-side in the plan
-    (tests/test_segments_wand.py::test_wand_large_query_batch_no_driver_tokenization).
-
-    Caveat: with ``spark.sql.execution.arrow.pyspark.enabled=true`` a
-    ``createDataFrame`` batch arrives as a parallelized LogicalRDD, not
-    a LocalRelation, and is NOT sniffable as driver-local — callers that
-    already hold the batch in Python (TCP front-end, REPL, bench) should
-    pass the list itself to ``wand_topk`` instead.
-    """
-    try:
-        lp = queries._jdf.queryExecution().optimizedPlan()
-        if lp.getClass().getSimpleName() != "LocalRelation":
-            return None
-        if lp.data().size() > LOCAL_QUERY_FAST_MAX:
-            return None
-    except Exception:
-        return None
-    # by-name access: both paths share the (query_id, query_string)
-    # column contract regardless of the caller's column order
-    return [
-        (r.query_id, r.query_string)
-        for r in queries.select("query_id", "query_string").collect()
-    ]
-
-
 CANDIDATE_SCHEMA = StructType(
     [
         StructField("query_id", StringType(), False),
@@ -450,12 +411,10 @@ def wand_topk(
     avgdl-independent, so block-max pruning stays exact.
 
     ``queries`` is either a DataFrame (query_id, query_string) — the
-    batch/pipeline shape — or a plain ``[(query_id, query_string)]``
-    list for serving front-ends that already hold the batch on the
-    driver (TCP server, REPL, latency bench): the list form always takes
-    the zero-pre-job fast path, which a ``createDataFrame`` batch built
-    from a Python list cannot be sniffed into (it arrives as a
-    LogicalRDD over pickled rows, not a LocalRelation).
+    batch/pipeline shape, which takes the plan path — or a plain
+    ``[(query_id, query_string)]`` list for serving front-ends that
+    already hold the batch on the driver (TCP server, REPL, latency
+    bench), which takes the zero-pre-job fast path.
 
     ``k=None`` returns the FULL ranked list per query (every matched
     doc, ranked) — parity with the reference poll endpoint, which
@@ -487,11 +446,7 @@ def wand_topk(
     gkeys = state["gkeys"]
 
     if isinstance(queries, list):
-        qrows = [(str(qid), str(qs)) for qid, qs in queries]
-    else:
-        qrows = _local_query_rows(queries)
-    if qrows is not None:
-        # Fast path (small driver-local batch): tokenize with the exact
+        # Fast path (driver-held batch): tokenize with the exact
         # Python parity kernel and resolve (qtf, idf, term_hash) from
         # the cached lexicon — ZERO Spark jobs before the main serving
         # job; the fanned-out kind=2 rows become one Arrow-built
@@ -500,8 +455,8 @@ def wand_topk(
 
         qk_rows: list[tuple] = []
         hashes_set: set[int] = set()
-        for qid, qs in qrows:
-            toks = query_tokens_py(qs)
+        for qid, qs in queries:
+            qid, toks = str(qid), query_tokens_py(str(qs))
             for t in sorted(set(toks)):
                 ent = state["lexicon"].get(t)
                 if ent is None:
@@ -520,7 +475,7 @@ def wand_topk(
             pd.DataFrame(qk_rows, columns=_TQ_COLS), schema=_TQ_DDL
         )
     else:
-        # Plan path (large / distributed batch): pre-job — ONE narrow
+        # Plan path (DataFrame batch): pre-job — ONE narrow
         # stage (explode + md5, no join/shuffle/broadcast) collects the
         # token hashes; dedupe and intersect with the cached vocabulary
         # set driver-side. All-OOV batches return here without

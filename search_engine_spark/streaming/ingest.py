@@ -14,8 +14,8 @@ construction (a page arrives in exactly one micro-batch), so per-bucket
 top-k within each generation + the global top-k merge stays exact —
 the same scatter-gather argument as multi-bucket serving. Generation
 compaction (:func:`compact_generations`) merges many small generations
-into one WITHOUT re-reading any text: segments decode back to the
-(url, term, tf, dl) relation and re-encode with union-global stats.
+into one WITHOUT re-reading any text: segments decode back to
+per-document postings and re-encode with union-global stats.
 
 ``foreachBatch`` is the right tool (vs a custom sink): the index build
 is a multi-job batch dataflow (docmeta, lexicon, encode, commit), and
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -272,10 +273,16 @@ def compact_generations(
     the per-generation-stats caveat in :func:`query_generations`
     documents.
 
-    No text pass: each generation's segments are decoded back to the
-    ``(url, term, tf, dl)`` relation (``read_postings_relation``) and
-    re-encoded by ``build_segments_from_postings`` — compaction moves
+    No text pass: each generation's segments are decoded back to
+    ``(url, bucket, doc_idx, term, tf, dl)`` rows
+    (``read_postings_relation``), tagged with the generation's ordinal
+    and re-encoded by the one segment builder
+    (``build_segments_from_postings``) — compaction moves
     compressed-postings-sized data, exactly like a Lucene segment merge.
+    Documents are keyed by (url, generation, bucket, doc_idx), so a url
+    captured by two generations stays two documents, as in a batch build
+    over the same pages and in :func:`query_generations` before the
+    compaction.
     ``pfor=None`` inherits the newest source generation's recorded codec
     choice (layout.json), so compacting a PFor index stays PFor.
 
@@ -307,9 +314,14 @@ def compact_generations(
     if pfor is None:
         layout = json.loads((Path(gens[-1]) / "layout.json").read_text())
         pfor = bool(layout.get("pfor", False))
-    union = read_postings_relation(spark, gens[0])
-    for g in gens[1:]:
-        union = union.unionByName(read_postings_relation(spark, g))
+    # the source ordinal keeps a re-crawled url's captures apart
+    union = reduce(
+        DataFrame.unionByName,
+        [
+            read_postings_relation(spark, g).withColumn("gen", F.lit(i))
+            for i, g in enumerate(gens)
+        ],
+    )
     keys = [_gen_key(Path(g).name) for g in gens]
     max_id = max(k[0] for k in keys)
     epoch = 1 + max(k[1] for k in keys)

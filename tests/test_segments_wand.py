@@ -54,7 +54,7 @@ def test_segment_roundtrip_matches_relation(spark, index_dir):
     rel = {
         (r.term, r.url): r.tf for r in build_postings(pages).collect()
     }
-    seg = read_segments(spark, index_dir, with_terms=True).collect()
+    seg = read_segments(spark, index_dir).collect()
     dm = {
         (r.bucket, r.doc_idx): r.url
         for r in read_docmeta(spark, index_dir).collect()
@@ -157,7 +157,7 @@ def test_resume_produces_identical_index(spark, tmp_path):
     assert s2["built_buckets"] == 2
 
     def content(d):
-        seg = read_segments(spark, str(d), with_terms=True).collect()
+        seg = read_segments(spark, str(d)).collect()
         return sorted(
             (r.bucket, r.term, r.df, bytes(r.postings), bytes(r.blockmeta))
             for r in seg
