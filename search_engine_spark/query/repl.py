@@ -7,9 +7,9 @@ per line from stdin, skips empty lines, and prints the formatted top-10
 ``src/lib.rs:229-268``). This module reproduces that loop over a
 prebuilt segment index: each line becomes a 1-row queries DataFrame into
 :func:`~search_engine_spark.query.wand.wand_topk`. Latency relies on the
-per-index serving cache (wand.py) — doc rows and termstats are persisted
-in the block manager after the first query, so the per-line cost is one
-pruned term-row scan plus the kernel.
+per-index serving cache (wand.py) — the lexicon is held on the driver
+and the doc rows are persisted in the block manager by the first query,
+so the per-line cost is one pruned term-row scan plus the kernel.
 
 The loop is a driver-side UI shell around the same batch plan the
 servers use; it takes file handles instead of touching ``sys`` directly

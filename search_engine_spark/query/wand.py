@@ -59,17 +59,20 @@ three relations — term rows (ONE parquet scan filtered to the query
 vocabulary by an int64 ``term_hash`` predicate, parquet-stats
 friendly), doc rows (doc_idx, dl) from the per-index serving cache
 (persisted in P hash partitions of the group key -> block manager, no
-per-call filesystem read, no per-call Exchange), and the plan-tokenized
-(query_id, term, qtf, idf) relation fanned out to every bucket's group
-key as kind=2 rows. Everything flows through Spark's data source /
-block manager (locality, pushdown); there is no executor-side
-filesystem side-channel. The per-query-batch cost of shipping each
-bucket's dl array is amortized over the whole query batch — batch
-serving scores thousands of queries against one shipment. Inside the
-kernel, postings are matched by the full term STRING (carried in the
-segment rows), so a 60-bit hash collision between a query term and
-another term in the bucket cannot mis-score; the hash is only a
-pushdown filter.
+per-call filesystem read, no per-call Exchange), and the
+(query_id, term, qtf, idf) query relation fanned out to every bucket's
+group key as kind=2 rows. The idf comes from the driver-side lexicon,
+read from the termstats parquet with pyarrow, so serving state for a
+newly committed index costs no Spark job: the first query fills the
+doc cache. Segment data flows through Spark's data
+source / block manager (locality, pushdown); there is no
+executor-side filesystem side-channel. The per-query-batch cost of
+shipping each bucket's dl array is amortized over the whole query
+batch — batch serving scores thousands of queries against one
+shipment. Inside the kernel, postings are matched by the full term
+STRING (carried in the segment rows), so a 60-bit hash collision
+between a query term and another term in the bucket cannot
+mis-score; the hash is only a pushdown filter.
 """
 
 from __future__ import annotations
@@ -80,6 +83,7 @@ from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -93,7 +97,7 @@ from pyspark.sql.types import (
 from ..functions.tokenize import query_tokens_col
 from .scoring import TOP_K
 from ..index.codec import BlockMeta, bm25_norm, decode_blocks, decode_postings
-from ..index.segments import load_stats, read_index, read_termstats
+from ..index.segments import INDEX_SCHEMA, load_stats
 
 
 def maxscore_topk(
@@ -173,21 +177,35 @@ def maxscore_topk(
 
 # --- per-index serving state (cached across wand_topk calls) --------------
 #
-# Doc rows (gkey, doc_idx, dl, url) and termstats (term, term_hash, idf)
-# are immutable once an index is committed (stats.json is written last),
-# so serving caches them as persisted DataFrames: single-query latency no
-# longer re-reads the kind=0 half of the index or the termstats parquet
-# per call — both come from the block manager (InMemoryTableScan,
-# plan-asserted in tests/test_segments_wand.py). The cache key folds in
-# stats.json's (mtime, size) fingerprint so a rebuilt index at the same
-# path is never reused stale, and entries are evicted oldest-first at
-# _SERVE_CACHE_MAX to keep long test sessions bounded. A caller that
-# unions several indexes' lazy results (query_generations) looks them up
-# inside ``serving_states_pinned()``, so a later lookup in the same call
-# never evicts a cache the union still reads.
+# Serving state is built from the committed files alone and runs NO
+# Spark job, so a generation can be served as soon as it commits:
+#
+# - doc side, keyed by the index fingerprint: the doc rows (gkey,
+#   doc_idx, dl, url) persisted in P partitions of the group key, the
+#   group keys, and the term-row base plan. Both relations come from
+#   ONE parquet relation read with the declared ``INDEX_SCHEMA`` (no
+#   schema-inference job). The doc cache has no eager count(): the
+#   first query's scan fills it, and later queries read it from the
+#   block manager (InMemoryTableScan, plan-asserted in
+#   tests/test_serving.py).
+# - stats side, keyed by (index, stats) fingerprint: N/avgdl (overlaid
+#   from a global-stats sidecar if one is given), the lexicon read from
+#   the termstats parquet with pyarrow on the driver, and the
+#   kernel-config broadcasts.
+#
+# A new global-stats sidecar therefore reuses every generation's doc
+# cache and only re-reads the (vocabulary-sized) lexicon. A fingerprint
+# folds in stats.json's (mtime, size), so a rebuilt index or sidecar at
+# the same path is never reused stale; doc entries are evicted
+# oldest-first at _DOC_CACHE_MAX to keep long sessions bounded, and
+# their stats entries go with them. A caller that unions several
+# indexes' lazy results (query_generations) looks them up inside
+# ``serving_states_pinned()``, so a later lookup in the same call never
+# evicts a cache the union still reads.
 
-_SERVE_CACHE: dict[tuple, dict] = {}
-_SERVE_CACHE_MAX = 8
+_DOC_CACHE: dict[tuple, dict] = {}
+_STATS_CACHE: dict[tuple, dict] = {}
+_DOC_CACHE_MAX = 8
 _PIN_SCOPES: list[set] = []
 
 
@@ -244,32 +262,97 @@ def _index_fingerprint(index_dir: str) -> tuple:
 def _serving_state(
     spark: SparkSession, index_dir: str, stats_dir: str | None = None
 ) -> dict:
-    key = (
-        _index_fingerprint(index_dir),
-        _index_fingerprint(stats_dir) if stats_dir else None,
-        spark.sparkContext.applicationId,
-    )
+    """The doc side of ``index_dir`` merged with its stats side under
+    ``stats_dir`` (or its own stats). Runs no Spark job."""
+    doc_key = (_index_fingerprint(index_dir), spark.sparkContext.applicationId)
     if _PIN_SCOPES:
-        _PIN_SCOPES[-1].add(key)
-    state = _SERVE_CACHE.get(key)
-    if state is not None:
-        return state
+        _PIN_SCOPES[-1].add(doc_key)
+    docs = _DOC_CACHE.get(doc_key) or _doc_side(spark, index_dir, doc_key)
+    stats_key = (doc_key, _index_fingerprint(stats_dir) if stats_dir else None)
+    stats = _STATS_CACHE.get(stats_key) or _stats_side(
+        index_dir, stats_dir, docs["stats"], stats_key
+    )
+    return {**docs, **stats}
+
+
+def _doc_side(spark: SparkSession, index_dir: str, key: tuple) -> dict:
     # a rebuilt index at the same path gets a new fingerprint: drop any
-    # stale entry for the same resolved (index, stats) path pair first
-    for k in [
-        k
-        for k in _SERVE_CACHE
-        if k[0][0] == key[0][0]
-        and (k[1] is None) == (key[1] is None)
-        and (k[1] is None or k[1][0] == key[1][0])
-    ]:
+    # stale entry for the same resolved path first
+    for k in [k for k in _DOC_CACHE if k[0][0] == key[0][0]]:
         _evict(k)
     pinned = set().union(*_PIN_SCOPES)
-    victims = [k for k in _SERVE_CACHE if k not in pinned]
-    while victims and len(_SERVE_CACHE) >= _SERVE_CACHE_MAX:
+    victims = [k for k in _DOC_CACHE if k not in pinned]
+    while victims and len(_DOC_CACHE) >= _DOC_CACHE_MAX:
         _evict(victims.pop(0))
     stats = load_stats(index_dir)
     n_buckets = int(stats["n_buckets"])
+    # doc rows are pre-shuffled by group key ONCE per index and cached
+    # in P partitions of it: the serving cogroup's required
+    # distribution is satisfied by the cache's hashpartitioning(gkey,
+    # P), so a query batch never re-shuffles the (large, static) doc
+    # side; only the tiny term+query relation moves per call, into the
+    # same P partitions
+    p = min(n_buckets, spark.sparkContext.defaultParallelism)
+    gkeys = _group_keys(n_buckets, p)
+    gkey = F.element_at(
+        F.array(*[F.lit(g) for g in gkeys]), F.col("bucket") + 1
+    ).alias("gkey")
+    index = spark.read.schema(INDEX_SCHEMA).parquet(f"{index_dir}/index")
+    docs = (
+        index.filter(F.col("kind") == 0)
+        .select(gkey, "doc_idx", "dl", "url")
+        .repartition(p, "gkey")
+    )
+    # The cached plan is planned without AQE. An adaptive cached plan
+    # reports its partitioning only once it has run, so the first query
+    # on a still-empty cache would plan an Exchange over the cache scan;
+    # a static plan reports hashpartitioning(gkey, P) up front, and the
+    # first query fills the cache as its first query stage. The cached
+    # plan is one REPARTITION_BY_NUM Exchange, which AQE leaves as is.
+    # The switch is session-wide for the moment of the persist call: a
+    # query another thread plans meanwhile runs without AQE, correctly.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    # pre-built term-row base plan (kind=1, projected to the kernel's
+    # term+query scan schema + term_hash for the per-call pushdown
+    # filter): building it once per index keeps per-query plan
+    # construction free of the spark.read.parquet file-listing and the
+    # projection py4j round-trips — at 10^5 segment files the listing
+    # alone would otherwise dominate single-query latency
+    term_rows_base = index.filter(F.col("kind") == 1).select(
+        gkey, "kind", "term", "postings", "blockmeta",
+        _null("string").alias("query_id"),
+        _null("long").alias("qtf"),
+        _null("double").alias("idf"),
+        "term_hash",
+    )
+    state = {
+        "stats": stats,
+        "docs": docs,
+        "gkeys": gkeys,
+        "term_rows_base": term_rows_base,
+    }
+    _DOC_CACHE[key] = state
+    return state
+
+
+def _stats_side(
+    index_dir: str, stats_dir: str | None, own_stats: dict, key: tuple
+) -> dict:
+    # one stats entry per index for its own stats and one for an
+    # overlay: a newer sidecar (or a rewritten one) replaces the older
+    doc_key, stats_fp = key
+    for k in [
+        k
+        for k in _STATS_CACHE
+        if k[0] == doc_key and (k[1] is None) == (stats_fp is None)
+    ]:
+        _unpersist_bcs(_STATS_CACHE.pop(k))
+    stats = own_stats
     if stats_dir is not None:
         # Global-stats overlay (streaming generations between
         # compactions): corpus-wide N/avgdl + the merged termstats
@@ -283,90 +366,49 @@ def _serving_state(
             "n_docs": overlay["n_docs"],
             "avgdl": overlay["avgdl"],
         }
-    # doc rows are pre-shuffled by group key ONCE per index and cached
-    # in P partitions of it: the serving cogroup's required
-    # distribution is satisfied by the cache's hashpartitioning(gkey,
-    # P), so a query batch never re-shuffles the (large, static) doc
-    # side — only the tiny term+query relation moves per call, into
-    # the same P partitions (plan-asserted in
-    # tests/test_segments_wand.py::test_wand_serving_plan_cached_docs_and_pushdown)
-    p = min(n_buckets, spark.sparkContext.defaultParallelism)
-    gkeys = _group_keys(n_buckets, p)
-    gkey = F.element_at(
-        F.array(*[F.lit(g) for g in gkeys]), F.col("bucket") + 1
-    ).alias("gkey")
-    docs = (
-        read_index(spark, index_dir)
-        .filter(F.col("kind") == 0)
-        .select(gkey, "doc_idx", "dl", "url")
-        .repartition(p, "gkey")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ts = (
-        read_termstats(spark, stats_dir or index_dir)
-        .select("term", "term_hash", "idf")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    docs.count()
-    # Driver-side lexicon {term: (term_hash, idf)}, collected ONCE per
-    # index (amortized over all queries): (a) early-exits all-OOV
-    # queries without launching the main job, (b) shrinks the isin
-    # pushdown literals to terms actually present, and (c) lets small
-    # local query batches resolve (term, qtf, idf) with zero Spark jobs
-    # (the single-query latency fast path). This is the classic search
+    # Driver-side lexicon {term: (term_hash, idf)}, read with pyarrow
+    # ONCE per (index, stats) from the same local directory as
+    # stats.json: (a) early-exits all-OOV queries without launching
+    # the main job, (b) shrinks the isin pushdown literals to terms
+    # actually present, (c) lets driver-held query batches resolve
+    # (term, qtf, idf) with zero Spark jobs, and (d) gives a DataFrame
+    # batch the idf rows of its terms. This is the classic search
     # lexicon sidecar; at web scale (10^8 terms) it pages from disk or
     # degrades to a Bloom filter over term_hash with the idf join left
     # in the plan — identical serving semantics.
-    lexicon = {
-        r.term: (r.term_hash, r.idf)
-        for r in ts.select("term", "term_hash", "idf").collect()
-    }
-    vocab = frozenset(h for h, _ in lexicon.values())
-    # pre-built term-row base plan (kind=1, projected to the kernel's
-    # term+query scan schema + term_hash for the per-call pushdown
-    # filter): building it once per index keeps per-query plan
-    # construction free of the spark.read.parquet file-listing and the
-    # projection py4j round-trips — at 10^5 segment files the listing
-    # alone would otherwise dominate single-query latency
-    term_rows_base = (
-        read_index(spark, index_dir)
-        .filter(F.col("kind") == 1)
-        .select(
-            gkey, "kind", "term", "postings", "blockmeta",
-            _null("string").alias("query_id"),
-            _null("long").alias("qtf"),
-            _null("double").alias("idf"),
-            "term_hash",
-        )
+    ts = pq.read_table(
+        f"{stats_dir or index_dir}/termstats", columns=["term", "term_hash", "idf"]
     )
+    hashes = ts.column("term_hash").to_pylist()
+    idfs = ts.column("idf").to_pylist()
     state = {
         "stats": stats,
-        "docs": docs,
-        "gkeys": gkeys,
-        "term_rows_base": term_rows_base,
-        "ts": ts,
-        "vocab": vocab,
-        "lexicon": lexicon,
-        # k -> broadcast of the kernel config; immutable per index
+        "lexicon": dict(zip(ts.column("term").to_pylist(), zip(hashes, idfs))),
+        "vocab": frozenset(hashes),
+        # k -> broadcast of the kernel config
         "bc": {},
     }
-    _SERVE_CACHE[key] = state
+    _STATS_CACHE[key] = state
     return state
 
 
-def _evict(key: tuple) -> None:
-    state = _SERVE_CACHE.pop(key, None)
+def _evict(doc_key: tuple) -> None:
+    state = _DOC_CACHE.pop(doc_key, None)
     if state is not None:
-        for df in (state["docs"], state["ts"]):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        for bc in state.get("bc", {}).values():
-            try:
-                bc.unpersist()
-            except Exception:
-                pass
+        try:
+            state["docs"].unpersist()
+        except Exception:
+            pass
+    for k in [k for k in _STATS_CACHE if k[0] == doc_key]:
+        _unpersist_bcs(_STATS_CACHE.pop(k))
+
+
+def _unpersist_bcs(stats_state: dict) -> None:
+    for bc in stats_state["bc"].values():
+        try:
+            bc.unpersist()
+        except Exception:
+            pass
 
 
 def _null(t: str):
@@ -423,23 +465,62 @@ def wand_topk(
 
     Plan: queries are tokenized IN the plan (``query_tokens_col`` —
     no driver-side collect of the query batch, so a 10^5-query batch
-    tokenizes across executors) and joined to the cached termstats for
-    (qtf, idf, term_hash); the only driver round-trip is the distinct
-    term_hash list, which becomes the int64 pushdown predicate on the
-    term-row parquet scan (the query *vocabulary*, bounded by the
-    lexicon, not the batch size). Doc rows (dl) come from the per-index
-    serving cache (block manager, not the filesystem). The (query_id,
-    term, qtf, idf) relation fans out to every bucket's group key as
-    kind=2 rows of the kernel's grouped input -> applyInPandas per
-    bucket, one wave of P tasks (local top-k, urls resolved in-kernel
-    from the doc rows already in the group) -> window for the global
-    top-k merge. No post-kernel join:
+    tokenizes across executors) and joined to a broadcast (term, idf)
+    relation of the batch's terms only, built on the driver from the
+    lexicon; the only driver round-trip is the distinct token-hash
+    list (:func:`_batch_token_hashes`), which becomes the int64
+    pushdown predicate on the term-row parquet scan (the query
+    *vocabulary*, bounded by the lexicon, not the batch size). Doc rows
+    (dl) come from the per-index serving cache (block manager, not the
+    filesystem). The (query_id, term, qtf, idf) relation fans out to
+    every bucket's group key as kind=2 rows of the kernel's grouped
+    input -> applyInPandas per bucket, one wave of P tasks (local
+    top-k, urls resolved in-kernel from the doc rows already in the
+    group) -> window for the global top-k merge. No post-kernel join:
     the candidate relation is already (query_id, url, score).
 
     The term_hash is ONLY a pushdown filter — the kernel matches
     postings by the full term string, so a 60-bit collision between a
     query term and another term in the bucket cannot mis-score.
     """
+    return _wand_topk(spark, index_dir, queries, k, stats_dir, None)
+
+
+def _batch_token_hashes(queries: DataFrame) -> set[int]:
+    """The distinct 60-bit hashes of a query batch's tokens (explode +
+    md5, no join or broadcast), collected to the driver.
+
+    .distinct() before the collect: Catalyst plans a map-side partial
+    aggregate, so the driver receives only the batch's distinct
+    VOCABULARY (bounded by the lexicon), not one row per token
+    occurrence — a 10^5-query batch would otherwise funnel ~10^6 rows
+    through the driver. Callers that serve one batch over several
+    indexes (``query_generations``) collect it once and intersect it
+    with each index's vocabulary on the driver.
+    """
+    from ..pipeline.common import hash60_col
+
+    rows = (
+        queries.select(
+            F.explode(query_tokens_col(F.col("query_string"))).alias("t")
+        )
+        .select(hash60_col(F.col("t")).alias("h"))
+        .distinct()
+        .collect()
+    )
+    return {r.h for r in rows}
+
+
+def _wand_topk(
+    spark: SparkSession,
+    index_dir: str,
+    queries: DataFrame | list[tuple[str, str]],
+    k: int | None,
+    stats_dir: str | None,
+    batch_hashes: set[int] | None,
+) -> DataFrame:
+    """:func:`wand_topk`; ``batch_hashes`` is the DataFrame batch's
+    :func:`_batch_token_hashes` if the caller already holds it."""
     state = _serving_state(spark, index_dir, stats_dir)
     stats = state["stats"]
     avgdl, k1, b = stats["avgdl"], stats["k1"], stats["b"]
@@ -448,8 +529,8 @@ def wand_topk(
     if isinstance(queries, list):
         # Fast path (driver-held batch): tokenize with the exact
         # Python parity kernel and resolve (qtf, idf, term_hash) from
-        # the cached lexicon — ZERO Spark jobs before the main serving
-        # job; the fanned-out kind=2 rows become one Arrow-built
+        # the lexicon — ZERO Spark jobs before the main serving job;
+        # the fanned-out kind=2 rows become one Arrow-built
         # LocalRelation, so no Python task runs before the kernel.
         from ..functions.tokenize import query_tokens_py
 
@@ -475,37 +556,21 @@ def wand_topk(
             pd.DataFrame(qk_rows, columns=_TQ_COLS), schema=_TQ_DDL
         )
     else:
-        # Plan path (DataFrame batch): pre-job — ONE narrow
-        # stage (explode + md5, no join/shuffle/broadcast) collects the
-        # token hashes; dedupe and intersect with the cached vocabulary
-        # set driver-side. All-OOV batches return here without
-        # launching the main job.
-        from ..pipeline.common import hash60_col
-
-        # .distinct() before the collect: Catalyst plans a map-side
-        # partial aggregate, so the driver receives only the batch's
-        # distinct VOCABULARY (bounded by the lexicon), not one row per
-        # token occurrence — a 10^5-query batch would otherwise funnel
-        # ~10^6 rows through the driver.
-        tok_hashes = (
-            queries.select(
-                F.explode(query_tokens_col(F.col("query_string"))).alias("t")
-            )
-            .select(hash60_col(F.col("t")).alias("h"))
-            .distinct()
-            .collect()
-        )
-        hashes = sorted({r.h for r in tok_hashes} & state["vocab"])
+        # Plan path (DataFrame batch): the token-hash pre-job, then
+        # intersect with the lexicon's vocabulary driver-side. All-OOV
+        # batches return here without launching the main job.
+        if batch_hashes is None:
+            batch_hashes = _batch_token_hashes(queries)
+        hashes = sorted(batch_hashes & state["vocab"])
         if not hashes:
             return _empty_result(spark)
 
         # (query_id, term, qtf, idf): qtf computed with array
         # expressions (distinct terms x in-array count) instead of a
         # groupBy — no Exchange; the per-term re-scan of the token
-        # array is O(L^2) on a ~10-token query string, i.e. free. idf
-        # comes from the cached termstats relation; the join stays in
-        # the plan (executor-side), so a 10^5-query batch never funnels
-        # through the driver.
+        # array is O(L^2) on a ~10-token query string, i.e. free. The
+        # join to idf stays in the plan (executor-side), so a
+        # 10^5-query batch never funnels through the driver.
         toks = query_tokens_col(F.col("query_string"))
         qtok = queries.select(
             "query_id",
@@ -525,10 +590,18 @@ def wand_topk(
             F.col("tq.term").alias("term"),
             F.col("tq.qtf").alias("qtf"),
         )
-        # the cached termstats relation is pre-filtered to the (tiny)
-        # query vocabulary by the int64 hash list before the join, so
-        # the broadcast build ships a handful of rows, not the lexicon
-        ts_small = state["ts"].filter(F.col("term_hash").isin(hashes))
+        # idf of the batch's terms only (a handful of rows, not the
+        # lexicon), as an Arrow-built LocalRelation: no Spark job. Every
+        # term with a batch hash is kept, so a 60-bit collision drops
+        # no term; the join on the term string then picks the right one.
+        wanted = set(hashes)
+        ts_small = spark.createDataFrame(
+            pd.DataFrame(
+                [(t, w) for t, (h, w) in state["lexicon"].items() if h in wanted],
+                columns=["term", "idf"],
+            ),
+            schema="term string, idf double",
+        )
         qrel = qtok.join(F.broadcast(ts_small), "term").select(
             "query_id", "term", "qtf", "idf"
         )

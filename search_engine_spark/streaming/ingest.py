@@ -18,7 +18,7 @@ into one WITHOUT re-reading any text: segments decode back to
 per-document postings and re-encode with union-global stats.
 
 ``foreachBatch`` is the right tool (vs a custom sink): the index build
-is a multi-job batch dataflow (docmeta, lexicon, encode, commit), and
+is a multi-job batch dataflow (encode, commit, stats/termstats), and
 foreachBatch gives exactly-once per-batch semantics via the streaming
 checkpoint + the builder's idempotent lineage commits.
 """
@@ -439,7 +439,7 @@ def query_generations(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..query.wand import serving_states_pinned, wand_topk
+    from ..query.wand import _batch_token_hashes, _wand_topk, serving_states_pinned
 
     gens = list_generations(out_dir)
     if not gens:
@@ -447,17 +447,21 @@ def query_generations(
     sidecar, covers = (None, set())
     if global_stats:
         sidecar, covers = latest_global_stats(out_dir)
+    # the batch's token hashes are collected once, not once per
+    # generation; each generation intersects them with its own lexicon
+    hashes = _batch_token_hashes(queries) if isinstance(queries, DataFrame) else None
     # pinned: with more generations than the serving cache holds, a
     # later generation's lookup must not evict the doc cache an earlier
     # part of this (lazy) union still reads
     with serving_states_pinned():
         parts = [
-            wand_topk(
+            _wand_topk(
                 spark,
                 g,
                 queries,
-                k=k,
-                stats_dir=sidecar if Path(g).name in covers else None,
+                k,
+                sidecar if Path(g).name in covers else None,
+                hashes,
             )
             for g in gens
         ]

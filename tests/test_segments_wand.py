@@ -227,61 +227,9 @@ def test_pfor_build_same_results_smaller_index(spark, tmp_path, index_dir):
     assert seg_bytes(d) < seg_bytes(index_dir)
 
 
-def test_wand_serving_plan_cached_docs_and_pushdown(spark, index_dir):
-    """Plan-quality guards for serving (100 TB case):
-
-    - exactly ONE parquet file scan in the whole serving plan — the
-      term rows. Doc rows, docmeta, and termstats come from the
-      per-index cache (InMemoryTableScan), so single-query latency
-      never re-reads them from the filesystem.
-    - the term_hash predicate reaches the parquet reader
-      (PushedFilters) and the scan's ReadSchema excludes url /
-      encode_secs (column pruning).
-    """
-    queries = corpus.reference_queries_df(spark)
-    out = wand_topk(spark, index_dir, queries)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # every InMemoryRelation node prints its (non-executed) originating
-    # FileScan child; an already-materialized cached AQE plan
-    # additionally prints an "== Initial Plan ==" duplicate of that
-    # child. Drop the duplicate sections (by indentation), then:
-    # live scans = total FileScans minus the InMemoryRelation children.
-    lines, skip_past = [], None
-    for ln in plan.splitlines():
-        indent = len(ln) - len(ln.lstrip(" :+-"))
-        if skip_past is not None:
-            if indent >= skip_past:
-                continue
-            skip_past = None
-        if "== Initial Plan ==" in ln:
-            skip_past = indent
-            continue
-        lines.append(ln)
-    plan = "\n".join(lines)
-    n_live_scans = plan.count("FileScan") - plan.count("InMemoryRelation")
-    assert n_live_scans == 1, plan
-    assert "InMemoryTableScan" in plan, plan
-    # the term-row scan (the one live FileScan, identified by its
-    # term_hash column) must push the term_hash predicate down to
-    # parquet and exclude url/encode_secs via column pruning; the
-    # docs-cache node legitimately carries url, so scope the checks
-    # to that single FileScan line.
-    term_scan_lines = [
-        ln
-        for ln in plan.splitlines()
-        if "FileScan parquet" in ln and "term_hash" in ln
-    ]
-    assert term_scan_lines, plan
-    for ln in term_scan_lines:
-        assert "PushedFilters" in ln, ln
-        assert "term_hash" in ln.split("PushedFilters")[1], ln
-        assert "url" not in ln, ln
-        assert "encode_secs" not in ln, ln
-
-
 def test_wand_large_query_batch_no_driver_tokenization(spark, index_dir):
     """A 10^4-row query batch is tokenized in the plan (executor-side
-    query_tokens_col + broadcast join to cached termstats) — wand_topk
+    query_tokens_col + broadcast join to the batch's idf rows) — wand_topk
     never collects the queries DataFrame. Repeated instances of the
     same base query must return identical rankings."""
     base = corpus.REFERENCE_QUERIES

@@ -4,9 +4,14 @@ buckets), so they run without the reference corpus:
 - rank identity of ``wand_topk`` against the brute-force BM25 oracle
   (list-form single query, OOV query, DataFrame batch, ``k=None``)
 - one Python task wave per single query, no Spark job for an OOV query
+- serving state for a fresh index runs no Spark job; the first query's
+  plan reads the (still empty) doc cache with no Exchange on its side
+  and pushes the term_hash filter into the one live parquet scan
 - the serving doc cache spreads buckets evenly over its partitions
 - ``query_generations`` over more generations than the serving cache
-  holds keeps every generation's doc cache persisted
+  holds keeps every generation's doc cache persisted, collects a
+  batch's token hashes once, and keeps each generation's doc cache
+  across a new global-stats sidecar
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ from pathlib import Path
 
 import pandas as pd
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from search_engine_spark import corpus
@@ -33,7 +39,10 @@ from search_engine_spark.index.segments import (
 from search_engine_spark.query import wand
 from search_engine_spark.query.scoring import bm25_topk
 from search_engine_spark.query.wand import wand_topk
-from search_engine_spark.streaming.ingest import query_generations
+from search_engine_spark.streaming.ingest import (
+    merge_generation_stats,
+    query_generations,
+)
 
 N_BUCKETS = 8
 N_PAGES = 300
@@ -69,6 +78,29 @@ def served(spark, tmp_path_factory):
         return [r for r in full if r.query_id in qids and (k is None or r.rank <= k)]
 
     return d, oracle
+
+
+def _fresh_copy(served, tmp_path) -> str:
+    # a copy is a separate index to the serving cache (keyed by path)
+    d = str(tmp_path / "fresh")
+    shutil.copytree(served[0], d)
+    return d
+
+
+def _generations(served, tmp_path, n: int) -> str:
+    """``n`` generations, each a copy of the served index."""
+    for g in range(n):
+        shutil.copytree(served[0], tmp_path / f"gen={g}")
+    return str(tmp_path)
+
+
+def _cache_relation(docs):
+    """The JVM InMemoryRelation behind a persisted DataFrame."""
+    return docs._jdf.queryExecution().withCachedData()
+
+
+def _queries_df(spark):
+    return spark.createDataFrame(QUERIES, "query_id string, query_string string")
 
 
 def _keyed(rows):
@@ -149,6 +181,56 @@ def test_single_query_runs_one_python_wave(spark, served):
     assert jobs == []
 
 
+def test_fresh_index_serves_with_no_setup_jobs(spark, served, tmp_path):
+    d, oracle = served
+    fresh = _fresh_copy(served, tmp_path)
+    sc = spark.sparkContext
+    p = min(N_BUCKETS, sc.defaultParallelism)
+    with _job_group(sc) as jobs:
+        wand._serving_state(spark, fresh)
+    assert jobs == []
+    with _job_group(sc) as jobs:
+        assert wand_topk(spark, fresh, [("oov", "zzqx qqvv")], k=10).collect() == []
+    assert jobs == []
+    with _job_group(sc) as jobs:
+        got = wand_topk(spark, fresh, [("multi", "w5 w40 w300")], k=10).collect()
+    py = _python_stages(sc, jobs)
+    assert len(py) == 1 and py[0][1] <= p, py
+    _assert_same_ranking(got, oracle({"multi"}, 10))
+
+
+def test_serving_plan_reads_empty_doc_cache_with_term_pushdown(spark, served, tmp_path):
+    """Plan guards on a fresh index, before any query filled its doc cache:
+
+    - exactly ONE live parquet scan, the term rows; the doc rows come
+      from the serving cache (InMemoryTableScan), with no Exchange
+      between the cache and the cogroup;
+    - the term_hash predicate reaches the parquet reader
+      (PushedFilters) and the scan's ReadSchema excludes url /
+      encode_secs (column pruning).
+    """
+    fresh = _fresh_copy(served, tmp_path)
+    plan = (
+        wand_topk(spark, fresh, _queries_df(spark))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    docs = wand._serving_state(spark, fresh)["docs"]
+    assert not _cache_relation(docs).cacheBuilder().isCachedColumnBuffersLoaded()
+    # an InMemoryRelation node prints the FileScan it was built from
+    assert plan.count("FileScan") - plan.count("InMemoryRelation") == 1, plan
+    lines = plan.splitlines()
+    cg = next(i for i, ln in enumerate(lines) if "FlatMapCoGroupsInPandas" in ln)
+    # the doc side: the cogroup's sort over the cache scan, no Exchange
+    assert "Sort [gkey" in lines[cg + 1], plan
+    assert "InMemoryTableScan" in lines[cg + 2], plan
+    term_scans = [ln for ln in lines if "FileScan parquet" in ln and "term_hash" in ln]
+    assert len(term_scans) == 1, plan
+    pushed = term_scans[0].split("PushedFilters")[1]
+    assert "term_hash" in pushed, term_scans[0]
+    read_schema = term_scans[0].split("ReadSchema")[1]
+    assert "url" not in read_schema and "encode_secs" not in read_schema, read_schema
+
+
 def test_doc_cache_spreads_buckets_evenly(spark, served):
     d, _ = served
     docs = wand._serving_state(spark, d)["docs"]
@@ -194,7 +276,7 @@ def test_commit_rows_are_complete(spark, served):
 
 
 def test_query_generations_keeps_every_generation_cached(spark, tmp_path):
-    n_gens = wand._SERVE_CACHE_MAX + 1
+    n_gens = wand._DOC_CACHE_MAX + 1
     gen0 = tmp_path / "gen=0"
     build_segments(spark, corpus.synth_pages(spark, 40, seed=3), str(gen0), n_buckets=1)
     # copies are separate indexes to the serving cache (keyed by path)
@@ -207,7 +289,56 @@ def test_query_generations_keeps_every_generation_cached(spark, tmp_path):
     assert len(got) == 5
     cached = {
         k[0][0]: s["docs"].is_cached
-        for k, s in wand._SERVE_CACHE.items()
+        for k, s in wand._DOC_CACHE.items()
         if Path(k[0][0]).parent == tmp_path.resolve()
     }
     assert len(cached) == n_gens and all(cached.values()), cached
+
+
+def test_query_generations_collects_token_hashes_once(spark, served, tmp_path):
+    d, oracle = served
+    generations = _generations(served, tmp_path, 3)
+    sc = spark.sparkContext
+    queries = _queries_df(spark)
+    # planning runs only the token-hash collect: serving state runs none
+    with _job_group(sc) as one:
+        wand_topk(spark, d, queries, k=10)
+    with _job_group(sc) as three:
+        res = query_generations(spark, generations, queries, k=10)
+    assert one and len(three) == len(one), (one, three)
+    # every generation is the served index, with its own stats: each
+    # oracle row appears once per generation
+    qids = {qid for qid, _ in QUERIES}
+    expected = []
+    for qid in qids:
+        rows = sorted(
+            (r for r in oracle({qid}, None) for _ in range(3)),
+            key=lambda r: (-round(r.score, 6), r.url),
+        )[:10]
+        expected += [
+            Row(query_id=qid, rank=i + 1, url=r.url, score=r.score)
+            for i, r in enumerate(rows)
+        ]
+    _assert_same_ranking(res.collect(), expected)
+
+
+def test_new_global_stats_reuse_doc_cache(spark, served, tmp_path):
+    """A new global-stats sidecar only re-reads the lexicon: the
+    generation's filled doc cache serves the next query as it is."""
+    out = _generations(served, tmp_path, 1)
+    gen = f"{out}/gen=0"
+    queries = _queries_df(spark)
+    sidecar = merge_generation_stats(spark, out)
+    first = query_generations(spark, out, queries, k=10, global_stats=True).collect()
+    docs = wand._serving_state(spark, gen, sidecar)["docs"]
+    builder = _cache_relation(docs).cacheBuilder()
+    # every partition of the doc cache is resident in the block manager
+    assert builder.isCachedColumnBuffersLoaded()
+    sidecar = merge_generation_stats(spark, out)
+    assert sidecar.endswith("globalstats=2")
+    again = query_generations(spark, out, queries, k=10, global_stats=True).collect()
+    # the same persisted DataFrame, still resident: the second query
+    # read the doc side from the block manager, not from parquet
+    assert wand._serving_state(spark, gen, sidecar)["docs"] is docs
+    assert builder.isCachedColumnBuffersLoaded()
+    assert sorted(again) == sorted(first)
