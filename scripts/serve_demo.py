@@ -15,7 +15,8 @@ Structured Streaming service.
     display = top-10 with each document's first-5-lines preview
               (``src/lib.rs:229-268`` Display format)
 
-Usage (self-driving demo over the reference corpus + query set):
+Usage (self-driving demo over the in-repo 100-page corpus
+``corpus.tiny_pages`` and the 10 reference queries):
 
     cd /root/repo && python scripts/serve_demo.py --demo
 
@@ -50,7 +51,7 @@ def _make_spark(cores: int = 4):
 
 
 def run_demo() -> int:
-    """Index the reference corpus, start the serving stream, submit the
+    """Index the in-repo tiny corpus, start the serving stream, submit the
     10 reference queries through the file inbox, poll every result, and
     print the top-10 with previews. Exit 0 iff every query answers."""
     from search_engine_spark import corpus
@@ -63,7 +64,7 @@ def run_demo() -> int:
     inbox, mailbox, ckpt = root / "inbox", root / "mailbox", root / "ckpt"
     inbox.mkdir()
 
-    pages = corpus.reference_pages(spark)
+    pages = corpus.tiny_pages(spark)
     idx = root / "index"
     print(f"# building index under {idx} ...", flush=True)
     build_segments(spark, pages, str(idx), n_buckets=4, run_id="demo")
@@ -118,7 +119,7 @@ def run_demo() -> int:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--demo", action="store_true",
-                    help="self-driving demo over the reference corpus")
+                    help="self-driving demo over the in-repo tiny corpus")
     ap.add_argument("--index-dir")
     ap.add_argument("--inbox")
     ap.add_argument("--mailbox")

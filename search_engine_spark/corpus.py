@@ -7,16 +7,23 @@ Two corpora feed the engine:
    ``load_documents``/``load_table`` read them; ``documents_as_pages``
    adapts them to the canonical ``pages`` shape.
 
-2. **Reference-derived parity corpus**: the 100 plain-text documents and
-   10 unique query strings of the reference repo (``documents/``,
-   ``queries.txt:1-10``), loaded read-only from ``/root/reference`` when
-   present and wrapped into the ``pages`` schema mandated by
-   ``BASELINE.json`` ``input_hint``:
+2. **Reference-derived parity corpus** (``reference_pages``): the 100
+   plain-text documents of the reference repo (``documents/``), loaded
+   read-only from ``/root/reference`` when present and wrapped into the
+   ``pages`` schema mandated by ``BASELINE.json`` ``input_hint``:
    ``(url string, warc_ts timestamp, html binary, text string, lang string)``.
-   Used by the pytest parity suite (tf-sum/BM25 goldens). Falls back to
-   skipping those tests when the reference checkout is absent.
+   Used by the parity suites (``test_segments_wand.py``,
+   ``test_streaming.py``, ``test_e2e_parity.py``), which skip on
+   ``reference_available()`` when the checkout is absent.
 
-3. **Synthetic filler pages** (``synth_pages``): seeded Zipfian pages per
+3. **In-repo tiny corpus** (``tiny_pages``): a deterministic 100-page
+   stand-in with the same url shape (FIXTURES.md §1), built only from
+   ``REFERENCE_QUERIES`` and synthetic filler, so every reference query
+   hits and none of it depends on files outside the repo. The REPL and
+   TCP front-end tests (``test_repl.py``, ``test_tcp.py``) and
+   ``scripts/serve_demo.py --demo`` run on it.
+
+4. **Synthetic filler pages** (``synth_pages``): seeded Zipfian pages per
    FIXTURES.md §5 for skew/scale tests — a pure function of (seed, i) so
    output is identical across parallelism levels.
 
@@ -46,6 +53,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from search_engine_spark.functions.tokenize import query_tokens_py
 
 REFERENCE_DIR = Path(os.environ.get("SEARCH_ENGINE_REFERENCE_DIR", "/root/reference"))
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -143,6 +152,38 @@ def reference_queries_df(spark: SparkSession, reps: int = 1) -> DataFrame:
         for n, q in enumerate(REFERENCE_QUERIES)
     ]
     return spark.createDataFrame(rows, QUERIES_SCHEMA)
+
+
+def tiny_pages_rows() -> list[tuple]:
+    """Rows of the in-repo 100-page corpus (FIXTURES.md §1 url shape).
+
+    Page (q, d), q and d in 1..10, is ``https://example.org/query{q}/document{d}.txt``:
+    query q's tokens on d lines (so the ten pages of a query score
+    apart), then up to 8 lines of 12 ``synth_page_texts(7, ·)`` words
+    (the REPL preview's text), then the first two tokens of query q+1 (wrapping 10 -> 1), so
+    every query matches more pages than its own ten. lang="txt", html =
+    the text's bytes, ``warc_ts`` = epoch + page ordinal seconds. A pure
+    function of the embedded query strings: no file is read.
+    """
+    n = len(REFERENCE_QUERIES)
+    toks = [query_tokens_py(q) for q in REFERENCE_QUERIES]
+    fillers = synth_page_texts(7, np.arange(n * n, dtype=np.uint64))
+    rows = []
+    for i, filler in enumerate(fillers):
+        q, d = divmod(i, n)
+        words = filler.split()[: 8 * 12]
+        lines = [" ".join(toks[q])] * (d + 1)
+        lines += [" ".join(words[j : j + 12]) for j in range(0, len(words), 12)]
+        lines.append(" ".join(toks[(q + 1) % n][:2]))
+        text = "\n".join(lines) + "\n"
+        url = f"https://example.org/query{q + 1}/document{d + 1}.txt"
+        ts = _EPOCH + dt.timedelta(seconds=i)
+        rows.append((url, ts, text.encode(), text, "txt"))
+    return rows
+
+
+def tiny_pages(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame(tiny_pages_rows(), PAGES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

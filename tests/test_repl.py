@@ -11,12 +11,12 @@ from search_engine_spark.query.repl import EXIT_WORDS, PROMPT, interactive_loop
 
 
 def test_interactive_loop_piped_stdin(spark, tmp_path):
-    pages = corpus.reference_pages(spark)
+    pages = corpus.tiny_pages(spark)
     idx = str(tmp_path / "idx")
     build_segments(spark, pages, idx, n_buckets=2, run_id="repl")
 
     # two real queries (from the reference workload's vocabulary — the
-    # parity corpus is topical documents for those 10 queries), an empty
+    # tiny corpus holds every one of those 10 queries' tokens), an empty
     # line (re-prompts, not served), then exit
     fin = io.StringIO(
         "standard american breakfast\n\n"
@@ -36,7 +36,7 @@ def test_interactive_loop_piped_stdin(spark, tmp_path):
 
 
 def test_interactive_loop_eof_and_no_pages(spark, tmp_path):
-    pages = corpus.reference_pages(spark)
+    pages = corpus.tiny_pages(spark)
     idx = str(tmp_path / "idx")
     build_segments(spark, pages, idx, n_buckets=2, run_id="repl")
 

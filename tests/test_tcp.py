@@ -82,7 +82,7 @@ def test_tcp_large_message_framing():
 
 
 def test_tcp_submit_poll_roundtrip(spark, tmp_path):
-    pages = corpus.reference_pages(spark)
+    pages = corpus.tiny_pages(spark)
     idx = str(tmp_path / "idx")
     build_segments(spark, pages, idx, n_buckets=2, run_id="tcp")
 
@@ -152,7 +152,7 @@ def test_tcp_full_list_error_resilience_evict_and_drain(
        grace drain, src/main.rs:389-425)."""
     import search_engine_spark.query.wand as wand_mod
 
-    pages = corpus.reference_pages(spark)
+    pages = corpus.tiny_pages(spark)
     idx = str(tmp_path / "idxfull")
     build_segments(spark, pages, idx, n_buckets=2, run_id="tcpfull")
 
