@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import shutil
 import sys
 import tempfile
 import time
@@ -112,6 +113,7 @@ def run_demo() -> int:
     finally:
         sq.stop()
         spark.stop()
+        shutil.rmtree(root, ignore_errors=True)
     print(f"\n# answered {ok}/{len(qids)} queries", flush=True)
     return 0 if ok == len(qids) else 1
 

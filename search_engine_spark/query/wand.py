@@ -45,11 +45,13 @@ of 8: one task carries three buckets while three sit empty. The cogroup
 is keyed on the group key, so each group is still exactly one bucket.
 
 Why one wave matters: on a 4-CPU host a 1-task pandas-UDF job costs
-0.25-0.35 s against 0.05-0.08 s for a JVM-only job. Most of that is the
-reused Python worker's per-task ``setup_spark_files`` ->
-``importlib.invalidate_caches()``, which re-reads ``pyspark.zip``'s
-directory once per zipimporter (~0.3 CPU-s a task). So the serving path
-keeps Python out of every stage but the kernel: the single-query
+0.12-0.17 s and a 4-task one 0.15-0.22 s, against 0.05-0.07 s for a
+JVM-only job. Workers start through ``session``'s zip-free daemon, so a
+task's ``importlib.invalidate_caches()`` no longer re-reads the
+directories of ``pyspark.zip`` and the spark-core jar (that made the
+1-task job 0.33-0.37 s). The rest of the gap is the Python worker round
+trip itself, so the serving path still keeps Python out of every stage
+but the kernel: the single-query
 relation is built through Arrow (a JVM ``LocalRelation``, not a pickled
 Python RDD) and an all-OOV query returns a ``Limit 0`` relation that
 collects with no Spark job at all.
