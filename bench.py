@@ -219,6 +219,9 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict]:
             df = fn(spark, sf_dir)
             rows[name] = df.count()
             timings[name] = round(time.monotonic() - t0, 3)
+        # untimed: a relation one gate pins (simhash_pairs pins its
+        # signatures) must not serve a later, separately timed gate
+        spark.catalog.clearCache()
         print(
             f"# {name}: {timings[name]:.3f}s rows={rows[name]}",
             file=sys.stderr,

@@ -21,7 +21,14 @@ delta + varint-compressed posting lists with per-block metadata:
 
 Everything is numpy-vectorized (no per-value Python loops; the LEB128
 encoder/decoder loop is over the ≤10 byte positions, not over values),
-so the kernels run at Arrow-batch speed inside pandas UDFs.
+so the kernels run at Arrow-batch speed inside Arrow/pandas UDFs. Both
+directions also batch across terms: :func:`encode_postings_batch`
+encodes a whole bucket's terms at once, and
+:func:`decode_postings_batch` decodes them back at once — every
+blockmeta parsed into one block table per stream (docid, tf), each
+table decoded by one call of the one block decoder
+(``_decode_stream``), then one per-term delta reset — so a segment
+merge pays no per-term Python call.
 
 Layout of the ``postings`` binary per term:
     [docid blocks][tf blocks]  (docids are gap-encoded, gaps = docid
@@ -76,7 +83,9 @@ def varint_encode(values: np.ndarray) -> bytes:
     return varint_encode_with_lens(values)[0]
 
 
-def varint_decode(data: bytes | memoryview, prev_total: int | None = None) -> np.ndarray:
+def varint_decode(
+    data: bytes | memoryview | np.ndarray, prev_total: int | None = None
+) -> np.ndarray:
     """Decode a full LEB128 byte stream back to uint64. Vectorized."""
     a = np.frombuffer(data, dtype=np.uint8)
     if len(a) == 0:
@@ -559,10 +568,38 @@ class BlockMeta:
         )
 
 
-def _decode_stream(mv, offs, codec) -> np.ndarray:
-    """Decode one stream (all blocks) honoring per-block codec flags.
+def _block_counts(
+    a: np.ndarray, starts: np.ndarray, ends: np.ndarray, is_pf: np.ndarray
+) -> np.ndarray:
+    """Values per block ``a[starts[i]:ends[i]]``: a PFor header carries
+    n (u16); a varint block holds one value per terminator byte (high
+    bit clear)."""
+    counts = np.empty(len(starts), dtype=np.int64)
+    pf = np.flatnonzero(is_pf)
+    vi = np.flatnonzero(~is_pf)
+    if len(pf):
+        counts[pf] = a[starts[pf] + 2].astype(np.int64) | (
+            a[starts[pf] + 3].astype(np.int64) << 8
+        )
+    if len(vi):
+        terminators = np.zeros(len(a) + 1, dtype=np.int64)
+        np.cumsum((a & 0x80) == 0, out=terminators[1:])
+        counts[vi] = terminators[ends[vi]] - terminators[starts[vi]]
+    return counts
 
-    Mixed-codec streams decode in THREE batched passes, mirroring how
+
+def _decode_stream(
+    a: np.ndarray, starts: np.ndarray, ends: np.ndarray, codec: np.ndarray
+) -> np.ndarray:
+    """Decode the blocks ``a[starts[i]:ends[i]]`` (int64 byte ranges
+    into the uint8 buffer ``a``), in order, honoring the per-block
+    uint8 codec flags; returns their values concatenated. The one block
+    decoder: one term's stream (:func:`decode_postings`) and every term
+    of a bucket at once (:func:`decode_postings_batch`) both come here.
+
+    An all-varint table decodes with one LEB128 call (over the bytes in
+    place when the blocks are contiguous, else over their gather).
+    Mixed-codec tables decode in THREE batched passes, mirroring how
     ``_pfor_stream`` encodes: (1) all varint blocks' bytes gathered and
     LEB128-decoded in one call, (2) all PFor blocks' packed low bits
     unpacked via one global ``np.unpackbits`` + per-bit-plane gather,
@@ -573,38 +610,23 @@ def _decode_stream(mv, offs, codec) -> np.ndarray:
     ``tests/test_codec.py``).
     """
     if not codec.any():
-        return varint_decode(mv[: int(offs[-1])])
-    a = np.frombuffer(mv, dtype=np.uint8)[: int(offs[-1])]
-    offs64 = np.asarray(offs, dtype=np.int64)
-    starts, ends_ = offs64[:-1], offs64[1:]
-    nb = len(codec)
-    is_pf = np.asarray(codec, dtype=np.uint8) != 0
-
-    # Per-block value counts: PFor headers carry n (u16); varint block
-    # counts = number of terminator bytes (high bit clear) in the range.
-    counts = np.zeros(nb, dtype=np.int64)
+        if len(starts) == 0:
+            return np.empty(0, dtype=np.uint64)
+        if len(starts) == 1 or (starts[1:] == ends[:-1]).all():
+            return varint_decode(a[starts[0] : ends[-1]])
+        return varint_decode(a[_range_indices(starts, ends - starts)])
+    nb = len(starts)
+    is_pf = codec != 0
+    counts = _block_counts(a, starts, ends, is_pf)
     pf = np.flatnonzero(is_pf)
     vi = np.flatnonzero(~is_pf)
-    if len(pf):
-        counts[pf] = a[starts[pf] + 2].astype(np.int64) | (
-            a[starts[pf] + 3].astype(np.int64) << 8
-        )
-    vi_lens = ends_[vi] - starts[vi]
-    vi_byte_idx = _range_indices(starts[vi], vi_lens)
-    if len(vi):
-        term_mask = (a & 0x80) == 0
-        bounds = np.concatenate(([0], np.cumsum(vi_lens)))[:-1]
-        counts[vi] = np.add.reduceat(
-            term_mask[vi_byte_idx].astype(np.int64), bounds
-        ) if len(vi_byte_idx) else 0
-
     voff = np.zeros(nb + 1, dtype=np.int64)
     np.cumsum(counts, out=voff[1:])
     out = np.zeros(int(voff[-1]), dtype=np.uint64)
 
     # (1) varint blocks: one gathered decode, one scattered placement
     if len(vi):
-        vvals = varint_decode(a[vi_byte_idx].tobytes())
+        vvals = varint_decode(a[_range_indices(starts[vi], ends[vi] - starts[vi])])
         out[_range_indices(voff[vi], counts[vi])] = vvals
 
     # (2) PFor blocks: one global unpackbits over the gathered packed
@@ -634,8 +656,7 @@ def _decode_stream(mv, offs, codec) -> np.ndarray:
         # (3) exceptions: one gathered varint decode, one scatter patch
         if nexc.any():
             exc_start = starts[pf] + PFOR_HEADER + packed_len
-            exc_bytes = a[_range_indices(exc_start, ends_[pf] - exc_start)]
-            exc = varint_decode(exc_bytes.tobytes())
+            exc = varint_decode(a[_range_indices(exc_start, ends[pf] - exc_start)])
             pair_block = np.repeat(np.arange(len(pf)), nexc)
             pos = exc[0::2].astype(np.int64)
             high = exc[1::2]
@@ -651,11 +672,90 @@ def decode_postings(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Full decode: (docids int64, tfs uint64)."""
     meta = blockmeta if isinstance(blockmeta, BlockMeta) else BlockMeta(blockmeta)
-    mv = memoryview(postings)
-    docid_bytes_len = int(meta.docid_offs[-1])
-    gaps = _decode_stream(mv[:docid_bytes_len], meta.docid_offs, meta.docid_codec)
-    tfs = _decode_stream(mv[docid_bytes_len:], meta.tf_offs, meta.tf_codec)
+    a = np.frombuffer(postings, dtype=np.uint8)
+    d = meta.docid_offs.astype(np.int64)
+    t = meta.tf_offs.astype(np.int64) + d[-1]
+    gaps = _decode_stream(a, d[:-1], d[1:], meta.docid_codec)
+    tfs = _decode_stream(a, t[:-1], t[1:], meta.tf_codec)
     return delta_decode(gaps), tfs
+
+
+def _flat_binary(values) -> tuple[np.ndarray, np.ndarray]:
+    """(uint8 buffer, int64 offsets[n + 1]) of a pyarrow binary column,
+    read in place."""
+    import pyarrow.types as pat
+
+    if hasattr(values, "combine_chunks"):  # ChunkedArray
+        values = values.combine_chunks()
+    _, offs, data = values.buffers()
+    off_dt = np.int64 if pat.is_large_binary(values.type) else np.int32
+    offs = np.frombuffer(offs, dtype=off_dt)[
+        values.offset : values.offset + len(values) + 1
+    ].astype(np.int64)
+    if data is None:  # every entry empty
+        return np.empty(0, dtype=np.uint8), offs
+    return np.frombuffer(data, dtype=np.uint8), offs
+
+
+def _read_at(buf: np.ndarray, pos: np.ndarray, dtype: str) -> np.ndarray:
+    """One little-endian ``dtype`` value at each byte position of ``buf``."""
+    dt = np.dtype(dtype)
+    return buf[pos[:, None] + np.arange(dt.itemsize)].view(dt).ravel()
+
+
+def decode_postings_batch(
+    postings, blockmetas
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY terms' postings in one vectorized pass — the inverse
+    of :func:`encode_postings_batch`.
+
+    ``postings``/``blockmetas`` are pyarrow binary columns with one
+    entry per term (a bucket's term rows), read in place.
+    Every blockmeta is parsed at once into one block table for the docid
+    streams and one for the tf streams — byte ranges into the
+    concatenated postings buffer — and each table is decoded by ONE
+    :func:`_decode_stream` call, followed by one per-term delta reset.
+    Returns ``(docids int64, tfs uint64, offs int64[n_terms + 1])``:
+    term i's postings are ``[offs[i], offs[i + 1])``, equal to
+    ``decode_postings(postings[i], blockmetas[i])`` (property-tested).
+    """
+    a, p_off = _flat_binary(postings)
+    m, m_off = _flat_binary(blockmetas)
+    n_terms = len(p_off) - 1
+    if n_terms == 0:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty.astype(np.uint64), np.zeros(1, dtype=np.int64)
+    # blockmeta field positions (module docstring layout), per term ...
+    m0 = m_off[:-1]
+    nb = _read_at(m, m0, "<u4").astype(np.int64)
+    d_offs0 = m0 + 8 + 18 * nb  # docid_byte_off[0]
+    d_len = _read_at(m, d_offs0 + 4 * nb, "<u4").astype(np.int64)
+    # ... and per block: j-th block of term b_term
+    bcum = np.zeros(n_terms + 1, dtype=np.int64)
+    np.cumsum(nb, out=bcum[1:])
+    b_term = np.repeat(np.arange(n_terms), nb)
+    j = np.arange(int(bcum[-1]), dtype=np.int64) - bcum[b_term]
+    b_nb, b_off = nb[b_term], d_offs0[b_term] + 4 * j
+    d_codec = m[m0[b_term] + 8 + 16 * b_nb + j]
+    t_codec = m[m0[b_term] + 8 + 17 * b_nb + j]
+    d_lo = p_off[b_term] + _read_at(m, b_off, "<u4")
+    d_hi = p_off[b_term] + _read_at(m, b_off + 4, "<u4")
+    t_off = b_off + 4 * (b_nb + 1)
+    t_base = p_off[b_term] + d_len[b_term]
+    t_lo = t_base + _read_at(m, t_off, "<u4")
+    t_hi = t_base + _read_at(m, t_off + 4, "<u4")
+
+    gaps = _decode_stream(a, d_lo, d_hi, d_codec).astype(np.int64)
+    tfs = _decode_stream(a, t_lo, t_hi, t_codec)
+    df = np.add.reduceat(_block_counts(a, d_lo, d_hi, d_codec != 0), bcum[:-1])
+    offs = np.zeros(n_terms + 1, dtype=np.int64)
+    np.cumsum(df, out=offs[1:])
+    # delta reset: each term's gap chain restarts from the implicit -1
+    docids = np.cumsum(gaps)
+    before = np.zeros(n_terms, dtype=np.int64)
+    before[1:] = docids[offs[1:-1] - 1]
+    docids -= np.repeat(before + 1, df)
+    return docids, tfs, offs
 
 
 def decode_blocks(

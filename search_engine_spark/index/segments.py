@@ -33,8 +33,15 @@ batched varint/PFor encode and the 60-bit term hash. The fronts:
   sort of int64 (term, doc) keys, run-length into tf;
 - postings (:func:`build_segments_from_postings`, generation
   compaction) — rows already decoded from segments
-  (:func:`read_postings_relation`): doc boundaries, term
-  dictionary-encode, argsort.
+  (:func:`read_postings_relation`: one batched decode pass per bucket,
+  ``codec.decode_postings_batch``, and Arrow ``take`` for the term, url
+  and dl columns): doc boundaries, term dictionary-encode, argsort.
+
+**No schema-inference jobs.** Every internal parquet read declares its
+schema (``INDEX_SCHEMA``, ``TERMSTATS_SCHEMA``, ``LINEAGE_SCHEMA``,
+``METRICS_SCHEMA``) and the committed-bucket set is read from lineage
+with pyarrow on the driver, so the Spark jobs a build runs are the
+bucket kernel's write, the commit and the stats/termstats finalize.
 
 **One corpus pass.** The text front tokenizes exactly once and the
 kernel needs nothing else: the codec's block metadata stores the
@@ -114,6 +121,16 @@ INDEX_SCHEMA = StructType(
         StructField("blockmeta", BinaryType()),
         StructField("enc_bytes", LongType()),
         StructField("encode_secs", DoubleType()),
+    ]
+)
+
+# The global term statistics written once every bucket has committed.
+TERMSTATS_SCHEMA = StructType(
+    [
+        StructField("term", StringType()),
+        StructField("term_hash", LongType()),
+        StructField("df", LongType()),
+        StructField("idf", DoubleType()),
     ]
 )
 
@@ -269,7 +286,7 @@ def _build(
     else:
         layout_path.write_text(json.dumps(layout))
 
-    committed = _committed_buckets(spark, out)
+    committed = _committed_buckets(out)
     _clean_uncommitted(out, committed)
 
     todo = sorted(set(range(n_buckets)) - committed)
@@ -278,13 +295,13 @@ def _build(
     if todo:
         _build_buckets(spark, part, front, out, todo, run_id, pfor)
 
-    complete = len(_committed_buckets(spark, out)) == n_buckets
+    complete = len(_committed_buckets(out)) == n_buckets
     n_docs = avgdl = None
     if complete:
         # Corpus stats + global term stats from the committed index —
         # metadata-only aggregations (no corpus/text pass).
         agg = (
-            spark.read.parquet(str(out / "index"))
+            read_index(spark, str(out))
             .filter(F.col("kind") == 0)
             .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
             .collect()[0]
@@ -311,12 +328,14 @@ def _build(
     }
 
 
-def _committed_buckets(spark: SparkSession, out: Path) -> set[int]:
+def _committed_buckets(out: Path) -> set[int]:
+    # read on the driver with pyarrow: a handful of rows, no Spark job
+    import pyarrow.parquet as pq
+
     lineage = out / "lineage.parquet"
     if not lineage.exists():
         return set()
-    rows = spark.read.parquet(str(lineage)).select("bucket").distinct().collect()
-    return {r.bucket for r in rows}
+    return set(pq.read_table(lineage, columns=["bucket"]).column("bucket").to_pylist())
 
 
 def _clean_uncommitted(out: Path, committed: set[int]) -> None:
@@ -521,7 +540,7 @@ def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
     pickled row list would add a Python task wave to every commit.
     """
     agg_rows = (
-        spark.read.parquet(str(out / "index"))
+        read_index(spark, str(out))
         .filter(F.col("bucket").isin(list(todo_set)))
         .groupBy("bucket")
         .agg(
@@ -601,7 +620,7 @@ def load_stats(out_dir: str) -> dict:
 
 def read_index(spark: SparkSession, out_dir: str) -> DataFrame:
     """The raw unified index rows (both kinds)."""
-    return spark.read.parquet(f"{out_dir}/index")
+    return spark.read.schema(INDEX_SCHEMA).parquet(f"{out_dir}/index")
 
 
 def read_segments(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -629,64 +648,71 @@ def read_postings_relation(spark: SparkSession, out_dir: str) -> DataFrame:
     """Decode the compressed segments back to
     ``(url, bucket, doc_idx, term, tf, dl)``.
 
-    The inverse of the build: one grouped scan per bucket decodes every
-    posting list and resolves doc_idx -> (url, dl) against the bucket's
-    doc rows — no text involved. ``(bucket, doc_idx)`` keeps documents
-    that share a url apart. This is what generation compaction feeds
-    into :func:`build_segments_from_postings`.
+    The inverse of the build, with no text involved: one grouped Arrow
+    scan per bucket decodes ALL of the bucket's posting lists in one
+    :func:`~.codec.decode_postings_batch` pass, then builds the term,
+    url and dl columns by index arithmetic (Arrow ``take`` over the
+    bucket's term and doc rows), so no per-term call runs and no
+    string becomes a Python object. ``(bucket, doc_idx)`` keeps
+    documents that share a url apart. This is what generation
+    compaction feeds into :func:`build_segments_from_postings`.
     """
-    from .codec import decode_postings
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .codec import decode_postings_batch
 
     idx = read_index(spark, out_dir).select(
         "bucket", "kind", "doc_idx", "url", "dl", "term", "postings", "blockmeta"
     )
-    out_cols = ["url", "bucket", "doc_idx", "term", "tf", "dl"]
+    schema = StructType(
+        [
+            StructField("url", StringType()),
+            StructField("bucket", IntegerType()),
+            StructField("doc_idx", LongType()),
+            StructField("term", StringType()),
+            StructField("tf", LongType()),
+            StructField("dl", LongType()),
+        ]
+    )
+    out_schema = to_arrow_schema(schema)
 
-    def decode_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        kinds = pdf["kind"].to_numpy()
-        docs = pdf[kinds == 0]
-        terms = pdf[kinds == 1]
-        n_docs = len(docs)
-        if n_docs == 0 or len(terms) == 0:
-            return pd.DataFrame(columns=out_cols).astype(
-                {"bucket": "int32", "doc_idx": "int64", "tf": "int64", "dl": "int64"}
-            )
-        urls = np.empty(n_docs, dtype=object)
-        dls = np.zeros(n_docs, dtype=np.int64)
-        di = docs["doc_idx"].to_numpy(dtype=np.int64)
-        urls[di] = docs["url"].to_numpy()
-        dls[di] = docs["dl"].to_numpy(dtype=np.int64)
-        id_parts, term_parts, tf_parts = [], [], []
-        for t, p, m in zip(terms["term"], terms["postings"], terms["blockmeta"]):
-            ids, tfs = decode_postings(bytes(p), bytes(m))
-            id_parts.append(ids.astype(np.int64))
-            term_parts.append(np.full(len(ids), t, dtype=object))
-            tf_parts.append(tfs.astype(np.int64))
-        ids = np.concatenate(id_parts)
-        return pd.DataFrame(
-            {
-                "url": urls[ids],
-                "bucket": np.full(len(ids), pdf["bucket"].iloc[0], dtype=np.int32),
-                "doc_idx": ids,
-                "term": np.concatenate(term_parts),
-                "tf": np.concatenate(tf_parts),
-                "dl": dls[ids],
-            }
+    def decode_bucket(tbl: pa.Table) -> pa.Table:
+        kind = tbl.column("kind").to_numpy()
+        docs = tbl.filter(pa.array(kind == 0))
+        terms = tbl.filter(pa.array(kind == 1))
+        if docs.num_rows == 0 or terms.num_rows == 0:
+            return out_schema.empty_table()
+        # doc rows by doc_idx (dense 0..n-1 within the bucket)
+        by_idx = np.empty(docs.num_rows, dtype=np.int64)
+        by_idx[docs.column("doc_idx").to_numpy()] = np.arange(docs.num_rows)
+        ids, tfs, offs = decode_postings_batch(
+            terms.column("postings"), terms.column("blockmeta")
+        )
+        doc_rows = by_idx[ids]
+        term_rows = np.repeat(np.arange(terms.num_rows), np.diff(offs))
+        return pa.Table.from_arrays(
+            [
+                docs.column("url").take(doc_rows),
+                pa.array(np.full(len(ids), tbl.column("bucket")[0].as_py(), np.int32)),
+                pa.array(ids),
+                terms.column("term").take(term_rows),
+                pa.array(tfs.astype(np.int64)),
+                pa.array(docs.column("dl").to_numpy()[doc_rows]),
+            ],
+            schema=out_schema,
         )
 
-    return idx.groupBy("bucket").applyInPandas(
-        decode_bucket,
-        schema="url string, bucket int, doc_idx long, term string, tf long, dl long",
-    )
+    return idx.groupBy("bucket").applyInArrow(decode_bucket, schema=schema)
 
 
 def read_termstats(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/termstats")
+    return spark.read.schema(TERMSTATS_SCHEMA).parquet(f"{out_dir}/termstats")
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/lineage.parquet")
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_dir}/lineage.parquet")
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/metrics.parquet")
+    return spark.read.schema(METRICS_SCHEMA).parquet(f"{out_dir}/metrics.parquet")

@@ -618,7 +618,10 @@ def simhash_pairs(
     reps; the 60-accumulator codegen/JIT is what reuse doesn't cover
     cold). The pinned relation is two longs per document — negligible
     at any scale; ``checkpoint_dir`` upgrades it to a reliable
-    checkpoint for long cluster runs.
+    checkpoint for long cluster runs. The pin lives until the caller
+    clears it (``spark.catalog.clearCache()``); until then Spark's cache
+    manager also serves it to any later plan over the same signatures,
+    e.g. a separate :func:`simhash_signatures` query.
 
     Candidates share at least one of 4 15-bit bands (pigeonhole-complete
     for hd <= 3); reported at hd <= HAMMING_MAX. Band values shared by

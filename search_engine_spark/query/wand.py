@@ -99,7 +99,7 @@ from pyspark.sql.types import (
 from ..functions.tokenize import query_tokens_col
 from .scoring import TOP_K
 from ..index.codec import BlockMeta, bm25_norm, decode_blocks, decode_postings
-from ..index.segments import INDEX_SCHEMA, load_stats
+from ..index.segments import load_stats, read_index
 
 
 def maxscore_topk(
@@ -185,10 +185,10 @@ def maxscore_topk(
 # - doc side, keyed by the index fingerprint: the doc rows (gkey,
 #   doc_idx, dl, url) persisted in P partitions of the group key, the
 #   group keys, and the term-row base plan. Both relations come from
-#   ONE parquet relation read with the declared ``INDEX_SCHEMA`` (no
-#   schema-inference job). The doc cache has no eager count(): the
-#   first query's scan fills it, and later queries read it from the
-#   block manager (InMemoryTableScan, plan-asserted in
+#   ONE parquet relation read by ``segments.read_index`` (declared
+#   schema, no schema-inference job). The doc cache has no eager
+#   count(): the first query's scan fills it, and later queries read it
+#   from the block manager (InMemoryTableScan, plan-asserted in
 #   tests/test_serving.py).
 # - stats side, keyed by (index, stats) fingerprint: N/avgdl (overlaid
 #   from a global-stats sidecar if one is given), the lexicon read from
@@ -299,7 +299,7 @@ def _doc_side(spark: SparkSession, index_dir: str, key: tuple) -> dict:
     gkey = F.element_at(
         F.array(*[F.lit(g) for g in gkeys]), F.col("bucket") + 1
     ).alias("gkey")
-    index = spark.read.schema(INDEX_SCHEMA).parquet(f"{index_dir}/index")
+    index = read_index(spark, index_dir)
     docs = (
         index.filter(F.col("kind") == 0)
         .select(gkey, "doc_idx", "dl", "url")

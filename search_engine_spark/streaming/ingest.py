@@ -275,10 +275,13 @@ def compact_generations(
 
     No text pass: each generation's segments are decoded back to
     ``(url, bucket, doc_idx, term, tf, dl)`` rows
-    (``read_postings_relation``), tagged with the generation's ordinal
-    and re-encoded by the one segment builder
+    (``read_postings_relation``: every posting list of a bucket in one
+    batched decode pass, no per-term Python call), tagged with the
+    generation's ordinal and re-encoded by the one segment builder
     (``build_segments_from_postings``) — compaction moves
     compressed-postings-sized data, exactly like a Lucene segment merge.
+    No step infers a parquet schema, so a 2-generation compaction runs
+    12 Spark jobs (``tests/test_segment_build.py`` bounds it).
     Documents are keyed by (url, generation, bucket, doc_idx), so a url
     captured by two generations stays two documents, as in a batch build
     over the same pages and in :func:`query_generations` before the

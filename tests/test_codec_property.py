@@ -4,6 +4,7 @@ block-max invariants over adversarial docid-gap/tf distributions."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -12,6 +13,7 @@ from search_engine_spark.index.codec import (
     bm25_norm,
     decode_blocks,
     decode_postings,
+    decode_postings_batch,
     encode_postings,
     encode_postings_batch,
     varint_decode,
@@ -69,6 +71,9 @@ def test_postings_roundtrip_any_blocksize(gaps, block_size):
     )
 )
 def test_batch_equals_single_property(term_specs):
+    """Batch encode is byte-identical to per-term encode (varint), and
+    batch decode equals per-term decode and the inputs, for both codecs;
+    df 1-260 spans the 128/129/256 block edges."""
     doc_parts, tf_parts, dl_parts, starts, ends = [], [], [], [], []
     off = 0
     for df, seed in term_specs:
@@ -82,17 +87,42 @@ def test_batch_equals_single_property(term_specs):
         starts.append(off)
         ends.append(off + df)
         off += df
-    batch = encode_postings_batch(
-        np.concatenate(doc_parts),
-        np.concatenate(tf_parts),
-        np.concatenate(dl_parts),
-        np.array(starts),
-        np.array(ends),
-    )
-    for enc_b, ids, tfs, dls in zip(batch, doc_parts, tf_parts, dl_parts):
-        enc_s = encode_postings(ids, tfs, dls)
-        assert enc_b.postings == enc_s.postings
-        assert enc_b.blockmeta == enc_s.blockmeta
+    for pfor in (False, True):
+        batch = encode_postings_batch(
+            np.concatenate(doc_parts),
+            np.concatenate(tf_parts),
+            np.concatenate(dl_parts),
+            np.array(starts),
+            np.array(ends),
+            pfor=pfor,
+        )
+        if not pfor:
+            for enc_b, ids, tfs, dls in zip(batch, doc_parts, tf_parts, dl_parts):
+                enc_s = encode_postings(ids, tfs, dls)
+                assert enc_b.postings == enc_s.postings
+                assert enc_b.blockmeta == enc_s.blockmeta
+        got_ids, got_tfs, offs = decode_postings_batch(
+            pa.array([e.postings for e in batch]), pa.array([e.blockmeta for e in batch])
+        )
+        assert offs.tolist() == [0] + ends
+        for i, (enc, ids, tfs) in enumerate(zip(batch, doc_parts, tf_parts)):
+            one_ids, one_tfs = decode_postings(enc.postings, enc.blockmeta)
+            s, e = offs[i], offs[i + 1]
+            assert got_ids[s:e].tolist() == one_ids.tolist() == ids.tolist()
+            assert got_tfs[s:e].tolist() == one_tfs.tolist() == tfs.tolist()
+
+
+def test_batch_decode_empty_and_single_posting():
+    ids, tfs, offs = decode_postings_batch(pa.array([], pa.binary()), pa.array([], pa.binary()))
+    assert len(ids) == len(tfs) == 0 and offs.tolist() == [0]
+    for pfor in (False, True):
+        enc = encode_postings(np.array([7]), np.array([3]), np.array([9]), pfor=pfor)
+        # read in place, honoring a slice offset and chunking
+        ids, tfs, offs = decode_postings_batch(
+            pa.array([b"x", enc.postings]).slice(1),
+            pa.chunked_array([pa.array([b"y", enc.blockmeta]).slice(1)]),
+        )
+        assert (ids.tolist(), tfs.tolist(), offs.tolist()) == ([7], [3], [0, 1])
 
 
 @settings(max_examples=100, deadline=None)

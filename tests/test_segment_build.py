@@ -6,6 +6,12 @@ and literal pages), so these run without the reference corpus:
 - an interrupted build resumed is byte-equal to an uninterrupted one
 - a url captured by two generations stays two documents in the
   compacted index, as in a batch build over the union
+- the job floor: a text build runs at most ``BUILD_JOBS`` Spark jobs
+  and the 2-generation compaction at most ``COMPACT_JOBS``. Before the
+  build read every internal parquet file with a declared schema and
+  its committed-bucket set with pyarrow, they ran 16 and 20 (one
+  1-task schema-inference job per undeclared read, plus a distinct
+  job per bucket-set read).
 """
 
 from __future__ import annotations
@@ -28,6 +34,8 @@ from search_engine_spark.streaming.ingest import compact_generations
 
 N_PAGES = 300
 N_BUCKETS = 4
+BUILD_JOBS = 10
+COMPACT_JOBS = 12
 
 
 @pytest.fixture(scope="module")
@@ -74,11 +82,13 @@ def generations(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("pfor", [False, True])
 def test_compaction_writes_the_rows_of_a_direct_build(
-    spark, direct, generations, tmp_path, pfor
+    spark, direct, generations, tmp_path, pfor, job_group
 ):
     gens = tmp_path / "gens"
     shutil.copytree(generations, gens)  # compaction expires its sources
-    dest = compact_generations(spark, str(gens), n_buckets=N_BUCKETS, pfor=pfor)
+    with job_group() as jobs:
+        dest = compact_generations(spark, str(gens), n_buckets=N_BUCKETS, pfor=pfor)
+    assert len(jobs) <= COMPACT_JOBS, jobs
     docs, terms = _rows(spark, dest)
     assert len(docs) == N_PAGES and len(terms) > 1000
     assert ((docs, terms), load_stats(dest)) == direct(pfor)
@@ -98,7 +108,7 @@ def test_resumed_build_equals_uninterrupted(spark, pages, direct, tmp_path):
     assert {r.run_id for r in read_lineage(spark, str(resumed)).collect()} == {"r1", "r2"}
 
 
-def test_compaction_keeps_a_recrawled_url_two_documents(spark, tmp_path):
+def test_compaction_keeps_a_recrawled_url_two_documents(spark, tmp_path, job_group):
     gen_pages = [
         [("u1", "apple banana apple"), ("u2", "banana cherry")],
         [("u1", "apple fig fig fig"), ("u3", "cherry date apple")],
@@ -110,10 +120,10 @@ def test_compaction_keeps_a_recrawled_url_two_documents(spark, tmp_path):
             str(out / f"gen={g}"), n_buckets=2, run_id=f"g{g}",
         )
     batch = tmp_path / "batch"
-    build_segments(
-        spark, spark.createDataFrame(gen_pages[0] + gen_pages[1], "url string, text string"),
-        str(batch), n_buckets=2, run_id="b",
-    )
+    batch_pages = spark.createDataFrame(gen_pages[0] + gen_pages[1], "url string, text string")
+    with job_group() as jobs:
+        build_segments(spark, batch_pages, str(batch), n_buckets=2, run_id="b")
+    assert len(jobs) <= BUILD_JOBS, jobs
     dest = compact_generations(spark, str(out), n_buckets=2)
 
     got, want = load_stats(dest), load_stats(str(batch))

@@ -16,11 +16,9 @@ buckets), so they run without the reference corpus:
 
 from __future__ import annotations
 
-import itertools
 import math
 import re
 import shutil
-from contextlib import contextmanager
 from pathlib import Path
 
 import pandas as pd
@@ -53,7 +51,6 @@ QUERIES = [
     ("tail", "w1234 w9 zzqx"),
     ("oov", "zzqx qqvv"),
 ]
-_groups = itertools.count()
 
 
 @pytest.fixture(scope="module")
@@ -115,19 +112,6 @@ def _assert_same_ranking(got, expected):
         assert abs(kg[key][1] - score) < 2e-6, (key, kg[key], ke[key])
 
 
-@contextmanager
-def _job_group(sc):
-    """Yields a list filled, on exit, with the ids of the jobs run inside."""
-    group = f"test-serving-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    jobs: list[int] = []
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _python_stages(sc, jobs):
     """[(stage_id, n_tasks)] of the stages that ran Python code: pickled
     Python RDDs or pandas/Arrow UDF operators in their RDD graph."""
@@ -167,32 +151,32 @@ def test_dataframe_batch_and_full_list_rank_identical(spark, served):
     _assert_same_ranking(full, oracle(qids, None))
 
 
-def test_single_query_runs_one_python_wave(spark, served):
+def test_single_query_runs_one_python_wave(spark, served, job_group):
     d, _ = served
     sc = spark.sparkContext
     p = min(N_BUCKETS, sc.defaultParallelism)
     wand_topk(spark, d, [("warm", "w3")], k=10).collect()  # serving state
-    with _job_group(sc) as jobs:
+    with job_group() as jobs:
         assert wand_topk(spark, d, [("q", "w5 w40 w300")], k=10).collect()
     py = _python_stages(sc, jobs)
     assert len(py) == 1 and py[0][1] <= p, py
-    with _job_group(sc) as jobs:
+    with job_group() as jobs:
         assert wand_topk(spark, d, [("q", "zzqx qqvv")], k=10).collect() == []
     assert jobs == []
 
 
-def test_fresh_index_serves_with_no_setup_jobs(spark, served, tmp_path):
+def test_fresh_index_serves_with_no_setup_jobs(spark, served, tmp_path, job_group):
     d, oracle = served
     fresh = _fresh_copy(served, tmp_path)
     sc = spark.sparkContext
     p = min(N_BUCKETS, sc.defaultParallelism)
-    with _job_group(sc) as jobs:
+    with job_group() as jobs:
         wand._serving_state(spark, fresh)
     assert jobs == []
-    with _job_group(sc) as jobs:
+    with job_group() as jobs:
         assert wand_topk(spark, fresh, [("oov", "zzqx qqvv")], k=10).collect() == []
     assert jobs == []
-    with _job_group(sc) as jobs:
+    with job_group() as jobs:
         got = wand_topk(spark, fresh, [("multi", "w5 w40 w300")], k=10).collect()
     py = _python_stages(sc, jobs)
     assert len(py) == 1 and py[0][1] <= p, py
@@ -295,15 +279,17 @@ def test_query_generations_keeps_every_generation_cached(spark, tmp_path):
     assert len(cached) == n_gens and all(cached.values()), cached
 
 
-def test_query_generations_collects_token_hashes_once(spark, served, tmp_path):
+def test_query_generations_collects_token_hashes_once(
+    spark, served, tmp_path, job_group
+):
     d, oracle = served
     generations = _generations(served, tmp_path, 3)
     sc = spark.sparkContext
     queries = _queries_df(spark)
     # planning runs only the token-hash collect: serving state runs none
-    with _job_group(sc) as one:
+    with job_group() as one:
         wand_topk(spark, d, queries, k=10)
-    with _job_group(sc) as three:
+    with job_group() as three:
         res = query_generations(spark, generations, queries, k=10)
     assert one and len(three) == len(one), (one, three)
     # every generation is the served index, with its own stats: each
