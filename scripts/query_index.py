@@ -55,8 +55,8 @@ def main() -> None:
     with open(args.queries, encoding="utf-8") as fh:
         lines = [ln for ln in (line.rstrip("\n") for line in fh) if ln.strip()]
     # pass the driver-local list itself (NOT a createDataFrame wrap):
-    # list-form batches take wand_topk's zero-pre-job local fast path
-    # regardless of arrow settings, same as the REPL/TCP front-ends
+    # a list-form batch is scored in one job and merged on the driver,
+    # same as the REPL/TCP front-ends
     queries = [(f"q{i + 1:04d}", q) for i, q in enumerate(lines)]
 
     result = wand_topk(spark, args.index, queries, k=args.k)

@@ -18,10 +18,14 @@ Scale notes (100 TB):
   partitionless window would funnel the whole relation through one
   task).
 - The scoring pass joins the exploded corpus against the vocabulary
-  table on ``term``. At sf-test scale Catalyst broadcasts the
-  vocabulary side; at web scale AQE picks a shuffle hash join with the
-  same partial-agg-reduced inputs. Head-term skew on the join key is
-  bounded because the build side is one row per term.
+  table on ``term``. At sf-test scale the vocabulary is under the
+  broadcast threshold (64 MB in ``session``), so Catalyst broadcasts
+  it and no partition is keyed by term. At web scale it is a shuffle
+  join, and head-term skew sits on the probe side: every occurrence of
+  a head term hashes to one partition, however small the one-row-per-
+  term build side is. AQE's skew-join split (on in ``session``) cuts
+  such a partition into several tasks, each joined against the
+  replicated build rows of its key.
 - The per-document re-aggregation keys on ``doc_id`` — unique per
   source row, uniform, skew-free.
 

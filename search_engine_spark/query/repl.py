@@ -5,14 +5,14 @@ The reference's interactive surface (``/root/reference/src/main.rs:247-287``,
 per line from stdin, skips empty lines, and prints the formatted top-10
 (url, score, first-5-lines preview — Display for QueryResult,
 ``src/lib.rs:229-268``). This module reproduces that loop over a
-prebuilt segment index: each line becomes a 1-row queries DataFrame into
-:func:`~search_engine_spark.query.wand.wand_topk`. Latency relies on the
-per-index serving cache (wand.py) — the lexicon is held on the driver
-and the doc rows are persisted in the block manager by the first query,
-so the per-line cost is one pruned term-row scan plus the kernel.
+prebuilt segment index: each line becomes a 1-query list-form batch
+into :func:`~search_engine_spark.query.wand.wand_topk`. Latency relies
+on the per-index serving cache (wand.py) — the lexicon is held on the
+driver and the index is persisted in the block manager by the first
+query, so the per-line cost is one kernel job over the cache.
 
-The loop is a driver-side UI shell around the same batch plan the
-servers use; it takes file handles instead of touching ``sys`` directly
+The loop is a driver-side UI shell around the same serving path the
+TCP server uses; it takes file handles instead of touching ``sys`` directly
 so tests drive it with StringIO (piped-stdin smoke test in
 ``tests/test_repl.py``).
 """
@@ -61,7 +61,7 @@ def interactive_loop(
         if query.lower() in EXIT_WORDS:
             break
         qno += 1
-        # list form -> zero-pre-job serving fast path
+        # list form: one kernel job, merged on the driver
         result = wand_topk(
             spark, index_dir, [(f"repl-{qno}", query)], k=k
         )

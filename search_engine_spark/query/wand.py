@@ -29,11 +29,15 @@ decoded:
    floating-point reassociation (SURVEY.md §7.4 determinism).
 
 Scatter-gather shape (reference mode 4, ``src/processor.rs:146-369``,
-re-expressed): queries broadcast to every doc-bucket partition; each
-partition computes a local exact top-k (the reference's shard partials);
-a final window aggregation merges per-bucket partials into the global
-top-k (the reference's ``aggregate_result`` merge, ``src/lib.rs:190-226``,
-which Catalyst plans as partial/final automatically).
+re-expressed): the index is partitioned ONCE by doc bucket into a
+cache of P partitions; a query batch is scored by one kernel task per
+partition, each computing every query's exact local top-k per bucket
+(the reference's shard partials), and a small merge combines them
+into the global top-k (the reference's ``aggregate_result`` merge,
+``src/lib.rs:190-226``). A driver-held (list-form) batch is merged on
+the driver, which receives at most ``n_buckets * k`` rows per query; a
+DataFrame batch is merged by a window in the plan, so a 10^5-query
+batch never funnels through the driver.
 
 Placement: the kernel stage runs ``P = min(n_buckets, defaultParallelism)``
 tasks, ONE task wave. Each bucket gets a distinct int group key whose
@@ -41,45 +45,41 @@ Spark hash partition (Murmur3, seed 42, pmod P) is ``bucket % P``
 (:func:`_group_keys`, computed in Python, no Spark job), so every task
 holds ``floor`` or ``ceil(n_buckets / P)`` buckets. Grouping on the raw
 bucket id instead lands buckets 0-7 in partitions ``[7,3,6,3,6,2,1,3]``
-of 8: one task carries three buckets while three sit empty. The cogroup
-is keyed on the group key, so each group is still exactly one bucket.
+of 8: one task carries three buckets while three sit empty. The kernel
+groups on the group key, so each group is still exactly one bucket.
 
-Why one wave matters: on a 4-CPU host a 1-task pandas-UDF job costs
+Why one stage matters: on a 4-CPU host a 1-task pandas-UDF job costs
 0.12-0.17 s and a 4-task one 0.15-0.22 s, against 0.05-0.07 s for a
 JVM-only job. Workers start through ``session``'s zip-free daemon, so a
 task's ``importlib.invalidate_caches()`` no longer re-reads the
 directories of ``pyspark.zip`` and the spark-core jar (that made the
 1-task job 0.33-0.37 s). The rest of the gap is the Python worker round
-trip itself, so the serving path still keeps Python out of every stage
-but the kernel: the single-query
-relation is built through Arrow (a JVM ``LocalRelation``, not a pickled
-Python RDD) and an all-OOV query returns a ``Limit 0`` relation that
-collects with no Spark job at all.
+trip itself, so a list-form query is ONE Spark job: one grouped pandas
+stage over the cache, with no Exchange. Its result is an Arrow-built
+local relation (a JVM ``LocalRelation``) that collects with no job, and
+an all-OOV query returns a ``Limit 0`` relation that needs no job at all.
 
-Data access: the per-bucket kernel's grouped input is the union of
-three relations — term rows (ONE parquet scan filtered to the query
-vocabulary by an int64 ``term_hash`` predicate, parquet-stats
-friendly), doc rows (doc_idx, dl) from the per-index serving cache
-(persisted in P hash partitions of the group key -> block manager, no
-per-call filesystem read, no per-call Exchange), and the
-(query_id, term, qtf, idf) query relation fanned out to every bucket's
-group key as kind=2 rows. The idf comes from the driver-side lexicon,
-read from the termstats parquet with pyarrow, so serving state for a
-newly committed index costs no Spark job: the first query fills the
-doc cache. Segment data flows through Spark's data
-source / block manager (locality, pushdown); there is no
-executor-side filesystem side-channel. The per-query-batch cost of
-shipping each bucket's dl array is amortized over the whole query
-batch — batch serving scores thousands of queries against one
-shipment. Inside the kernel, postings are matched by the full term
-STRING (carried in the segment rows), so a 60-bit hash collision
-between a query term and another term in the bucket cannot
-mis-score; the hash is only a pushdown filter.
+Data access: the serving cache holds the whole index, doc rows (kind
+0: doc_idx, dl, url) and term rows (kind 1: term, term_hash, postings,
+blockmeta), read once through ``segments.read_index`` and persisted in
+P hash partitions of the group key: no per-call filesystem read and no
+per-call Exchange of index rows. A batch reads it through one filter,
+``kind = 0 OR term_hash IN (batch vocabulary)``. The vocabulary and the
+idf come from the driver-side lexicon, read from the termstats parquet
+with pyarrow, so serving state for a newly committed index costs no
+Spark job: the first query fills the cache. A list-form batch's
+resolved (query_id, term, qtf, idf) rows travel in the kernel's
+closure; a DataFrame batch's are fanned out to every group key and
+cogrouped with the cache, so only they are shuffled. Inside the kernel,
+postings are matched by the full term STRING (carried in the segment
+rows), so a 60-bit hash collision between a query term and another term
+in the bucket cannot mis-score; the hash is only a filter.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
 import os
 from contextlib import contextmanager
 
@@ -89,12 +89,6 @@ import pyarrow.parquet as pq
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..functions.tokenize import query_tokens_col
 from .scoring import TOP_K
@@ -182,32 +176,32 @@ def maxscore_topk(
 # Serving state is built from the committed files alone and runs NO
 # Spark job, so a generation can be served as soon as it commits:
 #
-# - doc side, keyed by the index fingerprint: the doc rows (gkey,
-#   doc_idx, dl, url) persisted in P partitions of the group key, the
-#   group keys, and the term-row base plan. Both relations come from
-#   ONE parquet relation read by ``segments.read_index`` (declared
-#   schema, no schema-inference job). The doc cache has no eager
-#   count(): the first query's scan fills it, and later queries read it
-#   from the block manager (InMemoryTableScan, plan-asserted in
-#   tests/test_serving.py).
+# - index side, keyed by the index fingerprint: the whole index (the
+#   columns the kernel reads of the doc and term rows) persisted in P
+#   partitions of the group key, and the group keys. It is ONE parquet
+#   relation read by ``segments.read_index`` (declared schema, no
+#   schema-inference job), with no eager count(): the first query's
+#   scan fills it, and later queries read it from the block manager
+#   (InMemoryTableScan, plan-asserted in tests/test_serving.py). A cache
+#   found dropped (``spark.catalog.clearCache()``) is persisted again
+#   before use.
 # - stats side, keyed by (index, stats) fingerprint: N/avgdl (overlaid
-#   from a global-stats sidecar if one is given), the lexicon read from
-#   the termstats parquet with pyarrow on the driver, and the
-#   kernel-config broadcasts.
+#   from a global-stats sidecar if one is given) and the lexicon read
+#   from the termstats parquet with pyarrow on the driver.
 #
-# A new global-stats sidecar therefore reuses every generation's doc
+# A new global-stats sidecar therefore reuses every generation's index
 # cache and only re-reads the (vocabulary-sized) lexicon. A fingerprint
 # folds in stats.json's (mtime, size), so a rebuilt index or sidecar at
-# the same path is never reused stale; doc entries are evicted
-# oldest-first at _DOC_CACHE_MAX to keep long sessions bounded, and
+# the same path is never reused stale; index entries are evicted
+# oldest-first at _INDEX_CACHE_MAX to keep long sessions bounded, and
 # their stats entries go with them. A caller that unions several
 # indexes' lazy results (query_generations) looks them up inside
 # ``serving_states_pinned()``, so a later lookup in the same call never
 # evicts a cache the union still reads.
 
-_DOC_CACHE: dict[tuple, dict] = {}
+_INDEX_CACHE: dict[tuple, dict] = {}
 _STATS_CACHE: dict[tuple, dict] = {}
-_DOC_CACHE_MAX = 8
+_INDEX_CACHE_MAX = 8
 _PIN_SCOPES: list[set] = []
 
 
@@ -264,47 +258,59 @@ def _index_fingerprint(index_dir: str) -> tuple:
 def _serving_state(
     spark: SparkSession, index_dir: str, stats_dir: str | None = None
 ) -> dict:
-    """The doc side of ``index_dir`` merged with its stats side under
+    """The index side of ``index_dir`` merged with its stats side under
     ``stats_dir`` (or its own stats). Runs no Spark job."""
-    doc_key = (_index_fingerprint(index_dir), spark.sparkContext.applicationId)
+    index_key = (_index_fingerprint(index_dir), spark.sparkContext.applicationId)
     if _PIN_SCOPES:
-        _PIN_SCOPES[-1].add(doc_key)
-    docs = _DOC_CACHE.get(doc_key) or _doc_side(spark, index_dir, doc_key)
-    stats_key = (doc_key, _index_fingerprint(stats_dir) if stats_dir else None)
+        _PIN_SCOPES[-1].add(index_key)
+    side = _INDEX_CACHE.get(index_key)
+    if side is None:
+        side = _index_side(spark, index_dir, index_key)
+    elif not side["index"].storageLevel.useMemory:
+        _persist(spark, side["index"])  # dropped, e.g. by clearCache()
+    stats_key = (index_key, _index_fingerprint(stats_dir) if stats_dir else None)
     stats = _STATS_CACHE.get(stats_key) or _stats_side(
-        index_dir, stats_dir, docs["stats"], stats_key
+        index_dir, stats_dir, side["stats"], stats_key
     )
-    return {**docs, **stats}
+    return {**side, **stats}
 
 
-def _doc_side(spark: SparkSession, index_dir: str, key: tuple) -> dict:
+def _index_side(spark: SparkSession, index_dir: str, key: tuple) -> dict:
     # a rebuilt index at the same path gets a new fingerprint: drop any
-    # stale entry for the same resolved path first
-    for k in [k for k in _DOC_CACHE if k[0][0] == key[0][0]]:
+    # stale entry for the same resolved path first (a new read of the
+    # path would otherwise match the stale entry's cached plan)
+    for k in [k for k in _INDEX_CACHE if k[0][0] == key[0][0]]:
         _evict(k)
     pinned = set().union(*_PIN_SCOPES)
-    victims = [k for k in _DOC_CACHE if k not in pinned]
-    while victims and len(_DOC_CACHE) >= _DOC_CACHE_MAX:
+    victims = [k for k in _INDEX_CACHE if k not in pinned]
+    while victims and len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
         _evict(victims.pop(0))
     stats = load_stats(index_dir)
     n_buckets = int(stats["n_buckets"])
-    # doc rows are pre-shuffled by group key ONCE per index and cached
-    # in P partitions of it: the serving cogroup's required
-    # distribution is satisfied by the cache's hashpartitioning(gkey,
-    # P), so a query batch never re-shuffles the (large, static) doc
-    # side; only the tiny term+query relation moves per call, into the
-    # same P partitions
+    # the index is shuffled by group key ONCE and cached in P partitions
+    # of it: a grouped or cogrouped kernel over the cache finds its
+    # required distribution in the cache's hashpartitioning(gkey, P), so
+    # a query batch never re-shuffles the (large, static) index; at most
+    # a DataFrame batch's query rows move, into the same P partitions
     p = min(n_buckets, spark.sparkContext.defaultParallelism)
     gkeys = _group_keys(n_buckets, p)
     gkey = F.element_at(
         F.array(*[F.lit(g) for g in gkeys]), F.col("bucket") + 1
     ).alias("gkey")
-    index = read_index(spark, index_dir)
-    docs = (
-        index.filter(F.col("kind") == 0)
-        .select(gkey, "doc_idx", "dl", "url")
-        .repartition(p, "gkey")
+    index = read_index(spark, index_dir).select(
+        gkey, "kind", "doc_idx", "dl", "url", "term", "term_hash",
+        "postings", "blockmeta",
     )
+    state = {
+        "stats": stats,
+        "index": _persist(spark, index.repartition(p, "gkey")),
+        "gkeys": gkeys,
+    }
+    _INDEX_CACHE[key] = state
+    return state
+
+
+def _persist(spark: SparkSession, df: DataFrame) -> DataFrame:
     # The cached plan is planned without AQE. An adaptive cached plan
     # reports its partitioning only once it has run, so the first query
     # on a still-empty cache would plan an Exchange over the cache scan;
@@ -316,30 +322,9 @@ def _doc_side(spark: SparkSession, index_dir: str, key: tuple) -> dict:
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+        return df.persist(StorageLevel.MEMORY_AND_DISK)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    # pre-built term-row base plan (kind=1, projected to the kernel's
-    # term+query scan schema + term_hash for the per-call pushdown
-    # filter): building it once per index keeps per-query plan
-    # construction free of the spark.read.parquet file-listing and the
-    # projection py4j round-trips — at 10^5 segment files the listing
-    # alone would otherwise dominate single-query latency
-    term_rows_base = index.filter(F.col("kind") == 1).select(
-        gkey, "kind", "term", "postings", "blockmeta",
-        _null("string").alias("query_id"),
-        _null("long").alias("qtf"),
-        _null("double").alias("idf"),
-        "term_hash",
-    )
-    state = {
-        "stats": stats,
-        "docs": docs,
-        "gkeys": gkeys,
-        "term_rows_base": term_rows_base,
-    }
-    _DOC_CACHE[key] = state
-    return state
 
 
 def _stats_side(
@@ -347,13 +332,13 @@ def _stats_side(
 ) -> dict:
     # one stats entry per index for its own stats and one for an
     # overlay: a newer sidecar (or a rewritten one) replaces the older
-    doc_key, stats_fp = key
+    index_key, stats_fp = key
     for k in [
         k
         for k in _STATS_CACHE
-        if k[0] == doc_key and (k[1] is None) == (stats_fp is None)
+        if k[0] == index_key and (k[1] is None) == (stats_fp is None)
     ]:
-        _unpersist_bcs(_STATS_CACHE.pop(k))
+        del _STATS_CACHE[k]
     stats = own_stats
     if stats_dir is not None:
         # Global-stats overlay (streaming generations between
@@ -371,7 +356,7 @@ def _stats_side(
     # Driver-side lexicon {term: (term_hash, idf)}, read with pyarrow
     # ONCE per (index, stats) from the same local directory as
     # stats.json: (a) early-exits all-OOV queries without launching
-    # the main job, (b) shrinks the isin pushdown literals to terms
+    # the main job, (b) shrinks the isin filter literals to terms
     # actually present, (c) lets driver-held query batches resolve
     # (term, qtf, idf) with zero Spark jobs, and (d) gives a DataFrame
     # batch the idf rows of its terms. This is the classic search
@@ -387,55 +372,24 @@ def _stats_side(
         "stats": stats,
         "lexicon": dict(zip(ts.column("term").to_pylist(), zip(hashes, idfs))),
         "vocab": frozenset(hashes),
-        # k -> broadcast of the kernel config
-        "bc": {},
     }
     _STATS_CACHE[key] = state
     return state
 
 
-def _evict(doc_key: tuple) -> None:
-    state = _DOC_CACHE.pop(doc_key, None)
+def _evict(index_key: tuple) -> None:
+    state = _INDEX_CACHE.pop(index_key, None)
     if state is not None:
         try:
-            state["docs"].unpersist()
+            state["index"].unpersist()
         except Exception:
             pass
-    for k in [k for k in _STATS_CACHE if k[0] == doc_key]:
-        _unpersist_bcs(_STATS_CACHE.pop(k))
+    for k in [k for k in _STATS_CACHE if k[0] == index_key]:
+        del _STATS_CACHE[k]
 
 
-def _unpersist_bcs(stats_state: dict) -> None:
-    for bc in stats_state["bc"].values():
-        try:
-            bc.unpersist()
-        except Exception:
-            pass
-
-
-def _null(t: str):
-    return F.lit(None).cast(t)
-
-
-# unified term+query row: term rows (kind=1) and query rows (kind=2)
-# share this shape so ONE relation carries both to the per-bucket
-# kernel; doc rows arrive on the other (static, pre-partitioned,
-# cached) side of the cogroup. ``gkey`` is the bucket's group key.
-_TQ_COLS = [
-    "gkey", "kind", "term", "postings", "blockmeta", "query_id", "qtf", "idf"
-]
-_TQ_DDL = (
-    "gkey int, kind int, term string, postings binary, "
-    "blockmeta binary, query_id string, qtf long, idf double"
-)
-
-CANDIDATE_SCHEMA = StructType(
-    [
-        StructField("query_id", StringType(), False),
-        StructField("url", StringType(), False),
-        StructField("score", DoubleType(), False),
-    ]
-)
+CANDIDATE_SCHEMA = "query_id string, url string, score double"
+_RESULT_COLS = ["query_id", "rank", "url", "score"]
 
 
 def wand_topk(
@@ -455,35 +409,35 @@ def wand_topk(
     avgdl-independent, so block-max pruning stays exact.
 
     ``queries`` is either a DataFrame (query_id, query_string) — the
-    batch/pipeline shape, which takes the plan path — or a plain
-    ``[(query_id, query_string)]`` list for serving front-ends that
-    already hold the batch on the driver (TCP server, REPL, latency
-    bench), which takes the zero-pre-job fast path.
+    batch/pipeline shape, which takes the plan path and returns a lazy
+    result — or a plain ``[(query_id, query_string)]`` list for serving
+    front-ends that already hold the batch on the driver (TCP server,
+    REPL, CLI). The list form is EAGER: the call runs the one kernel
+    job, merges the per-bucket top-k lists on the driver and returns
+    them as a local relation, whose collect runs no Spark job.
 
     ``k=None`` returns the FULL ranked list per query (every matched
     doc, ranked) — parity with the reference poll endpoint, which
     returns the entire ranked list, not a top-k cut
     (/root/reference/src/server.rs:98-105).
 
-    Plan: queries are tokenized IN the plan (``query_tokens_col`` —
+    Plan path: queries are tokenized IN the plan (``query_tokens_col`` —
     no driver-side collect of the query batch, so a 10^5-query batch
     tokenizes across executors) and joined to a broadcast (term, idf)
     relation of the batch's terms only, built on the driver from the
     lexicon; the only driver round-trip is the distinct token-hash
     list (:func:`_batch_token_hashes`), which becomes the int64
-    pushdown predicate on the term-row parquet scan (the query
-    *vocabulary*, bounded by the lexicon, not the batch size). Doc rows
-    (dl) come from the per-index serving cache (block manager, not the
-    filesystem). The (query_id, term, qtf, idf) relation fans out to
-    every bucket's group key as kind=2 rows of the kernel's grouped
-    input -> applyInPandas per bucket, one wave of P tasks (local
-    top-k, urls resolved in-kernel from the doc rows already in the
-    group) -> window for the global top-k merge. No post-kernel join:
-    the candidate relation is already (query_id, url, score).
+    ``term_hash`` filter over the serving cache (the query
+    *vocabulary*, bounded by the lexicon, not the batch size). The
+    (query_id, term, qtf, idf) relation fans out to every bucket's
+    group key and is cogrouped with the cache -> one kernel call per
+    bucket, one wave of P tasks (local top-k, urls resolved in-kernel
+    from the doc rows in the group) -> window for the global top-k
+    merge.
 
-    The term_hash is ONLY a pushdown filter — the kernel matches
-    postings by the full term string, so a 60-bit collision between a
-    query term and another term in the bucket cannot mis-score.
+    The term_hash is ONLY a filter — the kernel matches postings by the
+    full term string, so a 60-bit collision between a query term and
+    another term in the bucket cannot mis-score.
     """
     return _wand_topk(spark, index_dir, queries, k, stats_dir, None)
 
@@ -525,175 +479,180 @@ def _wand_topk(
     :func:`_batch_token_hashes` if the caller already holds it."""
     state = _serving_state(spark, index_dir, stats_dir)
     stats = state["stats"]
-    avgdl, k1, b = stats["avgdl"], stats["k1"], stats["b"]
-    gkeys = state["gkeys"]
+    cfg = (stats["avgdl"], k, stats["k1"], stats["b"])
 
     if isinstance(queries, list):
-        # Fast path (driver-held batch): tokenize with the exact
-        # Python parity kernel and resolve (qtf, idf, term_hash) from
-        # the lexicon — ZERO Spark jobs before the main serving job;
-        # the fanned-out kind=2 rows become one Arrow-built
-        # LocalRelation, so no Python task runs before the kernel.
+        # Driver-held batch: tokenize with the exact Python parity
+        # kernel and resolve (qtf, idf, term_hash) from the lexicon,
+        # with no Spark job. The rows reach the kernel in its closure,
+        # so the one job is the grouped kernel over the cache.
         from ..functions.tokenize import query_tokens_py
 
-        qk_rows: list[tuple] = []
-        hashes_set: set[int] = set()
+        q_rows: list[tuple] = []
+        hashes: set[int] = set()
         for qid, qs in queries:
             qid, toks = str(qid), query_tokens_py(str(qs))
             for t in sorted(set(toks)):
                 ent = state["lexicon"].get(t)
-                if ent is None:
-                    continue
-                h, idf = ent
-                hashes_set.add(int(h))
-                qtf = toks.count(t)
-                qk_rows.extend(
-                    (g, 2, t, None, None, qid, qtf, float(idf))
-                    for g in gkeys
-                )
-        if not qk_rows:
+                if ent is not None:
+                    hashes.add(int(ent[0]))
+                    q_rows.append((qid, t, toks.count(t), float(ent[1])))
+        if not q_rows:
             return _empty_result(spark)
-        hashes = sorted(hashes_set)
-        qk = spark.createDataFrame(
-            pd.DataFrame(qk_rows, columns=_TQ_COLS), schema=_TQ_DDL
-        )
-    else:
-        # Plan path (DataFrame batch): the token-hash pre-job, then
-        # intersect with the lexicon's vocabulary driver-side. All-OOV
-        # batches return here without launching the main job.
-        if batch_hashes is None:
-            batch_hashes = _batch_token_hashes(queries)
-        hashes = sorted(batch_hashes & state["vocab"])
-        if not hashes:
-            return _empty_result(spark)
-
-        # (query_id, term, qtf, idf): qtf computed with array
-        # expressions (distinct terms x in-array count) instead of a
-        # groupBy — no Exchange; the per-term re-scan of the token
-        # array is O(L^2) on a ~10-token query string, i.e. free. The
-        # join to idf stays in the plan (executor-side), so a
-        # 10^5-query batch never funnels through the driver.
-        toks = query_tokens_col(F.col("query_string"))
-        qtok = queries.select(
-            "query_id",
-            F.explode(
-                F.transform(
-                    F.array_distinct(toks),
-                    lambda t: F.struct(
-                        t.alias("term"),
-                        F.size(F.filter(toks, lambda x: x == t))
-                        .cast("long")
-                        .alias("qtf"),
-                    ),
-                )
-            ).alias("tq"),
-        ).select(
-            "query_id",
-            F.col("tq.term").alias("term"),
-            F.col("tq.qtf").alias("qtf"),
-        )
-        # idf of the batch's terms only (a handful of rows, not the
-        # lexicon), as an Arrow-built LocalRelation: no Spark job. Every
-        # term with a batch hash is kept, so a 60-bit collision drops
-        # no term; the join on the term string then picks the right one.
-        wanted = set(hashes)
-        ts_small = spark.createDataFrame(
-            pd.DataFrame(
-                [(t, w) for t, (h, w) in state["lexicon"].items() if h in wanted],
-                columns=["term", "idf"],
-            ),
-            schema="term string, idf double",
-        )
-        qrel = qtok.join(F.broadcast(ts_small), "term").select(
-            "query_id", "term", "qtf", "idf"
-        )
-        # fan the query relation out to every bucket by exploding a
-        # literal group-key array — no join, no broadcast build
-        # (n_buckets is a build constant from stats.json)
-        qk = qrel.select(
-            "*",
-            F.explode(F.array(*[F.lit(g) for g in gkeys])).alias("gkey"),
-        ).select(
-            "gkey",
-            F.lit(2).alias("kind"),
-            "term",
-            _null("binary").alias("postings"),
-            _null("binary").alias("blockmeta"),
-            "query_id",
-            "qtf",
-            "idf",
-        )
-
-    bc = state["bc"].get(k)
-    if bc is None:
-        bc = spark.sparkContext.broadcast(
-            {"avgdl": avgdl, "k1": k1, "b": b, "k": k}
-        )
-        state["bc"][k] = bc
-    term_rows = (
-        state["term_rows_base"]
-        .filter(F.col("term_hash").isin(hashes))
-        .drop("term_hash")
-    )
-    tq = term_rows.unionByName(qk)
-
-    def run_bucket(
-        docs_pdf: pd.DataFrame, tq_pdf: pd.DataFrame
-    ) -> pd.DataFrame:
-        cfg = bc.value
-        kinds = tq_pdf["kind"].to_numpy()
-        terms_pdf = tq_pdf[kinds == 1]
-        qt_pdf = tq_pdf[kinds == 2]
-        n_docs = len(docs_pdf)
-        if n_docs == 0 or len(terms_pdf) == 0 or len(qt_pdf) == 0:
-            return pd.DataFrame(
-                columns=["query_id", "url", "score"]
-            ).astype({"score": "float64"})
-        doc_pos = docs_pdf["doc_idx"].to_numpy(dtype=np.int64)
-        dls = np.zeros(n_docs, dtype=np.int64)
-        dls[doc_pos] = docs_pdf["dl"].to_numpy(dtype=np.int64)
-        urls = np.empty(n_docs, dtype=object)
-        urls[doc_pos] = docs_pdf["url"].to_numpy(dtype=object)
-        by_term = {
-            t: (p, m)
-            for t, p, m in zip(
-                terms_pdf["term"], terms_pdf["postings"], terms_pdf["blockmeta"]
+        q_pdf = pd.DataFrame(q_rows, columns=["query_id", "term", "qtf", "idf"])
+        cands = (
+            _index_rows(state, hashes)
+            .groupBy("gkey")
+            .applyInPandas(
+                lambda idx: run_bucket(idx, q_pdf, cfg), schema=CANDIDATE_SCHEMA
             )
-        }
-        rows = []
-        for qid, grp in qt_pdf.groupby("query_id", sort=False):
-            entries = [
-                {
-                    "postings": by_term[t][0],
-                    "blockmeta": by_term[t][1],
-                    "idf": float(w),
-                    "qtf": int(n),
-                }
-                for t, n, w in zip(grp["term"], grp["qtf"], grp["idf"])
-                if t in by_term
-            ]
-            for doc_idx, score in maxscore_topk(
-                entries, dls, cfg["avgdl"], cfg["k"], cfg["k1"], cfg["b"]
-            ):
-                rows.append((qid, urls[doc_idx], score))
-        return pd.DataFrame(rows, columns=["query_id", "url", "score"])
+            .collect()
+        )
+        return _merged(spark, cands, k)
 
-    # scatter: the static doc side arrives via its cached
-    # hashpartitioning(gkey, P) — NO Exchange; the term+query side
-    # (tiny: query vocabulary x buckets) is the only per-batch shuffle,
-    # into the same P partitions: one task wave, one bucket per group
-    candidates = (
-        state["docs"]
-        .groupBy("gkey")
-        .cogroup(tq.groupBy("gkey"))
-        .applyInPandas(run_bucket, schema=CANDIDATE_SCHEMA)
+    # Plan path (DataFrame batch): the token-hash pre-job, then
+    # intersect with the lexicon's vocabulary driver-side. All-OOV
+    # batches return here without launching the main job.
+    if batch_hashes is None:
+        batch_hashes = _batch_token_hashes(queries)
+    hashes = batch_hashes & state["vocab"]
+    if not hashes:
+        return _empty_result(spark)
+
+    # (query_id, term, qtf, idf): qtf computed with array expressions
+    # (distinct terms x in-array count) instead of a groupBy — no
+    # Exchange; the per-term re-scan of the token array is O(L^2) on a
+    # ~10-token query string, i.e. free. The join to idf stays in the
+    # plan (executor-side), so a 10^5-query batch never funnels through
+    # the driver.
+    toks = query_tokens_col(F.col("query_string"))
+    qtok = queries.select(
+        "query_id",
+        F.explode(
+            F.transform(
+                F.array_distinct(toks),
+                lambda t: F.struct(
+                    t.alias("term"),
+                    F.size(F.filter(toks, lambda x: x == t))
+                    .cast("long")
+                    .alias("qtf"),
+                ),
+            )
+        ).alias("tq"),
+    ).select(
+        "query_id",
+        F.col("tq.term").alias("term"),
+        F.col("tq.qtf").alias("qtf"),
     )
-
+    # idf of the batch's terms only (a handful of rows, not the
+    # lexicon), as an Arrow-built LocalRelation: no Spark job. Every
+    # term with a batch hash is kept, so a 60-bit collision drops no
+    # term; the join on the term string then picks the right one.
+    ts_small = spark.createDataFrame(
+        pd.DataFrame(
+            [(t, w) for t, (h, w) in state["lexicon"].items() if h in hashes],
+            columns=["term", "idf"],
+        ),
+        schema="term string, idf double",
+    )
+    # fan the query relation out to every bucket by exploding a literal
+    # group-key array — no join, no broadcast build (n_buckets is a
+    # build constant from stats.json)
+    qk = qtok.join(F.broadcast(ts_small), "term").select(
+        F.explode(F.array(*[F.lit(g) for g in state["gkeys"]])).alias("gkey"),
+        "query_id", "term", "qtf", "idf",
+    )
+    # the cache side keeps its hashpartitioning(gkey, P): NO Exchange;
+    # the query rows are the only per-batch shuffle, into the same P
+    # partitions: one task wave, one bucket per group
+    candidates = (
+        _index_rows(state, hashes)
+        .groupBy("gkey")
+        .cogroup(qk.groupBy("gkey"))
+        .applyInPandas(
+            lambda idx, q: run_bucket(idx, q, cfg), schema=CANDIDATE_SCHEMA
+        )
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("url"))
     ranked = candidates.withColumn("rank", F.row_number().over(w))
     if k is not None:
         ranked = ranked.filter(F.col("rank") <= k)
-    return ranked.select("query_id", "rank", "url", "score")
+    return ranked.select(*_RESULT_COLS)
+
+
+def _index_rows(state: dict, hashes: set[int]) -> DataFrame:
+    """The cached doc rows and the term rows of ``hashes``.
+
+    Eleven negative hashes, which no term has (term hashes are 60-bit),
+    pad the IN list past Catalyst's InSet conversion threshold (10). A
+    short IN list is inlined into the generated code, so every new
+    query compiled new code (3 Janino compiles, ~0.15 s on a 4-CPU
+    host); an InSet's generated code takes its set by reference and is
+    compiled once.
+    """
+    wanted = F.col("term_hash").isin(sorted(hashes) + list(range(-11, 0)))
+    return state["index"].filter((F.col("kind") == 0) | wanted).drop("term_hash")
+
+
+def run_bucket(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame, cfg: tuple) -> pd.DataFrame:
+    """Every query's local top-k over one bucket: (query_id, url, score).
+
+    ``idx_pdf`` holds the bucket's doc rows (kind 0) and the term rows
+    of the batch's vocabulary (kind 1); ``q_pdf`` the batch's
+    (query_id, term, qtf, idf) rows; ``cfg`` is (avgdl, k, k1, b).
+    """
+    avgdl, k, k1, b = cfg
+    kinds = idx_pdf["kind"].to_numpy()
+    docs_pdf, terms_pdf = idx_pdf[kinds == 0], idx_pdf[kinds == 1]
+    n_docs = len(docs_pdf)
+    if n_docs == 0 or len(terms_pdf) == 0 or len(q_pdf) == 0:
+        return pd.DataFrame(columns=["query_id", "url", "score"]).astype(
+            {"score": "float64"}
+        )
+    doc_pos = docs_pdf["doc_idx"].to_numpy(dtype=np.int64)
+    dls = np.zeros(n_docs, dtype=np.int64)
+    dls[doc_pos] = docs_pdf["dl"].to_numpy(dtype=np.int64)
+    urls = np.empty(n_docs, dtype=object)
+    urls[doc_pos] = docs_pdf["url"].to_numpy(dtype=object)
+    by_term = {
+        t: (p, m)
+        for t, p, m in zip(
+            terms_pdf["term"], terms_pdf["postings"], terms_pdf["blockmeta"]
+        )
+    }
+    rows = []
+    for qid, grp in q_pdf.groupby("query_id", sort=False):
+        entries = [
+            {
+                "postings": by_term[t][0],
+                "blockmeta": by_term[t][1],
+                "idf": float(w),
+                "qtf": int(n),
+            }
+            for t, n, w in zip(grp["term"], grp["qtf"], grp["idf"])
+            if t in by_term
+        ]
+        for doc_idx, score in maxscore_topk(entries, dls, avgdl, k, k1, b):
+            rows.append((qid, urls[doc_idx], score))
+    return pd.DataFrame(rows, columns=["query_id", "url", "score"])
+
+
+def _merged(spark: SparkSession, cands: list, k: int | None) -> DataFrame:
+    """The global top-k of per-bucket candidates, ranked per query by
+    (score DESC, url ASC) — scores are already rounded to 6 places — as
+    an Arrow-built LocalRelation: collecting it runs no Spark job."""
+    ranked = sorted(cands, key=lambda r: (r.query_id, -r.score, r.url))
+    rows = [
+        (qid, rank, r.url, r.score)
+        for qid, grp in itertools.groupby(ranked, key=lambda r: r.query_id)
+        for rank, r in enumerate(itertools.islice(grp, k), 1)
+    ]
+    if not rows:
+        return _empty_result(spark)
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=_RESULT_COLS),
+        schema="query_id string, rank int, url string, score double",
+    )
 
 
 def _empty_result(spark: SparkSession) -> DataFrame:

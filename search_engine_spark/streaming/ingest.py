@@ -424,7 +424,7 @@ def query_generations(
     Per-generation local top-k is exact for that generation's docs;
     generations are doc-disjoint, so the global top-k is the k best of
     the per-generation candidates — one final window merge, identical in
-    shape to the multi-bucket merge inside ``wand_topk``.
+    shape to the multi-bucket merge of a DataFrame batch in ``wand_topk``.
 
     ``global_stats=True`` overlays the newest global-stats sidecar
     (:func:`merge_generation_stats`) onto every generation it covers —
@@ -454,7 +454,7 @@ def query_generations(
     # generation; each generation intersects them with its own lexicon
     hashes = _batch_token_hashes(queries) if isinstance(queries, DataFrame) else None
     # pinned: with more generations than the serving cache holds, a
-    # later generation's lookup must not evict the doc cache an earlier
+    # later generation's lookup must not evict the index cache an earlier
     # part of this (lazy) union still reads
     with serving_states_pinned():
         parts = [

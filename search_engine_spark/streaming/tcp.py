@@ -176,8 +176,8 @@ class TcpServingFrontend:
                 self._pending = []
             try:
                 # list form: the batch already lives on the driver, so
-                # wand_topk takes the zero-pre-job fast path (an
-                # Arrow-converted createDataFrame would hide that)
+                # wand_topk scores it in one job and merges on the driver
+                # (a createDataFrame batch would take the plan path)
                 rows = wand_topk(
                     self._spark,
                     self._index_dir,

@@ -31,7 +31,8 @@ from search_engine_spark.index.segments import (
 from search_engine_spark.query.scoring import bm25_topk
 from search_engine_spark.query.wand import maxscore_topk, wand_topk
 
-pytestmark = pytest.mark.skipif(
+# only the tests that read the reference corpus skip without it
+needs_reference = pytest.mark.skipif(
     not corpus.reference_available(), reason="reference corpus not present"
 )
 
@@ -49,6 +50,7 @@ def index_dir(spark, tmp_path_factory):
     return str(d)
 
 
+@needs_reference
 def test_segment_roundtrip_matches_relation(spark, index_dir):
     pages = corpus.reference_pages(spark)
     rel = {
@@ -68,6 +70,7 @@ def test_segment_roundtrip_matches_relation(spark, index_dir):
     assert got == rel
 
 
+@needs_reference
 def test_termstats_and_stats(spark, index_dir):
     stats = load_stats(index_dir)
     assert stats["n_docs"] == 100
@@ -84,6 +87,7 @@ def test_termstats_and_stats(spark, index_dir):
         assert abs(got[t][1] - expected[t][1]) < 1e-12, t
 
 
+@needs_reference
 def test_wand_rank_identical_to_oracle(spark, index_dir):
     pages = corpus.reference_pages(spark)
     queries = corpus.reference_queries_df(spark)
@@ -106,6 +110,7 @@ def test_wand_rank_identical_to_oracle(spark, index_dir):
         assert abs(ko[key][1] - kf[key][1]) < 2e-6, (key, ko[key], kf[key])
 
 
+@needs_reference
 def test_wand_full_list_matches_oracle(spark, index_dir):
     """k=None serves the FULL ranked list (reference poll endpoint
     parity, src/server.rs:98-105): every matched doc, rank-identical to
@@ -127,6 +132,7 @@ def test_wand_full_list_matches_oracle(spark, index_dir):
     assert len(full) > 10 * queries.count() / 2  # genuinely uncut
 
 
+@needs_reference
 def test_lineage_and_metrics(spark, index_dir):
     lin = read_lineage(spark, index_dir).collect()
     assert {r.bucket for r in lin} == set(range(N_BUCKETS))
@@ -139,6 +145,7 @@ def test_lineage_and_metrics(spark, index_dir):
         assert r.docs_per_sec is None or r.docs_per_sec > 0
 
 
+@needs_reference
 def test_resume_produces_identical_index(spark, tmp_path):
     pages = corpus.reference_pages(spark)
     full_dir = tmp_path / "full"
@@ -197,6 +204,7 @@ def test_maxscore_kernel_vs_bruteforce():
         assert got == expected, k
 
 
+@needs_reference
 def test_pfor_build_same_results_smaller_index(spark, tmp_path, index_dir):
     """A pfor build serves identical results to the varint build and
     produces smaller postings (per-block cheapest codec)."""
@@ -227,6 +235,7 @@ def test_pfor_build_same_results_smaller_index(spark, tmp_path, index_dir):
     assert seg_bytes(d) < seg_bytes(index_dir)
 
 
+@needs_reference
 def test_wand_large_query_batch_no_driver_tokenization(spark, index_dir):
     """A 10^4-row query batch is tokenized in the plan (executor-side
     query_tokens_col + broadcast join to the batch's idf rows) — wand_topk

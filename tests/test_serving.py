@@ -3,14 +3,17 @@ buckets), so they run without the reference corpus:
 
 - rank identity of ``wand_topk`` against the brute-force BM25 oracle
   (list-form single query, OOV query, DataFrame batch, ``k=None``)
-- one Python task wave per single query, no Spark job for an OOV query
+- an in-vocabulary list query is one Spark job with one Python task
+  wave, and collecting its result runs none; an OOV query runs no job
 - serving state for a fresh index runs no Spark job; the first query's
-  plan reads the (still empty) doc cache with no Exchange on its side
-  and pushes the term_hash filter into the one live parquet scan
-- the serving doc cache spreads buckets evenly over its partitions
+  plan reads the (still empty) index cache with no Exchange on its side
+  and filters it by term_hash, with no live parquet scan
+- the serving index cache survives ``spark.catalog.clearCache()`` and
+  is never reused stale for an index rebuilt at the same path
+- the serving index cache spreads buckets evenly over its partitions
 - ``query_generations`` over more generations than the serving cache
-  holds keeps every generation's doc cache persisted, collects a
-  batch's token hashes once, and keeps each generation's doc cache
+  holds keeps every generation's index cache persisted, collects a
+  batch's token hashes once, and keeps each generation's index cache
   across a new global-stats sidecar
 """
 
@@ -53,22 +56,28 @@ QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def served(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("serving") / "idx")
-    pages = corpus.synth_pages(spark, N_PAGES, seed=7).cache()
-    build_segments(spark, pages, d, n_buckets=N_BUCKETS, run_id="serve")
+def _bm25_full(spark, pages, index_dir, queries):
+    """The brute-force oracle's full ranked list per query over
+    ``pages``, with the stats of the index built from them."""
     postings = build_postings(pages)
-    stats = load_stats(d)
-    # the oracle's full ranked list per query; its top-k is rank <= k
-    full = bm25_topk(
-        spark.createDataFrame(QUERIES, "query_id string, query_string string"),
+    stats = load_stats(index_dir)
+    return bm25_topk(
+        spark.createDataFrame(queries, "query_id string, query_string string"),
         postings,
         doc_lengths(pages),
         term_stats(postings, stats["n_docs"]),
         stats["avgdl"],
         k=10**6,
     ).collect()
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("serving") / "idx")
+    pages = corpus.synth_pages(spark, N_PAGES, seed=7).cache()
+    build_segments(spark, pages, d, n_buckets=N_BUCKETS, run_id="serve")
+    # the oracle's full ranked list per query; its top-k is rank <= k
+    full = _bm25_full(spark, pages, d, QUERIES)
     pages.unpersist()
 
     def oracle(qids, k):
@@ -152,14 +161,21 @@ def test_dataframe_batch_and_full_list_rank_identical(spark, served):
 
 
 def test_single_query_runs_one_python_wave(spark, served, job_group):
+    """An in-vocabulary list query is ONE Spark job with one Python
+    stage of at most P tasks; its result is a local relation whose
+    collect runs no job. An OOV query runs no job at all."""
     d, _ = served
     sc = spark.sparkContext
     p = min(N_BUCKETS, sc.defaultParallelism)
     wand_topk(spark, d, [("warm", "w3")], k=10).collect()  # serving state
     with job_group() as jobs:
-        assert wand_topk(spark, d, [("q", "w5 w40 w300")], k=10).collect()
+        res = wand_topk(spark, d, [("q", "w5 w40 w300")], k=10)
+    assert len(jobs) == 1, jobs
     py = _python_stages(sc, jobs)
     assert len(py) == 1 and py[0][1] <= p, py
+    with job_group() as jobs:
+        assert res.collect()
+    assert jobs == []
     with job_group() as jobs:
         assert wand_topk(spark, d, [("q", "zzqx qqvv")], k=10).collect() == []
     assert jobs == []
@@ -184,44 +200,93 @@ def test_fresh_index_serves_with_no_setup_jobs(spark, served, tmp_path, job_grou
 
 
 def test_serving_plan_reads_empty_doc_cache_with_term_pushdown(spark, served, tmp_path):
-    """Plan guards on a fresh index, before any query filled its doc cache:
+    """Plan guards on a fresh index, before any query filled its cache:
 
-    - exactly ONE live parquet scan, the term rows; the doc rows come
-      from the serving cache (InMemoryTableScan), with no Exchange
-      between the cache and the cogroup;
-    - the term_hash predicate reaches the parquet reader
-      (PushedFilters) and the scan's ReadSchema excludes url /
-      encode_secs (column pruning).
+    - no live parquet scan: the index rows come from the serving cache
+      (InMemoryTableScan; its InMemoryRelation prints the FileScan it
+      is built from);
+    - no Exchange between the cache scan and the pandas kernel;
+    - the term_hash filter is applied over the cache scan.
     """
     fresh = _fresh_copy(served, tmp_path)
     plan = (
         wand_topk(spark, fresh, _queries_df(spark))
         ._jdf.queryExecution().executedPlan().toString()
     )
-    docs = wand._serving_state(spark, fresh)["docs"]
-    assert not _cache_relation(docs).cacheBuilder().isCachedColumnBuffersLoaded()
-    # an InMemoryRelation node prints the FileScan it was built from
-    assert plan.count("FileScan") - plan.count("InMemoryRelation") == 1, plan
+    index = wand._serving_state(spark, fresh)["index"]
+    assert not _cache_relation(index).cacheBuilder().isCachedColumnBuffersLoaded()
+    assert plan.count("FileScan") == plan.count("InMemoryRelation") == 1, plan
     lines = plan.splitlines()
     cg = next(i for i, ln in enumerate(lines) if "FlatMapCoGroupsInPandas" in ln)
-    # the doc side: the cogroup's sort over the cache scan, no Exchange
-    assert "Sort [gkey" in lines[cg + 1], plan
-    assert "InMemoryTableScan" in lines[cg + 2], plan
-    term_scans = [ln for ln in lines if "FileScan parquet" in ln and "term_hash" in ln]
-    assert len(term_scans) == 1, plan
-    pushed = term_scans[0].split("PushedFilters")[1]
-    assert "term_hash" in pushed, term_scans[0]
-    read_schema = term_scans[0].split("ReadSchema")[1]
-    assert "url" not in read_schema and "encode_secs" not in read_schema, read_schema
+    scan = next(i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln)
+    # the cache side: the cogroup's sort, the filter, the cache scan
+    between = lines[cg + 1 : scan]
+    assert cg < scan and not any("Exchange" in ln for ln in between), plan
+    assert any("Filter" in ln and "term_hash" in ln for ln in between), plan
+
+
+def test_serving_survives_clear_cache(spark, served, tmp_path):
+    """``spark.catalog.clearCache()`` between two queries: the second is
+    served from a re-persisted cache (InMemoryTableScan), same rows."""
+    fresh = _fresh_copy(served, tmp_path)
+    q = [QUERIES[1]]
+    first = wand_topk(spark, fresh, q, k=10).collect()
+    spark.catalog.clearCache()
+    again = wand_topk(spark, fresh, q, k=10).collect()
+    assert again == first
+    index = wand._serving_state(spark, fresh)["index"]
+    assert index.storageLevel.useMemory
+    assert _cache_relation(index).cacheBuilder().isCachedColumnBuffersLoaded()
+    spark.catalog.clearCache()
+    plan = wand_topk(spark, fresh, _queries_df(spark))._jdf.queryExecution()
+    assert "InMemoryTableScan" in plan.executedPlan().toString()
+
+
+def test_index_rebuilt_at_same_path_serves_new_pages(spark, tmp_path):
+    """Serve index A, rebuild other pages (same count) into the same
+    directory and serve again: both the index cache (doc rows and
+    postings) and the lexicon must be the new index's."""
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "idx")
+
+    def build(seed):
+        build_segments(spark, corpus.synth_pages(spark, 80, seed=seed), d, n_buckets=2)
+        return set(pq.read_table(f"{d}/termstats", columns=["term"]).column(0).to_pylist())
+
+    lex_a = build(3)
+    probe = [("a", "w1 w2 w3")]
+    wand_topk(spark, d, probe, k=10).collect()
+    wand_topk(spark, d, _queries_df(spark), k=10).collect()
+    shutil.rmtree(d)
+    pages_b = corpus.synth_pages(spark, 80, seed=11)
+    lex_b = build(11)
+    # synthetic words only: an index token may carry punctuation
+    only_a, only_b = (
+        sorted(t for t in x - y if re.fullmatch(r"w\d+", t))
+        for x, y in ((lex_a, lex_b), (lex_b, lex_a))
+    )
+    assert only_a and only_b
+    queries = probe + [
+        ("new", f"{only_b[0]} w1"),  # OOV to A's lexicon
+        ("old", f"{only_a[0]} {only_b[-1]}"),  # OOV to B's lexicon
+        ("gone", only_a[-1]),
+    ]
+    full = _bm25_full(spark, pages_b, d, queries)
+    expected = [r for r in full if r.rank <= 10]
+    assert {r.query_id for r in expected} == {"a", "new", "old"}
+    _assert_same_ranking(wand_topk(spark, d, queries, k=10).collect(), expected)
+    qdf = spark.createDataFrame(queries, "query_id string, query_string string")
+    _assert_same_ranking(wand_topk(spark, d, qdf, k=10).collect(), expected)
 
 
 def test_doc_cache_spreads_buckets_evenly(spark, served):
     d, _ = served
-    docs = wand._serving_state(spark, d)["docs"]
+    index = wand._serving_state(spark, d)["index"]
     p = min(N_BUCKETS, spark.sparkContext.defaultParallelism)
     per_part = [
         r.n
-        for r in docs.groupBy(F.spark_partition_id().alias("part"))
+        for r in index.groupBy(F.spark_partition_id().alias("part"))
         .agg(F.countDistinct("gkey").alias("n"))
         .collect()
     ]
@@ -260,7 +325,7 @@ def test_commit_rows_are_complete(spark, served):
 
 
 def test_query_generations_keeps_every_generation_cached(spark, tmp_path):
-    n_gens = wand._DOC_CACHE_MAX + 1
+    n_gens = wand._INDEX_CACHE_MAX + 1
     gen0 = tmp_path / "gen=0"
     build_segments(spark, corpus.synth_pages(spark, 40, seed=3), str(gen0), n_buckets=1)
     # copies are separate indexes to the serving cache (keyed by path)
@@ -272,8 +337,8 @@ def test_query_generations_keeps_every_generation_cached(spark, tmp_path):
     got = query_generations(spark, str(tmp_path), queries, k=5).collect()
     assert len(got) == 5
     cached = {
-        k[0][0]: s["docs"].is_cached
-        for k, s in wand._DOC_CACHE.items()
+        k[0][0]: s["index"].is_cached
+        for k, s in wand._INDEX_CACHE.items()
         if Path(k[0][0]).parent == tmp_path.resolve()
     }
     assert len(cached) == n_gens and all(cached.values()), cached
@@ -310,21 +375,21 @@ def test_query_generations_collects_token_hashes_once(
 
 def test_new_global_stats_reuse_doc_cache(spark, served, tmp_path):
     """A new global-stats sidecar only re-reads the lexicon: the
-    generation's filled doc cache serves the next query as it is."""
+    generation's filled index cache serves the next query as it is."""
     out = _generations(served, tmp_path, 1)
     gen = f"{out}/gen=0"
     queries = _queries_df(spark)
     sidecar = merge_generation_stats(spark, out)
     first = query_generations(spark, out, queries, k=10, global_stats=True).collect()
-    docs = wand._serving_state(spark, gen, sidecar)["docs"]
-    builder = _cache_relation(docs).cacheBuilder()
-    # every partition of the doc cache is resident in the block manager
+    index = wand._serving_state(spark, gen, sidecar)["index"]
+    builder = _cache_relation(index).cacheBuilder()
+    # every partition of the index cache is resident in the block manager
     assert builder.isCachedColumnBuffersLoaded()
     sidecar = merge_generation_stats(spark, out)
     assert sidecar.endswith("globalstats=2")
     again = query_generations(spark, out, queries, k=10, global_stats=True).collect()
     # the same persisted DataFrame, still resident: the second query
-    # read the doc side from the block manager, not from parquet
-    assert wand._serving_state(spark, gen, sidecar)["docs"] is docs
+    # read the index from the block manager, not from parquet
+    assert wand._serving_state(spark, gen, sidecar)["index"] is index
     assert builder.isCachedColumnBuffersLoaded()
     assert sorted(again) == sorted(first)

@@ -25,7 +25,8 @@ from search_engine_spark.streaming.ingest import (
 )
 from search_engine_spark.streaming.serve import poll_result, serve_stream
 
-pytestmark = pytest.mark.skipif(
+# only the tests that read the reference corpus skip without it
+needs_reference = pytest.mark.skipif(
     not corpus.reference_available(), reason="reference corpus not present"
 )
 
@@ -48,6 +49,7 @@ def _await(predicate, timeout=60.0, interval=0.5):
     return False
 
 
+@needs_reference
 def test_stream_ingest_and_serve(spark, tmp_path):
     rows = corpus.reference_pages_rows()
     in_dir = tmp_path / "in"
@@ -166,6 +168,7 @@ def test_stream_ingest_and_serve(spark, tmp_path):
     assert missing == []
 
 
+@needs_reference
 def test_compaction_equals_batch_index(spark, tmp_path):
     """compact_generations merges N generations into one whose query
     results (incl. scores) are identical to a single batch-built index
@@ -203,6 +206,7 @@ def test_compaction_equals_batch_index(spark, tmp_path):
     assert exp == gotk  # exact equality, scores included
 
 
+@needs_reference
 def test_global_stats_sidecar_equals_compaction_scores(spark, tmp_path):
     """merge_generation_stats + query_generations(global_stats=True)
     serve corpus-wide-consistent BM25 (idf over union df, global
@@ -298,6 +302,7 @@ def test_preview_results(spark):
     assert len(doc) == 1 and doc[0].text == "only line"
 
 
+@needs_reference
 def test_compaction_swap_is_atomic_for_readers(spark, tmp_path):
     """A reader polling list_generations/query_generations concurrently
     with compact_generations never observes zero or partial generations:
@@ -359,6 +364,7 @@ def test_compaction_swap_is_atomic_for_readers(spark, tmp_path):
     assert (Path(dest) / "stats.json").exists()
 
 
+@needs_reference
 def test_compaction_inherits_pfor_codec(spark, tmp_path):
     """Compacting a PFor index stays PFor (pfor=None inherits the
     newest generation's recorded layout) — the r2 hygiene finding that
