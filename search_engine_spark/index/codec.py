@@ -83,17 +83,17 @@ def varint_encode(values: np.ndarray) -> bytes:
     return varint_encode_with_lens(values)[0]
 
 
-def varint_decode(
-    data: bytes | memoryview | np.ndarray, prev_total: int | None = None
-) -> np.ndarray:
+def varint_decode(data: bytes | memoryview | np.ndarray) -> np.ndarray:
     """Decode a full LEB128 byte stream back to uint64. Vectorized."""
     a = np.frombuffer(data, dtype=np.uint8)
-    if len(a) == 0:
-        return np.empty(0, dtype=np.uint64)
     ends = (a & 0x80) == 0
+    if ends.all():  # every value < 128 (empty too): one byte each
+        return a.astype(np.uint64)
     gid = np.zeros(len(a), dtype=np.int64)
     np.cumsum(ends[:-1], out=gid[1:])
-    starts = np.flatnonzero(np.diff(gid, prepend=-1))
+    first = np.ones(len(a), dtype=bool)
+    first[1:] = ends[:-1]
+    starts = np.flatnonzero(first)
     offs = (np.arange(len(a)) - starts[gid]).astype(np.uint64)
     vals = (a.astype(np.uint64) & _U0x7F) << (offs * _U7)
     return np.add.reduceat(vals, starts)
@@ -763,37 +763,31 @@ def decode_blocks(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Decode only the selected blocks (sorted unique indices).
 
-    Returns (docids, tfs) for the postings in those blocks. Each block's
-    delta chain is anchored by the previous block's last_docid from the
-    metadata, so no other bytes are touched; PFor blocks are
-    self-describing (header carries n).
+    Returns (docids, tfs) for the postings in those blocks, equal to the
+    matching slices of :func:`decode_postings` (property-tested). Each
+    stream's selected byte ranges decode in ONE :func:`_decode_stream`
+    call; then every block's delta chain is re-anchored at once by the
+    previous block's last_docid from the metadata (-1 before block 0,
+    whose first gap is docid + 1), so no other bytes are touched. Every
+    block but a list's last holds ``block_size`` values, so the block
+    lengths need no scan of the bytes.
     """
-    mv = memoryview(postings)
-    docid_base = 0
-    tf_base = int(meta.docid_offs[-1])
-    docid_parts = []
-    tf_parts = []
-    for bi in np.asarray(block_idx, dtype=np.int64):
-        ds, de = int(meta.docid_offs[bi]), int(meta.docid_offs[bi + 1])
-        ts, te = int(meta.tf_offs[bi]), int(meta.tf_offs[bi + 1])
-        dchunk = mv[docid_base + ds : docid_base + de]
-        if meta.docid_codec[bi] == 0:
-            gaps = varint_decode(dchunk)
-        else:
-            gaps = pfor_decode_block(dchunk)
-        anchor = -1 if bi == 0 else int(meta.last_docids[bi - 1])
-        # Uniform anchor math: block 0's first gap is docid0 + 1 and the
-        # anchor is -1, so ids = anchor + cumsum(gaps) holds for every block.
-        ids = np.cumsum(gaps.astype(np.int64)) + anchor
-        docid_parts.append(ids)
-        tchunk = mv[tf_base + ts : tf_base + te]
-        if meta.tf_codec[bi] == 0:
-            tf_parts.append(varint_decode(tchunk))
-        else:
-            tf_parts.append(pfor_decode_block(tchunk))
-    if not docid_parts:
+    blocks = np.asarray(block_idx, dtype=np.int64)
+    if len(blocks) == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
-    return np.concatenate(docid_parts), np.concatenate(tf_parts)
+    a = np.frombuffer(postings, dtype=np.uint8)
+    d = meta.docid_offs.astype(np.int64)
+    t = meta.tf_offs.astype(np.int64) + d[-1]
+    gaps = _decode_stream(a, d[blocks], d[blocks + 1], meta.docid_codec[blocks])
+    tfs = _decode_stream(a, t[blocks], t[blocks + 1], meta.tf_codec[blocks])
+    counts = np.full(len(blocks), meta.block_size, dtype=np.int64)
+    counts[-1] = len(gaps) - meta.block_size * (len(blocks) - 1)
+    ids = np.cumsum(gaps.astype(np.int64))
+    first = np.cumsum(counts) - counts
+    anchors = np.where(blocks > 0, meta.last_docids[blocks - 1], -1)
+    # block i's ids are anchors[i] + cumsum of its own gaps
+    ids += np.repeat(anchors - ids[first] + gaps[first].astype(np.int64), counts)
+    return ids, tfs
 
 
 PFOR_HEADER = 4  # u8 width, u8 n_exceptions, u16 n_values
@@ -876,27 +870,3 @@ def pfor_encode_block(vals: np.ndarray) -> bytes:
         inter[1::2] = high
         exc = varint_encode(inter)
     return header.tobytes() + packed + exc
-
-
-def pfor_decode_block(data: "bytes | memoryview", n: int | None = None) -> np.ndarray:
-    """Decode one PForDelta block (self-describing header carries n)."""
-    a = np.frombuffer(data, dtype=np.uint8)
-    w = int(a[0])
-    n_exc = int(a[1])
-    n_hdr = int(a[2]) | (int(a[3]) << 8)
-    n = n_hdr
-    packed_len = (n * w + 7) // 8
-    if w == 0:
-        vals = np.zeros(n, dtype=np.uint64)
-    else:
-        bits = np.unpackbits(
-            a[PFOR_HEADER : PFOR_HEADER + packed_len], bitorder="little"
-        )[: n * w]
-        weights = np.uint64(1) << np.arange(w, dtype=np.uint64)
-        vals = bits.reshape(n, w).astype(np.uint64) @ weights
-    if n_exc:
-        exc = varint_decode(a[PFOR_HEADER + packed_len :].tobytes())
-        idx = exc[0::2].astype(np.int64)
-        high = exc[1::2]
-        vals[idx] |= high << np.uint64(w)
-    return vals

@@ -28,6 +28,14 @@ decoded:
    the brute-force oracle, making rank-identity well-defined under
    floating-point reassociation (SURVEY.md §7.4 determinism).
 
+A batch is scored batch-at-a-time per bucket: its queries share one
+decode memo (:func:`run_bucket`), so a term's blockmeta is parsed once
+and its full list decoded at most once, however many queries name it.
+A pruned-phase term already in the memo adds its whole list instead of
+its candidate blocks — the same scores on every candidate, because the
+blocks a candidate selects hold all of the term's postings for it —
+and only candidates enter the final pool, so the result is unchanged.
+
 Scatter-gather shape (reference mode 4, ``src/processor.rs:146-369``,
 re-expressed): the index is partitioned ONCE by doc bucket into a
 cache of P partitions; a query batch is scored by one kernel task per
@@ -103,6 +111,7 @@ def maxscore_topk(
     k: int | None,
     k1: float = 1.2,
     b: float = 0.75,
+    memo: dict | None = None,
 ) -> list[tuple[int, float]]:
     """Exact top-k for one query over one bucket.
 
@@ -113,30 +122,42 @@ def maxscore_topk(
     reference's poll endpoint serves the entire ranked list,
     src/server.rs:98-105) — theta pruning is disabled, every term is
     decoded exhaustively.
+
+    ``memo``, shared by a batch's calls over one bucket (same ``dls``,
+    avgdl, k1, b), keys the entries by their ``term``: each term's
+    BlockMeta and bound are computed once, its full decode (ids, norms)
+    at most once, and a pruned phase adds a memoized list whole (exact:
+    see the module docstring). Without one, each call decodes alone.
     """
     n_docs = len(dls)
     if not term_entries or n_docs == 0:
         return []
 
+    shared, memo = memo is not None, {} if memo is None else memo
     entries = []
-    for e in term_entries:
-        meta = BlockMeta(e["blockmeta"])
+    for i, e in enumerate(term_entries):
+        key = e["term"] if shared else i
+        rec = memo.get(key)  # [BlockMeta, max norm, (ids, norms) or None]
+        if rec is None:
+            meta = BlockMeta(e["blockmeta"])
+            rec = memo[key] = [meta, float(meta.max_norms(avgdl, k1=k1, b=b).max()), None]
         weight = e["qtf"] * e["idf"]
-        ub = weight * float(meta.max_norms(avgdl, k1=k1, b=b).max())
-        entries.append((ub, weight, meta, e["postings"]))
+        entries.append((weight * rec[1], weight, rec, e["postings"]))
     entries.sort(key=lambda x: -x[0])
     ubs = np.array([e[0] for e in entries])
 
     acc = np.zeros(n_docs, dtype=np.float64)
     theta = -np.inf
     switch_at = len(entries)
-    for i, (ub, weight, meta, postings) in enumerate(entries):
+    for i, (ub, weight, rec, postings) in enumerate(entries):
         rem = float(ubs[i:].sum())
         if theta >= rem:
             switch_at = i
             break
-        ids, tfs = decode_postings(postings, meta)
-        norms = bm25_norm(tfs, dls[ids], avgdl, k1=k1, b=b)
+        if rec[2] is None:
+            ids, tfs = decode_postings(postings, rec[0])
+            rec[2] = ids, bm25_norm(tfs, dls[ids], avgdl, k1=k1, b=b)
+        ids, norms = rec[2]
         acc[ids] += weight * norms
         if k is None:
             continue  # full-list mode: never raise theta, decode all
@@ -147,17 +168,19 @@ def maxscore_topk(
     if switch_at < len(entries):
         rem = float(ubs[switch_at:].sum())
         candidates = np.flatnonzero(acc + rem >= theta)
-        for ub, weight, meta, postings in entries[switch_at:]:
+        for ub, weight, (meta, _, full), postings in entries[switch_at:]:
             if len(candidates) == 0:
                 break
-            blocks = np.unique(
-                np.searchsorted(meta.last_docids, candidates)
-            )
-            blocks = blocks[blocks < meta.n_blocks]
-            if len(blocks) == 0:
-                continue
-            ids, tfs = decode_blocks(postings, meta, blocks)
-            norms = bm25_norm(tfs, dls[ids], avgdl, k1=k1, b=b)
+            if full is not None:
+                ids, norms = full
+            else:
+                # the blocks holding a candidate: candidates per fence
+                hits = np.searchsorted(candidates, meta.last_docids, side="right")
+                blocks = np.nonzero(np.diff(hits, prepend=0))[0]
+                if len(blocks) == 0:
+                    continue
+                ids, tfs = decode_blocks(postings, meta, blocks)
+                norms = bm25_norm(tfs, dls[ids], avgdl, k1=k1, b=b)
             acc[ids] += weight * norms
         pool = candidates
     else:
@@ -590,8 +613,11 @@ def _index_rows(state: dict, hashes: set[int]) -> DataFrame:
     host); an InSet's generated code takes its set by reference and is
     compiled once.
     """
-    wanted = F.col("term_hash").isin(sorted(hashes) + list(range(-11, 0)))
-    return state["index"].filter((F.col("kind") == 0) | wanted).drop("term_hash")
+    in_list = ", ".join(map(str, sorted(hashes) + list(range(-11, 0))))
+    # one SQL string, one py4j call: ``isin`` sends each literal to the
+    # JVM on its own (over 2,000 py4j commands for 500 hashes)
+    wanted = F.expr(f"kind = 0 OR term_hash IN ({in_list})")
+    return state["index"].filter(wanted).drop("term_hash")
 
 
 def run_bucket(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame, cfg: tuple) -> pd.DataFrame:
@@ -600,6 +626,9 @@ def run_bucket(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame, cfg: tuple) -> pd.Dat
     ``idx_pdf`` holds the bucket's doc rows (kind 0) and the term rows
     of the batch's vocabulary (kind 1); ``q_pdf`` the batch's
     (query_id, term, qtf, idf) rows; ``cfg`` is (avgdl, k, k1, b).
+    The queries share one :func:`maxscore_topk` memo for the call, so
+    each term is parsed once and decoded in full at most once per
+    bucket, however many of the batch's queries name it.
     """
     avgdl, k, k1, b = cfg
     kinds = idx_pdf["kind"].to_numpy()
@@ -620,19 +649,18 @@ def run_bucket(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame, cfg: tuple) -> pd.Dat
             terms_pdf["term"], terms_pdf["postings"], terms_pdf["blockmeta"]
         )
     }
-    rows = []
-    for qid, grp in q_pdf.groupby("query_id", sort=False):
-        entries = [
-            {
-                "postings": by_term[t][0],
-                "blockmeta": by_term[t][1],
-                "idf": float(w),
-                "qtf": int(n),
-            }
-            for t, n, w in zip(grp["term"], grp["qtf"], grp["idf"])
-            if t in by_term
-        ]
-        for doc_idx, score in maxscore_topk(entries, dls, avgdl, k, k1, b):
+    # each query's entries, in first-appearance order; a pandas groupby
+    # slices a frame per query, about a fifth of the kernel's profile
+    queries: dict[str, list[dict]] = {}
+    for qid, t, n, w in zip(q_pdf["query_id"], q_pdf["term"], q_pdf["qtf"], q_pdf["idf"]):
+        if t in by_term:
+            p, m = by_term[t]
+            queries.setdefault(qid, []).append(
+                {"term": t, "postings": p, "blockmeta": m, "idf": float(w), "qtf": int(n)}
+            )
+    rows, memo = [], {}
+    for qid, entries in queries.items():
+        for doc_idx, score in maxscore_topk(entries, dls, avgdl, k, k1, b, memo):
             rows.append((qid, urls[doc_idx], score))
     return pd.DataFrame(rows, columns=["query_id", "url", "score"])
 

@@ -1,5 +1,10 @@
 """Codec property tests (FIXTURES.md §3.5): varint/delta roundtrip,
-block-max invariants, standalone block decode."""
+block-max invariants, standalone block decode.
+
+``pfor_decode_block`` here is the per-block reference decoder: the
+codec decodes PFor blocks only in vectorized batches
+(``codec._decode_stream``), and these tests check it against this
+one-block-at-a-time decode."""
 
 from __future__ import annotations
 
@@ -9,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from search_engine_spark.index.codec import (
+    PFOR_HEADER,
     BlockMeta,
     bm25_norm,
     decode_blocks,
@@ -19,6 +25,26 @@ from search_engine_spark.index.codec import (
     varint_decode,
     varint_encode,
 )
+
+
+def pfor_decode_block(data: "bytes | memoryview") -> np.ndarray:
+    """Decode one PForDelta block (self-describing header carries n)."""
+    a = np.frombuffer(data, dtype=np.uint8)
+    w, n_exc = int(a[0]), int(a[1])
+    n = int(a[2]) | (int(a[3]) << 8)
+    packed_len = (n * w + 7) // 8
+    if w == 0:
+        vals = np.zeros(n, dtype=np.uint64)
+    else:
+        bits = np.unpackbits(
+            a[PFOR_HEADER : PFOR_HEADER + packed_len], bitorder="little"
+        )[: n * w]
+        weights = np.uint64(1) << np.arange(w, dtype=np.uint64)
+        vals = bits.reshape(n, w).astype(np.uint64) @ weights
+    if n_exc:
+        exc = varint_decode(a[PFOR_HEADER + packed_len :].tobytes())
+        vals[exc[0::2].astype(np.int64)] |= exc[1::2] << np.uint64(w)
+    return vals
 
 
 @given(
@@ -150,7 +176,7 @@ def test_batch_encode_matches_single():
 
 def test_pfor_block_roundtrip():
     rng = np.random.default_rng(3)
-    from search_engine_spark.index.codec import pfor_decode_block, pfor_encode_block
+    from search_engine_spark.index.codec import pfor_encode_block
 
     cases = [
         np.ones(128, dtype=np.uint64),                       # w=0 or 1
@@ -239,8 +265,6 @@ def test_pfor_large_block_size_rejected():
 def _decode_stream_reference(postings, blockmeta):
     """Per-block reference decode (the pre-vectorization semantics):
     each block independently varint- or pfor-decoded, concatenated."""
-    from search_engine_spark.index.codec import pfor_decode_block
-
     meta = BlockMeta(blockmeta)
     mv = memoryview(postings)
     out = []
@@ -284,16 +308,56 @@ def test_mixed_codec_batch_decode_matches_per_block(n, seed):
     assert tfs_v.tolist() == tfs.tolist()
 
 
+@given(
+    st.integers(min_value=1, max_value=1500),
+    st.sampled_from([37, 128]),
+    st.booleans(),
+    st.integers(0, 2**31),
+    st.data(),
+)
+@settings(max_examples=60, deadline=None)
+def test_decode_blocks_equals_full_decode_slices(n, block_size, pfor, seed, data):
+    """The vectorized ``decode_blocks`` equals the matching slices of
+    ``decode_postings`` for any sorted block selection: a drawn one, and
+    the empty selection, block 0, the last block and every other block.
+    Value regimes alternate per block, narrow (PFor is cheaper) and
+    mostly small with a quarter of wide outliers (varint is cheaper), so
+    ``pfor=True`` layouts mix the codecs block by block in both streams."""
+    rng = np.random.default_rng(seed)
+    narrow = (np.arange(n) // block_size) % 2 == 0
+    wide = rng.random(n) < 0.25
+    small = rng.integers(1, 100, n)
+    gaps = np.where(narrow, rng.integers(1, 3, n), np.where(wide, 1 << 36, small))
+    tfs = np.where(narrow, rng.geometric(0.5, n), np.where(wide, 60_000, small))
+    enc = encode_postings(
+        np.cumsum(gaps) - 1, tfs.astype(np.uint64), rng.integers(10, 500, size=n),
+        block_size=block_size, pfor=pfor,
+    )
+    meta = BlockMeta(enc.blockmeta)
+    if pfor and n > 4 * block_size:  # both regimes, several blocks each
+        for codec in (meta.docid_codec, meta.tf_codec):
+            assert 0 < codec.sum() < meta.n_blocks, codec
+    else:
+        assert pfor or not (meta.docid_codec.any() or meta.tf_codec.any())
+    all_ids, all_tfs = decode_postings(enc.postings, enc.blockmeta)
+    nb = meta.n_blocks
+    drawn = data.draw(st.lists(st.booleans(), min_size=nb, max_size=nb))
+    for sel in (np.flatnonzero(drawn), [], [0], [nb - 1], np.arange(0, nb, 2)):
+        sel = np.asarray(sel, dtype=np.int64)
+        ids, got_tfs = decode_blocks(enc.postings, meta, sel)
+        rows = [np.arange(bi * block_size, min((bi + 1) * block_size, n)) for bi in sel]
+        rows = np.concatenate(rows) if rows else np.empty(0, dtype=np.int64)
+        assert ids.dtype == np.int64 and ids.tolist() == all_ids[rows].tolist()
+        assert got_tfs.tolist() == all_tfs[rows].tolist()
+
+
 def test_pfor_cross_encoder_decode_compat():
     """Batch-path PFor blocks (two-candidate width search) are decode-
     compatible with the exhaustive single-block encoder's blocks, and
     never larger than the block's varint chunk (else _pfor_stream would
     have kept varint). Bimodal data is the case where the two width
     searches genuinely diverge."""
-    from search_engine_spark.index.codec import (
-        pfor_decode_block,
-        pfor_encode_block,
-    )
+    from search_engine_spark.index.codec import pfor_encode_block
 
     rng = np.random.default_rng(99)
     n = 128 * 300

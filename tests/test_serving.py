@@ -2,12 +2,14 @@
 buckets), so they run without the reference corpus:
 
 - rank identity of ``wand_topk`` against the brute-force BM25 oracle
-  (list-form single query, OOV query, DataFrame batch, ``k=None``)
+  (list-form single query, OOV query, DataFrame batch, ``k=None`` in
+  both forms)
 - an in-vocabulary list query is one Spark job with one Python task
   wave, and collecting its result runs none; an OOV query runs no job
 - serving state for a fresh index runs no Spark job; the first query's
   plan reads the (still empty) index cache with no Exchange on its side
-  and filters it by term_hash, with no live parquet scan
+  and filters it by term_hash, with no live parquet scan; that filter
+  is built in a constant number of py4j calls
 - the serving index cache survives ``spark.catalog.clearCache()`` and
   is never reused stale for an index rebuilt at the same path
 - the serving index cache spreads buckets evenly over its partitions
@@ -155,9 +157,10 @@ def test_dataframe_batch_and_full_list_rank_identical(spark, served):
     qdf = spark.createDataFrame(QUERIES, "query_id string, query_string string")
     qids = {qid for qid, _ in QUERIES}
     _assert_same_ranking(wand_topk(spark, d, qdf, k=10).collect(), oracle(qids, 10))
-    full = wand_topk(spark, d, QUERIES, k=None).collect()
-    assert len(full) > 10 * (len(QUERIES) - 1)  # genuinely uncut
-    _assert_same_ranking(full, oracle(qids, None))
+    for batch in (QUERIES, qdf):
+        full = wand_topk(spark, d, batch, k=None).collect()
+        assert len(full) > 10 * (len(QUERIES) - 1)  # genuinely uncut
+        _assert_same_ranking(full, oracle(qids, None))
 
 
 def test_single_query_runs_one_python_wave(spark, served, job_group):
@@ -223,6 +226,22 @@ def test_serving_plan_reads_empty_doc_cache_with_term_pushdown(spark, served, tm
     between = lines[cg + 1 : scan]
     assert cg < scan and not any("Exchange" in ln for ln in between), plan
     assert any("Filter" in ln and "term_hash" in ln for ln in between), plan
+
+
+def test_term_filter_is_built_in_constant_py4j_calls(spark, served, monkeypatch):
+    """The batch's term filter costs a few py4j calls, not one per hash
+    (a Column built with ``isin`` sends each literal to the JVM), and
+    keeps Catalyst's InSet, so a new vocabulary compiles no new code."""
+    state = wand._serving_state(spark, served[0])
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+    monkeypatch.setattr(client, "send_command", lambda *a, **kw: sent.append(1) or send(*a, **kw))
+    rows = wand._index_rows(state, set(range(1, 501)))
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 10, len(sent)
+    plan = rows._jdf.queryExecution().optimizedPlan().toString()
+    assert "INSET" in plan.upper(), plan
 
 
 def test_serving_survives_clear_cache(spark, served, tmp_path):
