@@ -397,15 +397,14 @@ def bench_query_latency(spark, sf_dir: str, out_dir: str) -> dict:
     build_segments(spark, docs, out_dir, n_buckets=32, run_id="latency-bench")
     # Warmup (codegen + python workers + JIT tiering) outside the
     # timings. Queries go in LIST form — the serving front-ends' shape —
-    # so the zero-pre-job fast path is what gets measured (an Arrow
-    # createDataFrame batch arrives as a LogicalRDD and silently falls
-    # back to the plan path). One full untimed pass, not one query:
+    # so no job to collect the batch is measured (a DataFrame batch
+    # adds one). One full untimed pass, not one query:
     # BASELINE.md's round-5 replication showed a single-query warmup
     # leaves the first timed pass partially cold (p50 0.566 on rep 1 vs
     # 0.319/0.299 on reps 2-3 of identical code) — different queries
     # prune to different segment buckets, so one query warms one
-    # bucket's pages and JIT profile, not the index. The batch-10 plan
-    # shape is warmed separately (its literal fanout differs). The pass
+    # bucket's pages and JIT profile, not the index. The batch-10 call
+    # is warmed separately (its term filter differs). The pass
     # count is disclosed in the returned dict.
     for i, q in enumerate(REFERENCE_QUERIES):
         wand_topk(spark, out_dir, [(f"w{i + 1:02d}", q)]).collect()

@@ -276,8 +276,9 @@ def q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     north_rule's rank-identity check (fast path == brute force).
 
     The segment index is built into a per-corpus scratch directory and
-    the result DataFrame is returned lazily — no driver-side
-    collect/re-create round-trip. The cache key folds in a fingerprint
+    served eagerly: the query batch is collected once, scored in one
+    kernel job and merged on the driver into a local relation. The
+    cache key folds in a fingerprint
     of the source parquet files (names + sizes + mtimes), so a
     regenerated corpus at the same path never silently reuses a stale
     index, and the build runs under an exclusive flock so two sessions

@@ -157,8 +157,10 @@ def _pfor_stream(
     of (a) its LEB128 varint chunk (already encoded: ``varint_buf`` with
     per-value byte offsets ``vcum``), (b) frame-of-reference bit packing
     at the block's max bit width, (c) PFor: packing at the 7/8-quantile
-    width with varint-patched exceptions. Candidates (b)/(c) use the
-    self-describing block layout of :func:`pfor_encode_block`. Entirely
+    width with varint-patched exceptions. Candidates (b)/(c) use one
+    self-describing block layout: [u8 width][u8 n_exc][u16 n][low bits,
+    bit-packed, byte-aligned][varint (position, high bits) pairs for the
+    exceptions]. Entirely
     vectorized: histograms, width choice, bit packing (one global
     np.packbits) and exception varints each run once over the whole
     batch.
@@ -386,9 +388,10 @@ def encode_postings_batch(
     ``starts``/``ends`` give each term's slice. With ``pfor=False`` the
     output is byte-identical to calling :func:`encode_postings` per term
     (asserted in tests); with ``pfor=True`` :func:`encode_postings`
-    delegates HERE, and the single-block reference encoder
-    (:func:`pfor_encode_block`) is only decode-compatible, not
-    byte-identical (see its docstring). The varint encode, delta encode,
+    delegates HERE. Its PFor width search tries two candidates per
+    block, so its blocks are decode-compatible with, but not
+    byte-identical to, an exhaustive-width single-block encoder's (the
+    reference encoder in ``tests/test_codec.py``). The varint encode, delta encode,
     block splitting, and block-max reductions each run ONCE over the
     whole batch — the per-term Python work collapses to buffer slicing. This is what makes the index build's docs/sec scale:
     the encode stage's cost per posting is a few vectorized numpy passes,
@@ -405,7 +408,7 @@ def encode_postings_batch(
         return []
     if pfor and block_size > 0xFFFF:
         # the PFor block header stores the value count in a u16
-        # (pfor_encode_block enforces the same bound); without this guard
+        # (see _pfor_stream's block layout); without this guard
         # a larger block_size silently truncates n and decodes garbage
         raise ValueError(
             f"pfor=True requires block_size <= 65535 (u16 header), "
@@ -804,69 +807,3 @@ def bit_lengths(v: np.ndarray) -> np.ndarray:
         tmp[m] >>= np.uint64(s)
     bl += (tmp > 0).astype(np.uint8)
     return bl
-
-
-def pfor_encode_block(vals: np.ndarray) -> bytes:
-    """Encode one block as PForDelta: patched frame-of-reference.
-
-    Layout: [u8 width][u8 n_exc][u16 n][bitpacked low bits, byte-aligned]
-    [exceptions: varint (position, high_bits) pairs]. The width is
-    chosen by exact cost minimization over all candidate widths (the
-    per-block "cheapest" rule; exceptions patch values wider than the
-    frame). Single-block reference encoder. The batch path in
-    :func:`encode_postings_batch` trades the exhaustive width search for
-    a two-candidate one ({7/8-quantile, max} — ``_pfor_stream``), so its
-    blocks are DECODE-compatible but not byte-identical to this
-    encoder's; the cross-encoder property test
-    (``tests/test_codec.py::test_pfor_cross_encoder_decode_compat``)
-    asserts both decode to the same values and the batch block is never
-    larger than the block's varint encoding.
-    """
-    v = np.ascontiguousarray(vals, dtype=np.uint64)
-    n = len(v)
-    if n == 0 or n > 0xFFFF:
-        raise ValueError("pfor block size out of range")
-    bl = bit_lengths(v)
-    max_bl = int(bl.max()) if n else 0
-    best_w, best_cost = max_bl, None
-    for w in range(0, max_bl + 1):
-        exc_mask = bl > w
-        n_exc = int(exc_mask.sum())
-        if n_exc > 255:
-            continue
-        exc_cost = 0
-        if n_exc:
-            highs = v[exc_mask] >> np.uint64(w)
-            exc_cost = n_exc + int(
-                np.sum((bit_lengths(highs).astype(np.int64) + 6) // 7)
-            )
-        cost = PFOR_HEADER + (n * w + 7) // 8 + exc_cost
-        if best_cost is None or cost < best_cost:
-            best_cost, best_w = cost, w
-    w = best_w
-    exc_mask = bl > w
-    n_exc = int(exc_mask.sum())
-    header = np.zeros(PFOR_HEADER, dtype=np.uint8)
-    header[0] = w
-    header[1] = n_exc
-    header[2:4] = np.frombuffer(
-        np.uint16(n).tobytes(), dtype=np.uint8
-    )
-    low = v & ((np.uint64(1) << np.uint64(w)) - np.uint64(1)) if w else v * 0
-    if w:
-        bits = ((low[:, None] >> np.arange(w, dtype=np.uint64)) & 1).astype(
-            np.uint8
-        )
-        packed = np.packbits(bits.ravel(), bitorder="little").tobytes()
-        packed = packed[: (n * w + 7) // 8]
-    else:
-        packed = b""
-    exc = b""
-    if n_exc:
-        idx = np.flatnonzero(exc_mask).astype(np.uint64)
-        high = v[exc_mask] >> np.uint64(w)
-        inter = np.empty(2 * n_exc, dtype=np.uint64)
-        inter[0::2] = idx
-        inter[1::2] = high
-        exc = varint_encode(inter)
-    return header.tobytes() + packed + exc

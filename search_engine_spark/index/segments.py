@@ -15,7 +15,8 @@ Iceberg runtime jars, so this is the documented fallback per SURVEY.md
                                 kind=1 term rows (term_hash, term, df,
                                 postings, blockmeta, encode_secs)
       termstats/*.parquet       (term, term_hash, df, idf) global
-      lineage.parquet           one row per committed bucket per run
+      lineage.parquet           one row per committed bucket per run,
+                                its segment_path relative to <out_dir>
       metrics.parquet           per-bucket throughput/size rows
       stats.json                written LAST (completion marker):
                                 N, avgdl, n_buckets, k1, b
@@ -556,7 +557,7 @@ def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
     by_bucket = {r.bucket: r for r in agg_rows}
     now = time.time()
     lineage_rows = [
-        (run_id, int(bkt), "committed", f"{out}/index/bucket={bkt}",
+        (run_id, int(bkt), "committed", f"index/bucket={bkt}",
          int(by_bucket[bkt].input_docs if bkt in by_bucket else 0), now)
         for bkt in sorted(todo_set)
     ]

@@ -42,10 +42,11 @@ cache of P partitions; a query batch is scored by one kernel task per
 partition, each computing every query's exact local top-k per bucket
 (the reference's shard partials), and a small merge combines them
 into the global top-k (the reference's ``aggregate_result`` merge,
-``src/lib.rs:190-226``). A driver-held (list-form) batch is merged on
-the driver, which receives at most ``n_buckets * k`` rows per query; a
-DataFrame batch is merged by a window in the plan, so a 10^5-query
-batch never funnels through the driver.
+``src/lib.rs:190-226``). The merge runs on the driver, which receives
+at most ``n_buckets * k`` rows per query, as one Arrow sort and rank
+(REPOSE, ICDE 2021, serves top-k the same way: a local top-k per
+partition plus a small global merge). ``query_generations`` merges all
+its generations' candidates in the same single step.
 
 Placement: the kernel stage runs ``P = min(n_buckets, defaultParallelism)``
 tasks, ONE task wave. Each bucket gets a distinct int group key whose
@@ -62,10 +63,11 @@ JVM-only job. Workers start through ``session``'s zip-free daemon, so a
 task's ``importlib.invalidate_caches()`` no longer re-reads the
 directories of ``pyspark.zip`` and the spark-core jar (that made the
 1-task job 0.33-0.37 s). The rest of the gap is the Python worker round
-trip itself, so a list-form query is ONE Spark job: one grouped pandas
-stage over the cache, with no Exchange. Its result is an Arrow-built
-local relation (a JVM ``LocalRelation``) that collects with no job, and
-an all-OOV query returns a ``Limit 0`` relation that needs no job at all.
+trip itself, so a query batch is ONE kernel job: one grouped pandas
+stage over the cache, with no Exchange. A DataFrame batch adds the one
+job that collects it to the driver. The result is an Arrow-built local
+relation (a JVM ``LocalRelation``) that collects with no job, and an
+all-OOV batch returns a ``Limit 0`` relation that needs no kernel job.
 
 Data access: the serving cache holds the whole index, doc rows (kind
 0: doc_idx, dl, url) and term rows (kind 1: term, term_hash, postings,
@@ -75,10 +77,9 @@ per-call Exchange of index rows. A batch reads it through one filter,
 ``kind = 0 OR term_hash IN (batch vocabulary)``. The vocabulary and the
 idf come from the driver-side lexicon, read from the termstats parquet
 with pyarrow, so serving state for a newly committed index costs no
-Spark job: the first query fills the cache. A list-form batch's
-resolved (query_id, term, qtf, idf) rows travel in the kernel's
-closure; a DataFrame batch's are fanned out to every group key and
-cogrouped with the cache, so only they are shuffled. Inside the kernel,
+Spark job: the first query fills the cache. A batch is tokenized and
+resolved on the driver, and its (query_id, term, qtf, idf) rows travel
+in the kernel's closure, so no per-batch row is shuffled. Inside the kernel,
 postings are matched by the full term STRING (carried in the segment
 rows), so a 60-bit hash collision between a query term and another term
 in the bucket cannot mis-score; the hash is only a filter.
@@ -87,18 +88,19 @@ in the bucket cannot mis-score; the hash is only a filter.
 from __future__ import annotations
 
 import functools
-import itertools
 import os
 from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import query_tokens_col
+from ..functions.tokenize import query_tokens_py
 from .scoring import TOP_K
 from ..index.codec import BlockMeta, bm25_norm, decode_blocks, decode_postings
 from ..index.segments import load_stats, read_index
@@ -217,10 +219,10 @@ def maxscore_topk(
 # folds in stats.json's (mtime, size), so a rebuilt index or sidecar at
 # the same path is never reused stale; index entries are evicted
 # oldest-first at _INDEX_CACHE_MAX to keep long sessions bounded, and
-# their stats entries go with them. A caller that unions several
-# indexes' lazy results (query_generations) looks them up inside
-# ``serving_states_pinned()``, so a later lookup in the same call never
-# evicts a cache the union still reads.
+# their stats entries go with them. A caller that serves one batch
+# over several indexes (query_generations) looks them up inside
+# ``serving_states_pinned()``, so with more indexes than the bound a
+# later lookup in the same call never evicts an earlier one's cache.
 
 _INDEX_CACHE: dict[tuple, dict] = {}
 _STATS_CACHE: dict[tuple, dict] = {}
@@ -311,10 +313,9 @@ def _index_side(spark: SparkSession, index_dir: str, key: tuple) -> dict:
     stats = load_stats(index_dir)
     n_buckets = int(stats["n_buckets"])
     # the index is shuffled by group key ONCE and cached in P partitions
-    # of it: a grouped or cogrouped kernel over the cache finds its
-    # required distribution in the cache's hashpartitioning(gkey, P), so
-    # a query batch never re-shuffles the (large, static) index; at most
-    # a DataFrame batch's query rows move, into the same P partitions
+    # of it: the grouped kernel over the cache finds its required
+    # distribution in the cache's hashpartitioning(gkey, P), so a query
+    # batch never re-shuffles the (large, static) index
     p = min(n_buckets, spark.sparkContext.defaultParallelism)
     gkeys = _group_keys(n_buckets, p)
     gkey = F.element_at(
@@ -327,7 +328,6 @@ def _index_side(spark: SparkSession, index_dir: str, key: tuple) -> dict:
     state = {
         "stats": stats,
         "index": _persist(spark, index.repartition(p, "gkey")),
-        "gkeys": gkeys,
     }
     _INDEX_CACHE[key] = state
     return state
@@ -379,22 +379,19 @@ def _stats_side(
     # Driver-side lexicon {term: (term_hash, idf)}, read with pyarrow
     # ONCE per (index, stats) from the same local directory as
     # stats.json: (a) early-exits all-OOV queries without launching
-    # the main job, (b) shrinks the isin filter literals to terms
-    # actually present, (c) lets driver-held query batches resolve
-    # (term, qtf, idf) with zero Spark jobs, and (d) gives a DataFrame
-    # batch the idf rows of its terms. This is the classic search
+    # the kernel job, (b) shrinks the IN filter literals to terms
+    # actually present, and (c) resolves every query's (term, qtf,
+    # idf) on the driver with zero Spark jobs. This is the classic search
     # lexicon sidecar; at web scale (10^8 terms) it pages from disk or
     # degrades to a Bloom filter over term_hash with the idf join left
     # in the plan — identical serving semantics.
     ts = pq.read_table(
         f"{stats_dir or index_dir}/termstats", columns=["term", "term_hash", "idf"]
     )
-    hashes = ts.column("term_hash").to_pylist()
-    idfs = ts.column("idf").to_pylist()
+    entries = zip(ts.column("term_hash").to_pylist(), ts.column("idf").to_pylist())
     state = {
         "stats": stats,
-        "lexicon": dict(zip(ts.column("term").to_pylist(), zip(hashes, idfs))),
-        "vocab": frozenset(hashes),
+        "lexicon": dict(zip(ts.column("term").to_pylist(), entries)),
     }
     _STATS_CACHE[key] = state
     return state
@@ -432,175 +429,77 @@ def wand_topk(
     avgdl-independent, so block-max pruning stays exact.
 
     ``queries`` is either a DataFrame (query_id, query_string) — the
-    batch/pipeline shape, which takes the plan path and returns a lazy
-    result — or a plain ``[(query_id, query_string)]`` list for serving
-    front-ends that already hold the batch on the driver (TCP server,
-    REPL, CLI). The list form is EAGER: the call runs the one kernel
-    job, merges the per-bucket top-k lists on the driver and returns
-    them as a local relation, whose collect runs no Spark job.
+    batch/pipeline shape — or a plain ``[(query_id, query_string)]``
+    list for serving front-ends that already hold the batch on the
+    driver (TCP server, REPL, CLI). Both are served the same way, and
+    the call is EAGER: a DataFrame batch is collected once through
+    Arrow (one Spark job), every query is tokenized and resolved against
+    the driver-side lexicon, the one kernel job scores every bucket, and
+    the per-bucket top-k lists are merged on the driver and returned as
+    a local relation, whose collect runs no Spark job. The driver holds
+    the batch and receives at most ``n_buckets * k`` candidate rows per
+    query. A null query string matches nothing.
 
     ``k=None`` returns the FULL ranked list per query (every matched
     doc, ranked) — parity with the reference poll endpoint, which
     returns the entire ranked list, not a top-k cut
     (/root/reference/src/server.rs:98-105).
 
-    Plan path: queries are tokenized IN the plan (``query_tokens_col`` —
-    no driver-side collect of the query batch, so a 10^5-query batch
-    tokenizes across executors) and joined to a broadcast (term, idf)
-    relation of the batch's terms only, built on the driver from the
-    lexicon; the only driver round-trip is the distinct token-hash
-    list (:func:`_batch_token_hashes`), which becomes the int64
-    ``term_hash`` filter over the serving cache (the query
-    *vocabulary*, bounded by the lexicon, not the batch size). The
-    (query_id, term, qtf, idf) relation fans out to every bucket's
-    group key and is cogrouped with the cache -> one kernel call per
-    bucket, one wave of P tasks (local top-k, urls resolved in-kernel
-    from the doc rows in the group) -> window for the global top-k
-    merge.
-
     The term_hash is ONLY a filter — the kernel matches postings by the
     full term string, so a 60-bit collision between a query term and
     another term in the bucket cannot mis-score.
     """
-    return _wand_topk(spark, index_dir, queries, k, stats_dir, None)
+    kernel = _kernel(spark, index_dir, _query_batch(queries), k, stats_dir)
+    return _ranked(spark, [kernel], k)
 
 
-def _batch_token_hashes(queries: DataFrame) -> set[int]:
-    """The distinct 60-bit hashes of a query batch's tokens (explode +
-    md5, no join or broadcast), collected to the driver.
-
-    .distinct() before the collect: Catalyst plans a map-side partial
-    aggregate, so the driver receives only the batch's distinct
-    VOCABULARY (bounded by the lexicon), not one row per token
-    occurrence — a 10^5-query batch would otherwise funnel ~10^6 rows
-    through the driver. Callers that serve one batch over several
-    indexes (``query_generations``) collect it once and intersect it
-    with each index's vocabulary on the driver.
-    """
-    from ..pipeline.common import hash60_col
-
-    rows = (
-        queries.select(
-            F.explode(query_tokens_col(F.col("query_string"))).alias("t")
-        )
-        .select(hash60_col(F.col("t")).alias("h"))
-        .distinct()
-        .collect()
-    )
-    return {r.h for r in rows}
+def _query_batch(queries: DataFrame | list[tuple[str, str]]) -> list[tuple]:
+    """The batch as driver-held (query_id, query_string) pairs: a
+    DataFrame is collected once, through Arrow."""
+    if isinstance(queries, list):
+        return queries
+    batch = queries.select("query_id", "query_string").toArrow()
+    return list(zip(*(c.to_pylist() for c in batch.columns)))
 
 
-def _wand_topk(
+def _kernel(
     spark: SparkSession,
     index_dir: str,
-    queries: DataFrame | list[tuple[str, str]],
+    batch: list[tuple],
     k: int | None,
-    stats_dir: str | None,
-    batch_hashes: set[int] | None,
-) -> DataFrame:
-    """:func:`wand_topk`; ``batch_hashes`` is the DataFrame batch's
-    :func:`_batch_token_hashes` if the caller already holds it."""
+    stats_dir: str | None = None,
+) -> DataFrame | None:
+    """The kernel relation of ``batch`` over ``index_dir``: every
+    query's local top-k per bucket (``CANDIDATE_SCHEMA``), one grouped
+    pandas stage over the serving cache with no Exchange. None when no
+    query names a term of the lexicon, so an all-OOV batch runs no job.
+
+    Queries are tokenized with the exact Python parity kernel and
+    resolved to (query_id, term, qtf, idf) rows from the lexicon, with
+    no Spark job; the rows reach the kernel in its closure.
+    """
     state = _serving_state(spark, index_dir, stats_dir)
     stats = state["stats"]
     cfg = (stats["avgdl"], k, stats["k1"], stats["b"])
-
-    if isinstance(queries, list):
-        # Driver-held batch: tokenize with the exact Python parity
-        # kernel and resolve (qtf, idf, term_hash) from the lexicon,
-        # with no Spark job. The rows reach the kernel in its closure,
-        # so the one job is the grouped kernel over the cache.
-        from ..functions.tokenize import query_tokens_py
-
-        q_rows: list[tuple] = []
-        hashes: set[int] = set()
-        for qid, qs in queries:
-            qid, toks = str(qid), query_tokens_py(str(qs))
-            for t in sorted(set(toks)):
-                ent = state["lexicon"].get(t)
-                if ent is not None:
-                    hashes.add(int(ent[0]))
-                    q_rows.append((qid, t, toks.count(t), float(ent[1])))
-        if not q_rows:
-            return _empty_result(spark)
-        q_pdf = pd.DataFrame(q_rows, columns=["query_id", "term", "qtf", "idf"])
-        cands = (
-            _index_rows(state, hashes)
-            .groupBy("gkey")
-            .applyInPandas(
-                lambda idx: run_bucket(idx, q_pdf, cfg), schema=CANDIDATE_SCHEMA
-            )
-            .collect()
-        )
-        return _merged(spark, cands, k)
-
-    # Plan path (DataFrame batch): the token-hash pre-job, then
-    # intersect with the lexicon's vocabulary driver-side. All-OOV
-    # batches return here without launching the main job.
-    if batch_hashes is None:
-        batch_hashes = _batch_token_hashes(queries)
-    hashes = batch_hashes & state["vocab"]
-    if not hashes:
-        return _empty_result(spark)
-
-    # (query_id, term, qtf, idf): qtf computed with array expressions
-    # (distinct terms x in-array count) instead of a groupBy — no
-    # Exchange; the per-term re-scan of the token array is O(L^2) on a
-    # ~10-token query string, i.e. free. The join to idf stays in the
-    # plan (executor-side), so a 10^5-query batch never funnels through
-    # the driver.
-    toks = query_tokens_col(F.col("query_string"))
-    qtok = queries.select(
-        "query_id",
-        F.explode(
-            F.transform(
-                F.array_distinct(toks),
-                lambda t: F.struct(
-                    t.alias("term"),
-                    F.size(F.filter(toks, lambda x: x == t))
-                    .cast("long")
-                    .alias("qtf"),
-                ),
-            )
-        ).alias("tq"),
-    ).select(
-        "query_id",
-        F.col("tq.term").alias("term"),
-        F.col("tq.qtf").alias("qtf"),
-    )
-    # idf of the batch's terms only (a handful of rows, not the
-    # lexicon), as an Arrow-built LocalRelation: no Spark job. Every
-    # term with a batch hash is kept, so a 60-bit collision drops no
-    # term; the join on the term string then picks the right one.
-    ts_small = spark.createDataFrame(
-        pd.DataFrame(
-            [(t, w) for t, (h, w) in state["lexicon"].items() if h in hashes],
-            columns=["term", "idf"],
-        ),
-        schema="term string, idf double",
-    )
-    # fan the query relation out to every bucket by exploding a literal
-    # group-key array — no join, no broadcast build (n_buckets is a
-    # build constant from stats.json)
-    qk = qtok.join(F.broadcast(ts_small), "term").select(
-        F.explode(F.array(*[F.lit(g) for g in state["gkeys"]])).alias("gkey"),
-        "query_id", "term", "qtf", "idf",
-    )
-    # the cache side keeps its hashpartitioning(gkey, P): NO Exchange;
-    # the query rows are the only per-batch shuffle, into the same P
-    # partitions: one task wave, one bucket per group
-    candidates = (
+    q_rows: list[tuple] = []
+    hashes: set[int] = set()
+    for qid, qs in batch:
+        if qs is None:
+            continue  # str(None) would search for the word "none"
+        qid, toks = str(qid), query_tokens_py(str(qs))
+        for t in sorted(set(toks)):
+            ent = state["lexicon"].get(t)
+            if ent is not None:
+                hashes.add(int(ent[0]))
+                q_rows.append((qid, t, toks.count(t), float(ent[1])))
+    if not q_rows:
+        return None
+    q_pdf = pd.DataFrame(q_rows, columns=["query_id", "term", "qtf", "idf"])
+    return (
         _index_rows(state, hashes)
         .groupBy("gkey")
-        .cogroup(qk.groupBy("gkey"))
-        .applyInPandas(
-            lambda idx, q: run_bucket(idx, q, cfg), schema=CANDIDATE_SCHEMA
-        )
+        .applyInPandas(lambda idx: run_bucket(idx, q_pdf, cfg), schema=CANDIDATE_SCHEMA)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("url"))
-    ranked = candidates.withColumn("rank", F.row_number().over(w))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked.select(*_RESULT_COLS)
 
 
 def _index_rows(state: dict, hashes: set[int]) -> DataFrame:
@@ -665,22 +564,29 @@ def run_bucket(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame, cfg: tuple) -> pd.Dat
     return pd.DataFrame(rows, columns=["query_id", "url", "score"])
 
 
-def _merged(spark: SparkSession, cands: list, k: int | None) -> DataFrame:
-    """The global top-k of per-bucket candidates, ranked per query by
-    (score DESC, url ASC) — scores are already rounded to 6 places — as
-    an Arrow-built LocalRelation: collecting it runs no Spark job."""
-    ranked = sorted(cands, key=lambda r: (r.query_id, -r.score, r.url))
-    rows = [
-        (qid, rank, r.url, r.score)
-        for qid, grp in itertools.groupby(ranked, key=lambda r: r.query_id)
-        for rank, r in enumerate(itertools.islice(grp, k), 1)
-    ]
-    if not rows:
+def _ranked(spark: SparkSession, kernels: list, k: int | None) -> DataFrame:
+    """The global top-k of the kernels' candidates (None: no kernel),
+    each collected through Arrow, ranked per query by (score DESC, url
+    ASC) — scores are already rounded to 6 places — with one sort over
+    all of them, as an Arrow-built LocalRelation: collecting it runs no
+    Spark job."""
+    tables = [rel.toArrow() for rel in kernels if rel is not None]
+    n = sum(t.num_rows for t in tables)
+    if n == 0:
         return _empty_result(spark)
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=_RESULT_COLS),
-        schema="query_id string, rank int, url string, score double",
+    cands = pa.concat_tables(tables).sort_by(
+        [("query_id", "ascending"), ("score", "descending"), ("url", "ascending")]
     )
+    # rank = 1 + offset from the first row of the query's run
+    qids = cands.column("query_id").combine_chunks()
+    pos = np.arange(n)
+    first = np.ones(n, dtype=bool)
+    first[1:] = pc.not_equal(qids[1:], qids[:-1]).to_numpy(zero_copy_only=False)
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    ranked = cands.append_column("rank", pa.array(rank, pa.int32()))
+    if k is not None:
+        ranked = ranked.filter(pa.array(rank <= k))
+    return spark.createDataFrame(ranked.select(_RESULT_COLS))
 
 
 def _empty_result(spark: SparkSession) -> DataFrame:

@@ -415,7 +415,7 @@ def expire_generations(out_dir: str) -> list[str]:
 def query_generations(
     spark: SparkSession,
     out_dir: str,
-    queries: DataFrame,
+    queries: DataFrame | list[tuple[str, str]],
     k: int = 10,
     global_stats: bool = False,
 ) -> DataFrame:
@@ -423,8 +423,10 @@ def query_generations(
 
     Per-generation local top-k is exact for that generation's docs;
     generations are doc-disjoint, so the global top-k is the k best of
-    the per-generation candidates — one final window merge, identical in
-    shape to the multi-bucket merge of a DataFrame batch in ``wand_topk``.
+    the per-generation candidates. The batch is collected once; each
+    generation runs its own kernel job over its serving cache, and the
+    candidates of all of them are merged once on the driver, exactly as
+    ``wand_topk`` merges one index's buckets. Eager, like ``wand_topk``.
 
     ``global_stats=True`` overlays the newest global-stats sidecar
     (:func:`merge_generation_stats`) onto every generation it covers —
@@ -439,10 +441,7 @@ def query_generations(
     global idf for incremental availability, like segment-local stats in
     Lucene-style engines before merge.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..query.wand import _batch_token_hashes, _wand_topk, serving_states_pinned
+    from ..query.wand import _kernel, _query_batch, _ranked, serving_states_pinned
 
     gens = list_generations(out_dir)
     if not gens:
@@ -450,30 +449,13 @@ def query_generations(
     sidecar, covers = (None, set())
     if global_stats:
         sidecar, covers = latest_global_stats(out_dir)
-    # the batch's token hashes are collected once, not once per
-    # generation; each generation intersects them with its own lexicon
-    hashes = _batch_token_hashes(queries) if isinstance(queries, DataFrame) else None
-    # pinned: with more generations than the serving cache holds, a
-    # later generation's lookup must not evict the index cache an earlier
-    # part of this (lazy) union still reads
+    batch = _query_batch(queries)
+    # pinned: with more generations than the serving cache holds, no
+    # generation's lookup may evict another's cache: the kernels read
+    # them all, and each call would otherwise re-read evicted ones
     with serving_states_pinned():
-        parts = [
-            _wand_topk(
-                spark,
-                g,
-                queries,
-                k,
-                sidecar if Path(g).name in covers else None,
-                hashes,
-            )
+        kernels = [
+            _kernel(spark, g, batch, k, sidecar if Path(g).name in covers else None)
             for g in gens
         ]
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionByName(p)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("url"))
-    return (
-        unioned.withColumn("grank", F.row_number().over(w))
-        .filter(F.col("grank") <= k)
-        .select("query_id", F.col("grank").cast("int").alias("rank"), "url", "score")
-    )
+        return _ranked(spark, kernels, k)

@@ -177,7 +177,7 @@ class TcpServingFrontend:
             try:
                 # list form: the batch already lives on the driver, so
                 # wand_topk scores it in one job and merges on the driver
-                # (a createDataFrame batch would take the plan path)
+                # (a createDataFrame batch would add a job to collect it)
                 rows = wand_topk(
                     self._spark,
                     self._index_dir,

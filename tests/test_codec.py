@@ -1,10 +1,11 @@
 """Codec property tests (FIXTURES.md §3.5): varint/delta roundtrip,
 block-max invariants, standalone block decode.
 
-``pfor_decode_block`` here is the per-block reference decoder: the
-codec decodes PFor blocks only in vectorized batches
-(``codec._decode_stream``), and these tests check it against this
-one-block-at-a-time decode."""
+``pfor_decode_block`` and ``pfor_encode_block`` here are the per-block
+reference decoder and encoder: the codec encodes and decodes PFor
+blocks only in vectorized batches (``codec._pfor_stream``,
+``codec._decode_stream``), and these tests check it against this
+one-block-at-a-time code."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from hypothesis import strategies as st
 from search_engine_spark.index.codec import (
     PFOR_HEADER,
     BlockMeta,
+    bit_lengths,
     bm25_norm,
     decode_blocks,
     decode_postings,
@@ -45,6 +47,70 @@ def pfor_decode_block(data: "bytes | memoryview") -> np.ndarray:
         exc = varint_decode(a[PFOR_HEADER + packed_len :].tobytes())
         vals[exc[0::2].astype(np.int64)] |= exc[1::2] << np.uint64(w)
     return vals
+
+
+def pfor_encode_block(vals: np.ndarray) -> bytes:
+    """Encode one block as PForDelta: patched frame-of-reference.
+
+    Layout: [u8 width][u8 n_exc][u16 n][bitpacked low bits, byte-aligned]
+    [exceptions: varint (position, high_bits) pairs]. The width is
+    chosen by exact cost minimization over all candidate widths (the
+    per-block "cheapest" rule; exceptions patch values wider than the
+    frame). Single-block reference encoder. The codec's batch path
+    (``codec.encode_postings_batch``) trades the exhaustive width search for
+    a two-candidate one ({7/8-quantile, max} — ``_pfor_stream``), so its
+    blocks are DECODE-compatible but not byte-identical to this
+    encoder's; ``test_pfor_cross_encoder_decode_compat`` asserts both decode to the same values and the batch block is never
+    larger than the block's varint encoding.
+    """
+    v = np.ascontiguousarray(vals, dtype=np.uint64)
+    n = len(v)
+    if n == 0 or n > 0xFFFF:
+        raise ValueError("pfor block size out of range")
+    bl = bit_lengths(v)
+    max_bl = int(bl.max()) if n else 0
+    best_w, best_cost = max_bl, None
+    for w in range(0, max_bl + 1):
+        exc_mask = bl > w
+        n_exc = int(exc_mask.sum())
+        if n_exc > 255:
+            continue
+        exc_cost = 0
+        if n_exc:
+            highs = v[exc_mask] >> np.uint64(w)
+            exc_cost = n_exc + int(
+                np.sum((bit_lengths(highs).astype(np.int64) + 6) // 7)
+            )
+        cost = PFOR_HEADER + (n * w + 7) // 8 + exc_cost
+        if best_cost is None or cost < best_cost:
+            best_cost, best_w = cost, w
+    w = best_w
+    exc_mask = bl > w
+    n_exc = int(exc_mask.sum())
+    header = np.zeros(PFOR_HEADER, dtype=np.uint8)
+    header[0] = w
+    header[1] = n_exc
+    header[2:4] = np.frombuffer(
+        np.uint16(n).tobytes(), dtype=np.uint8
+    )
+    low = v & ((np.uint64(1) << np.uint64(w)) - np.uint64(1)) if w else v * 0
+    if w:
+        bits = ((low[:, None] >> np.arange(w, dtype=np.uint64)) & 1).astype(
+            np.uint8
+        )
+        packed = np.packbits(bits.ravel(), bitorder="little").tobytes()
+        packed = packed[: (n * w + 7) // 8]
+    else:
+        packed = b""
+    exc = b""
+    if n_exc:
+        idx = np.flatnonzero(exc_mask).astype(np.uint64)
+        high = v[exc_mask] >> np.uint64(w)
+        inter = np.empty(2 * n_exc, dtype=np.uint64)
+        inter[0::2] = idx
+        inter[1::2] = high
+        exc = varint_encode(inter)
+    return header.tobytes() + packed + exc
 
 
 @given(
@@ -176,8 +242,6 @@ def test_batch_encode_matches_single():
 
 def test_pfor_block_roundtrip():
     rng = np.random.default_rng(3)
-    from search_engine_spark.index.codec import pfor_encode_block
-
     cases = [
         np.ones(128, dtype=np.uint64),                       # w=0 or 1
         rng.integers(1, 4, size=128).astype(np.uint64),      # tiny widths
@@ -357,8 +421,6 @@ def test_pfor_cross_encoder_decode_compat():
     never larger than the block's varint chunk (else _pfor_stream would
     have kept varint). Bimodal data is the case where the two width
     searches genuinely diverge."""
-    from search_engine_spark.index.codec import pfor_encode_block
-
     rng = np.random.default_rng(99)
     n = 128 * 300
     # bimodal: mostly 3-bit gaps with ~13% 8-bit outliers — just over the

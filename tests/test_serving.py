@@ -3,20 +3,23 @@ buckets), so they run without the reference corpus:
 
 - rank identity of ``wand_topk`` against the brute-force BM25 oracle
   (list-form single query, OOV query, DataFrame batch, ``k=None`` in
-  both forms)
+  both forms); a null query string matches nothing in either form
 - an in-vocabulary list query is one Spark job with one Python task
-  wave, and collecting its result runs none; an OOV query runs no job
-- serving state for a fresh index runs no Spark job; the first query's
-  plan reads the (still empty) index cache with no Exchange on its side
+  wave, and collecting its result runs none; an OOV query runs no job;
+  a DataFrame batch is two jobs (its collect and the kernel)
+- serving state for a fresh index runs no Spark job; the first kernel
+  plan reads the (still empty) index cache with no Exchange above it
   and filters it by term_hash, with no live parquet scan; that filter
   is built in a constant number of py4j calls
 - the serving index cache survives ``spark.catalog.clearCache()`` and
   is never reused stale for an index rebuilt at the same path
 - the serving index cache spreads buckets evenly over its partitions
+- lineage names segment directories relative to the index root
 - ``query_generations`` over more generations than the serving cache
   holds keeps every generation's index cache persisted, collects a
-  batch's token hashes once, and keeps each generation's index cache
-  across a new global-stats sidecar
+  batch once and runs one kernel job per generation, serves a fresh
+  generation in at most 3 jobs, and keeps each generation's index
+  cache across a new global-stats sidecar
 """
 
 from __future__ import annotations
@@ -184,6 +187,41 @@ def test_single_query_runs_one_python_wave(spark, served, job_group):
     assert jobs == []
 
 
+def test_dataframe_batch_runs_collect_and_kernel_jobs(spark, served, job_group):
+    """A DataFrame batch on a warm index is exactly 2 Spark jobs: the
+    batch's collect and the kernel. Its result is a local relation
+    whose collect runs no job."""
+    d, oracle = served
+    wand_topk(spark, d, _queries_df(spark), k=10).collect()  # warm
+    qdf = _queries_df(spark)
+    with job_group() as jobs:
+        res = wand_topk(spark, d, qdf, k=10)
+    assert len(jobs) == 2, jobs
+    with job_group() as jobs:
+        got = res.collect()
+    assert jobs == []
+    _assert_same_ranking(got, oracle({qid for qid, _ in QUERIES}, 10))
+
+
+def test_null_query_string_matches_nothing(spark, tmp_path):
+    """A null query string is skipped, in both batch forms: it must not
+    search for the word "none", which this index holds."""
+    d = str(tmp_path / "idx")
+    pages = spark.createDataFrame(
+        [("u1", "none of these"), ("u2", "none and none"), ("u3", "other words")],
+        "url string, text string",
+    )
+    build_segments(spark, pages, d, n_buckets=2)
+    queries = [("null", None), ("none", "none"), ("other", "other")]
+    qdf = spark.createDataFrame(queries, "query_id string, query_string string")
+    for batch in (queries, qdf):
+        got = wand_topk(spark, d, batch, k=10).collect()
+        by_qid = {qid: sorted(r.url for r in got if r.query_id == qid) for qid, _ in queries}
+        assert by_qid == {"null": [], "none": ["u1", "u2"], "other": ["u3"]}, got
+    only_null = spark.createDataFrame([("null", None)], "query_id string, query_string string")
+    assert wand_topk(spark, d, only_null, k=10).collect() == []
+
+
 def test_fresh_index_serves_with_no_setup_jobs(spark, served, tmp_path, job_group):
     d, oracle = served
     fresh = _fresh_copy(served, tmp_path)
@@ -202,8 +240,22 @@ def test_fresh_index_serves_with_no_setup_jobs(spark, served, tmp_path, job_grou
     _assert_same_ranking(got, oracle({"multi"}, 10))
 
 
+def _assert_kernel_reads_cache(kernel):
+    """The kernel relation reads the serving cache (InMemoryTableScan)
+    through a term_hash Filter, with no Exchange above the scan."""
+    plan = kernel._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    scan = next(i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln)
+    above = lines[:scan]
+    assert any("FlatMapGroupsInPandas" in ln for ln in above), plan
+    assert not any("Exchange" in ln for ln in above), plan
+    assert any("Filter" in ln and "term_hash" in ln for ln in above), plan
+    return plan
+
+
 def test_serving_plan_reads_empty_doc_cache_with_term_pushdown(spark, served, tmp_path):
-    """Plan guards on a fresh index, before any query filled its cache:
+    """Plan guards on a fresh index's kernel relation, before any query
+    filled its cache:
 
     - no live parquet scan: the index rows come from the serving cache
       (InMemoryTableScan; its InMemoryRelation prints the FileScan it
@@ -212,20 +264,10 @@ def test_serving_plan_reads_empty_doc_cache_with_term_pushdown(spark, served, tm
     - the term_hash filter is applied over the cache scan.
     """
     fresh = _fresh_copy(served, tmp_path)
-    plan = (
-        wand_topk(spark, fresh, _queries_df(spark))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = _assert_kernel_reads_cache(wand._kernel(spark, fresh, QUERIES, 10))
     index = wand._serving_state(spark, fresh)["index"]
     assert not _cache_relation(index).cacheBuilder().isCachedColumnBuffersLoaded()
     assert plan.count("FileScan") == plan.count("InMemoryRelation") == 1, plan
-    lines = plan.splitlines()
-    cg = next(i for i, ln in enumerate(lines) if "FlatMapCoGroupsInPandas" in ln)
-    scan = next(i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln)
-    # the cache side: the cogroup's sort, the filter, the cache scan
-    between = lines[cg + 1 : scan]
-    assert cg < scan and not any("Exchange" in ln for ln in between), plan
-    assert any("Filter" in ln and "term_hash" in ln for ln in between), plan
 
 
 def test_term_filter_is_built_in_constant_py4j_calls(spark, served, monkeypatch):
@@ -257,8 +299,7 @@ def test_serving_survives_clear_cache(spark, served, tmp_path):
     assert index.storageLevel.useMemory
     assert _cache_relation(index).cacheBuilder().isCachedColumnBuffersLoaded()
     spark.catalog.clearCache()
-    plan = wand_topk(spark, fresh, _queries_df(spark))._jdf.queryExecution()
-    assert "InMemoryTableScan" in plan.executedPlan().toString()
+    _assert_kernel_reads_cache(wand._kernel(spark, fresh, QUERIES, 10))
 
 
 def test_index_rebuilt_at_same_path_serves_new_pages(spark, tmp_path):
@@ -330,6 +371,15 @@ def test_group_keys_follow_spark_hash_partitioning(spark):
     assert all(r.part == r.b % r.p for r in got)
 
 
+def test_lineage_paths_are_relative_to_the_index(spark, served):
+    """Lineage names each bucket's directory relative to the index
+    root, so a copied or moved index still names its own segments."""
+    d, _ = served
+    paths = {r.bucket: r.segment_path for r in read_lineage(spark, d).collect()}
+    assert paths == {b: f"index/bucket={b}" for b in range(N_BUCKETS)}
+    assert all(Path(d, p).is_dir() for p in paths.values())
+
+
 def test_commit_rows_are_complete(spark, served):
     d, _ = served
     lin = read_lineage(spark, d).collect()
@@ -363,19 +413,17 @@ def test_query_generations_keeps_every_generation_cached(spark, tmp_path):
     assert len(cached) == n_gens and all(cached.values()), cached
 
 
-def test_query_generations_collects_token_hashes_once(
+def test_query_generations_collects_the_batch_once(
     spark, served, tmp_path, job_group
 ):
     d, oracle = served
     generations = _generations(served, tmp_path, 3)
-    sc = spark.sparkContext
     queries = _queries_df(spark)
-    # planning runs only the token-hash collect: serving state runs none
-    with job_group() as one:
-        wand_topk(spark, d, queries, k=10)
-    with job_group() as three:
+    query_generations(spark, generations, queries, k=10)  # warm the caches
+    # the batch is collected once, then one kernel job per generation
+    with job_group() as jobs:
         res = query_generations(spark, generations, queries, k=10)
-    assert one and len(three) == len(one), (one, three)
+    assert len(jobs) == 1 + 3, jobs
     # every generation is the served index, with its own stats: each
     # oracle row appears once per generation
     qids = {qid for qid, _ in QUERIES}
@@ -390,6 +438,18 @@ def test_query_generations_collects_token_hashes_once(
             for i, r in enumerate(rows)
         ]
     _assert_same_ranking(res.collect(), expected)
+
+
+def test_fresh_generation_query_runs_at_most_three_jobs(
+    spark, served, tmp_path, job_group
+):
+    """A fresh one-generation query: the batch's collect and the kernel
+    job, which also fills the new generation's index cache."""
+    out = _generations(served, tmp_path, 1)
+    with job_group() as jobs:
+        got = query_generations(spark, out, _queries_df(spark), k=10)
+    assert len(jobs) <= 3, jobs
+    _assert_same_ranking(got.collect(), served[1]({qid for qid, _ in QUERIES}, 10))
 
 
 def test_new_global_stats_reuse_doc_cache(spark, served, tmp_path):
