@@ -15,7 +15,9 @@ Usage (north_rule packaging: library shipped via --py-files):
 
 The job is resumable: rerunning with the same --out skips committed
 buckets (lineage table) and rebuilds only missing ones; per-bucket
-docs/sec, postings/sec and segment sizes land in <out>/metrics.parquet.
+docs/sec, postings/sec and segment sizes land in <out>/metrics.parquet,
+and the printed summary carries the wall time of each build phase
+(encode + write, commit, finalize).
 All session sizing (executors, cores, memory, shuffle partitions) comes
 from spark-submit flags — the script only declares the dataflow.
 """

@@ -285,7 +285,8 @@ def q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     racing on the same scratch directory serialize instead of
     corrupting each other's lineage. Re-running the gate reuses the
     committed index: ``build_segments`` is idempotent (lineage-gated
-    resume), so a second call over a complete index is a metadata no-op.
+    resume), so a second call over a complete index runs no Spark job
+    and leaves ``stats.json``, and with it the serving cache, as it was.
     """
     import hashlib
     import tempfile

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import datetime as dt
 import hashlib
-import math
 import os
 from pathlib import Path
 
@@ -262,11 +261,6 @@ def synth_page_texts(seed: int, ids: np.ndarray) -> list[str]:
     return out
 
 
-def synth_page_text(seed: int, i: int) -> str:
-    """Single-page convenience wrapper over the batch kernel."""
-    return synth_page_texts(seed, np.array([i], dtype=np.uint64))[0]
-
-
 def _inv_norm_np(u: np.ndarray) -> np.ndarray:
     """Vectorized Beasley-Springer-Moro inverse normal CDF."""
     u = np.clip(u, 1e-12, 1 - 1e-12)
@@ -293,31 +287,6 @@ def _inv_norm_np(u: np.ndarray) -> np.ndarray:
         t = t + c[k] * sk
     tail_val = np.where(y > 0, t, -t)
     return np.where(central, cen_val, tail_val)
-
-
-def _inv_norm(u: float) -> float:
-    """Acklam-style inverse normal CDF approximation (deterministic)."""
-    u = min(max(u, 1e-12), 1 - 1e-12)
-    # Beasley-Springer-Moro
-    a = [2.50662823884, -18.61500062529, 41.39119773534, -25.44106049637]
-    b = [-8.47351093090, 23.08336743743, -21.06224101826, 3.13082909833]
-    c = [
-        0.3374754822726147, 0.9761690190917186, 0.1607979714918209,
-        0.0276438810333863, 0.0038405729373609, 0.0003951896511919,
-        0.0000321767881768, 0.0000002888167364, 0.0000003960315187,
-    ]
-    y = u - 0.5
-    if abs(y) < 0.42:
-        r = y * y
-        num = y * (((a[3] * r + a[2]) * r + a[1]) * r + a[0])
-        den = (((b[3] * r + b[2]) * r + b[1]) * r + b[0]) * r + 1.0
-        return num / den
-    r = u if y > 0 else 1 - u
-    s = math.log(-math.log(r))
-    t = c[0]
-    for k in range(1, 9):
-        t += c[k] * s**k
-    return t if y > 0 else -t
 
 
 def synth_pages(

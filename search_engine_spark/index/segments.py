@@ -13,10 +13,11 @@ Iceberg runtime jars, so this is the documented fallback per SURVEY.md
                                 discriminated by ``kind``:
                                 kind=0 doc rows  (doc_idx, url, dl)
                                 kind=1 term rows (term_hash, term, df,
-                                postings, blockmeta, encode_secs)
+                                postings, blockmeta)
       termstats/*.parquet       (term, term_hash, df, idf) global
-      lineage.parquet           one row per committed bucket per run,
-                                its segment_path relative to <out_dir>
+      lineage.parquet           one row per committed bucket per run:
+                                its segment_path relative to <out_dir>,
+                                doc count and dl sum
       metrics.parquet           per-bucket throughput/size rows
       stats.json                written LAST (completion marker):
                                 N, avgdl, n_buckets, k1, b
@@ -38,19 +39,25 @@ batched varint/PFor encode and the 60-bit term hash. The fronts:
   ``codec.decode_postings_batch``, and Arrow ``take`` for the term, url
   and dl columns): doc boundaries, term dictionary-encode, argsort.
 
-**No schema-inference jobs.** Every internal parquet read declares its
-schema (``INDEX_SCHEMA``, ``TERMSTATS_SCHEMA``, ``LINEAGE_SCHEMA``,
-``METRICS_SCHEMA``) and the committed-bucket set is read from lineage
-with pyarrow on the driver, so the Spark jobs a build runs are the
-bucket kernel's write, the commit and the stats/termstats finalize.
+**Four Spark jobs, no read-back.** A build runs the bucket kernel's
+write (its shuffle, none in map-side mode, and its write) and the
+termstats aggregate (its shuffle and its write), and nothing else.
+Every internal parquet read declares its schema (``INDEX_SCHEMA``,
+``TERMSTATS_SCHEMA``, ``LINEAGE_SCHEMA``, ``METRICS_SCHEMA``). The
+kernel reports each bucket's counts through an accumulator, so the
+commit writes lineage and metrics with pyarrow on the driver from
+those counts, and the committed-bucket set, N and avgdl are read back
+from lineage with pyarrow (n_buckets rows): no Spark job scans the
+index it has just written. A build over a complete index runs none.
 
 **One corpus pass.** The text front tokenizes exactly once and the
 kernel needs nothing else: the codec's block metadata stores the
 avgdl-independent bound pair ``(max_tf, min_dl)`` (codec.py), so
 nothing in a segment depends on corpus-global statistics and no
-pre-pass over the corpus is needed. Global stats (N, avgdl, idf) are
-derived afterwards from the *already-written* doc rows — a
-metadata-only aggregation, no text involved.
+pre-pass over the corpus is needed. N and avgdl are sums of the
+lineage rows' doc counts and dl sums; idf comes from the
+vocabulary-sized termstats aggregate over the written term rows — no
+text involved.
 
 Partitioning choice: **documents** are hash-partitioned into buckets and
 each bucket holds a full mini-index over its docs (local dense doc_idx).
@@ -80,12 +87,14 @@ termstats is durable, so its presence IS the completion marker
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import time
+import uuid
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -101,7 +110,7 @@ from pyspark.sql.types import (
 from .build import BM25_B, BM25_K1
 from .codec import encode_postings_batch
 
-CODEC_VERSION = 2
+CODEC_VERSION = 3
 
 # The segment row format: kind=0 doc rows, kind=1 term rows. One parquet
 # table carries both — the build emits them from ONE kernel and readers
@@ -120,8 +129,6 @@ INDEX_SCHEMA = StructType(
         StructField("df", LongType()),
         StructField("postings", BinaryType()),
         StructField("blockmeta", BinaryType()),
-        StructField("enc_bytes", LongType()),
-        StructField("encode_secs", DoubleType()),
     ]
 )
 
@@ -147,6 +154,7 @@ LINEAGE_SCHEMA = StructType(
         StructField("status", StringType(), False),
         StructField("segment_path", StringType(), False),
         StructField("input_docs", LongType(), False),
+        StructField("dl_sum", LongType(), False),
         StructField("committed_at", DoubleType(), False),
     ]
 )
@@ -191,7 +199,9 @@ def build_segments(
     faster encoder; flip it when segment storage/scan bytes matter more
     than one-time encode cost (usually true at 100 TB).
 
-    Returns a summary dict (buckets built, docs, elapsed).
+    Returns a summary dict: buckets built, docs, avgdl, completeness,
+    elapsed time and the wall time of each phase (encode + write,
+    commit, finalize).
     """
     # Bucket layout — two modes:
     #   n_buckets > 0: url-hash bucketing (repartition + url sort) —
@@ -257,7 +267,8 @@ def _build(
 ) -> dict:
     """The one build driver: layout record and check, resume clean-up,
     the bucket kernel over ``front``, commit, then the stats/termstats
-    finalize once every bucket is committed."""
+    finalize once every bucket is committed. Over a complete index it
+    runs nothing and returns the recorded stats."""
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     t0 = time.monotonic()
@@ -287,56 +298,65 @@ def _build(
     else:
         layout_path.write_text(json.dumps(layout))
 
-    committed = _committed_buckets(out)
+    committed = set(_lineage(out).column("bucket").to_pylist())
     _clean_uncommitted(out, committed)
 
     todo = sorted(set(range(n_buckets)) - committed)
     if fail_after_buckets is not None:
         todo = todo[:fail_after_buckets]
+    stats_path = out / "stats.json"
+    phases = dict.fromkeys(("encode_write_secs", "commit_secs", "finalize_secs"), 0.0)
     if todo:
-        _build_buckets(spark, part, front, out, todo, run_id, pfor)
-
-    complete = len(_committed_buckets(out)) == n_buckets
-    n_docs = avgdl = None
-    if complete:
-        # Corpus stats + global term stats from the committed index —
-        # metadata-only aggregations (no corpus/text pass).
-        agg = (
-            read_index(spark, str(out))
-            .filter(F.col("kind") == 0)
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-            .collect()[0]
-        )
-        n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-        _write_termstats(spark, out, n_docs)
-        stats = {
-            "n_docs": n_docs,
-            "avgdl": avgdl,
-            "n_buckets": n_buckets,
-            "k1": k1,
-            "b": b,
-        }
-        (out / "stats.json").write_text(json.dumps(stats))
-
+        t = time.monotonic()
+        counts = _build_buckets(part, front, out, todo, pfor)
+        t1 = time.monotonic()
+        _commit_buckets(out, todo, counts, run_id)
+        phases.update(encode_write_secs=t1 - t, commit_secs=time.monotonic() - t1)
+    if todo or not stats_path.exists():
+        # finalize once every bucket is committed: N and avgdl are sums
+        # of the lineage rows (a double sum of ints, as Spark's avg(dl)
+        # over the doc rows computes it), idf the termstats aggregate
+        t = time.monotonic()
+        lineage = _lineage(out)
+        if len(set(lineage.column("bucket").to_pylist())) == n_buckets:
+            n_docs = sum(lineage.column("input_docs").to_pylist())
+            dl_sum = sum(lineage.column("dl_sum").to_pylist())
+            _write_termstats(spark, out, n_docs)
+            stats = {
+                "n_docs": n_docs,
+                "avgdl": dl_sum / n_docs if n_docs else 0.0,
+                "n_buckets": n_buckets,
+                "k1": k1,
+                "b": b,
+            }
+            stats_path.write_text(json.dumps(stats))
+        phases["finalize_secs"] = time.monotonic() - t
+    stats = load_stats(out_dir) if stats_path.exists() else {}
+    n_docs = stats.get("n_docs")
     elapsed = time.monotonic() - t0
     return {
         "built_buckets": len(todo),
         "n_docs": n_docs,
-        "avgdl": avgdl,
-        "complete": complete,
+        "avgdl": stats.get("avgdl"),
+        "complete": bool(stats),
         "elapsed_secs": elapsed,
-        "docs_per_sec": (n_docs / elapsed) if (n_docs and elapsed > 0) else None,
+        "docs_per_sec": n_docs / elapsed if todo and n_docs and elapsed > 0 else None,
+        **phases,
     }
 
 
-def _committed_buckets(out: Path) -> set[int]:
-    # read on the driver with pyarrow: a handful of rows, no Spark job
+def _lineage(out: Path):
+    """The committed lineage rows as an Arrow table, read on the driver
+    with pyarrow (n_buckets rows, no Spark job); empty before the first
+    commit."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    lineage = out / "lineage.parquet"
-    if not lineage.exists():
-        return set()
-    return set(pq.read_table(lineage, columns=["bucket"]).column("bucket").to_pylist())
+    schema = to_arrow_schema(LINEAGE_SCHEMA)
+    path = out / "lineage.parquet"
+    if not path.exists():
+        return schema.empty_table()
+    return pq.read_table(path, schema=schema)
 
 
 def _clean_uncommitted(out: Path, committed: set[int]) -> None:
@@ -434,7 +454,20 @@ def _postings_front(tbl):
     )
 
 
-def _build_buckets(spark, part, front, out: Path, todo, run_id, pfor) -> None:
+class _BucketCounts(AccumulatorParam):
+    """Accumulator of the kernel's per-bucket counts, keyed by bucket:
+    a retried task's entry replaces its earlier attempt's instead of
+    adding to it."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, update):
+        acc.update(update)
+        return acc
+
+
+def _build_buckets(part, front, out: Path, todo, pfor) -> dict:
     """The bucket kernel — ZERO-SHUFFLE fused map-side indexing.
 
     Each partition (= bucket) of ``part`` flows through ONE Arrow
@@ -447,13 +480,18 @@ def _build_buckets(spark, part, front, out: Path, todo, run_id, pfor) -> None:
     is vocabulary-sized (termstats). This mirrors how doc-sharded web
     indexes scale: posting construction is embarrassingly parallel per
     shard.
+
+    Returns ``{bucket: (docs, dl_sum, terms, postings, encoded bytes,
+    encode secs)}`` for every bucket that held a document, reported by
+    the kernel through one accumulator, so the commit needs no scan of
+    what was written.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(INDEX_SCHEMA)
-    todo_set = set(todo)
-    part_f = part.filter(F.spark_partition_id().isin(list(todo_set)))
+    part_f = part.filter(F.spark_partition_id().isin(list(todo)))
+    counts = part.sparkSession.sparkContext.accumulator({}, _BucketCounts())
 
     def rows(bucket, kind, n, **cols):
         # one batch of n segment rows; the columns not given are null
@@ -488,6 +526,7 @@ def _build_buckets(spark, part, front, out: Path, todo, run_id, pfor) -> None:
         n_docs = len(urls)
         yield rows(bucket, 0, n_docs, doc_idx=np.arange(n_docs), url=urls, dl=dl)
         if len(p_codes) == 0:
+            counts.add({bucket: (n_docs, int(dl.sum()), 0, 0, 0, None)})
             return
         starts, ends = _runs(p_codes)
         encoded = encode_postings_batch(
@@ -504,8 +543,11 @@ def _build_buckets(spark, part, front, out: Path, todo, run_id, pfor) -> None:
             ],
             dtype=np.int64,
         )
-        secs = np.full(len(starts), np.nan)  # NaN -> null
-        secs[0] = time.monotonic() - t_start
+        n_bytes = sum(len(e.postings) + len(e.blockmeta) for e in encoded)
+        counts.add({bucket: (
+            n_docs, int(dl.sum()), len(starts), len(p_codes), n_bytes,
+            time.monotonic() - t_start,
+        )})
         yield rows(
             bucket, 1, len(starts),
             term_hash=hashes,
@@ -513,77 +555,58 @@ def _build_buckets(spark, part, front, out: Path, todo, run_id, pfor) -> None:
             df=ends - starts,
             postings=[e.postings for e in encoded],
             blockmeta=[e.blockmeta for e in encoded],
-            # per-term encoded size: lets the commit metrics sum a cheap
-            # int column instead of scanning the binary bytes
-            enc_bytes=np.array(
-                [len(e.postings) + len(e.blockmeta) for e in encoded],
-                dtype=np.int64,
-            ),
-            encode_secs=secs,
         )
 
     part_f.mapInArrow(encode_partition, schema=INDEX_SCHEMA).write.partitionBy(
         "bucket"
     ).mode("append").parquet(str(out / "index"))
-    _commit_buckets(spark, out, todo_set, run_id)
+    return counts.value
 
 
-def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
+def _commit_buckets(out: Path, todo, counts: dict, run_id: str) -> None:
     """Commit: lineage rows mark buckets durable; metrics ride along.
 
-    ONE scan of the freshly-written buckets computes everything driver-
-    side (n_buckets rows): doc counts, dl sums, term/posting counts and
-    the per-term ``enc_bytes`` sum — no binary column is ever read
-    (summing length(postings) would scan the whole segment payload,
-    a fixed serial tail that hurt the high-parallelism bench levels).
-    The lineage and metrics rows go to Spark as pandas frames, i.e.
-    Arrow-built LocalRelations: their writes run JVM-only tasks, where a
-    pickled row list would add a Python task wave to every commit.
+    Both are built from the kernel's per-bucket ``counts`` and written
+    with pyarrow on the driver, metrics first: no Spark job runs and
+    nothing written is read back. Every bucket of ``todo`` gets a
+    lineage row (with zero docs if it held none); only a bucket with a
+    term gets a metrics row.
     """
-    agg_rows = (
-        read_index(spark, str(out))
-        .filter(F.col("bucket").isin(list(todo_set)))
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.when(F.col("kind") == 0, 1).otherwise(0)).alias("input_docs"),
-            F.sum(F.when(F.col("kind") == 0, F.col("dl"))).alias("dl_sum"),
-            F.sum(F.when(F.col("kind") == 1, 1).otherwise(0)).alias("n_terms"),
-            F.sum(F.when(F.col("kind") == 1, F.col("df"))).alias("n_postings"),
-            F.sum("enc_bytes").alias("segment_bytes"),
-            F.max("encode_secs").alias("encode_secs"),
-        )
-        .collect()
-    )
-    by_bucket = {r.bucket: r for r in agg_rows}
     now = time.time()
-    lineage_rows = [
-        (run_id, int(bkt), "committed", f"index/bucket={bkt}",
-         int(by_bucket[bkt].input_docs if bkt in by_bucket else 0), now)
-        for bkt in sorted(todo_set)
-    ]
-    spark.createDataFrame(
-        pd.DataFrame(lineage_rows, columns=LINEAGE_SCHEMA.fieldNames()),
-        LINEAGE_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(str(out / "lineage.parquet"))
-
-    metric_rows = []
-    for bkt in sorted(todo_set):
-        r = by_bucket.get(bkt)
-        if r is None or not r.n_terms:
-            continue
-        es = float(r.encode_secs) if r.encode_secs is not None else None
-        metric_rows.append(
-            (run_id, int(bkt), int(r.input_docs), int(r.dl_sum or 0),
-             int(r.n_terms), int(r.n_postings), int(r.segment_bytes or 0),
-             es,
-             (r.input_docs / es) if es else None,
-             (r.n_postings / es) if es else None)
+    metric_rows, lineage_rows = [], []
+    for bkt in sorted(todo):
+        docs, dl_sum, n_terms, n_postings, n_bytes, secs = counts.get(
+            bkt, (0, 0, 0, 0, 0, None)
         )
-    # None -> NaN in the float columns -> null again in the Arrow build
-    spark.createDataFrame(
-        pd.DataFrame(metric_rows, columns=METRICS_SCHEMA.fieldNames()),
-        METRICS_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(str(out / "metrics.parquet"))
+        lineage_rows.append(
+            (run_id, bkt, "committed", f"index/bucket={bkt}", docs, dl_sum, now)
+        )
+        if n_terms:
+            metric_rows.append(
+                (run_id, bkt, docs, dl_sum, n_terms, n_postings, n_bytes, secs,
+                 docs / secs if secs else None,
+                 n_postings / secs if secs else None)
+            )
+    _append_parquet(out / "metrics.parquet", METRICS_SCHEMA, metric_rows)
+    _append_parquet(out / "lineage.parquet", LINEAGE_SCHEMA, lineage_rows)
+
+
+def _append_parquet(table_dir: Path, schema: StructType, rows: list[tuple]) -> None:
+    """Add ``rows`` to the parquet table at ``table_dir`` as one new
+    part file, written hidden and renamed into place, so a reader sees
+    all of the rows or none of them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table_dir.mkdir(exist_ok=True)
+    names = schema.fieldNames()
+    tbl = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    name = f"part-{uuid.uuid4()}.parquet"
+    pq.write_table(tbl, table_dir / f".{name}")
+    os.replace(table_dir / f".{name}", table_dir / name)
 
 
 def bm25_idf_col(df_col, n_docs: int):
@@ -631,8 +654,7 @@ def read_segments(spark: SparkSession, out_dir: str) -> DataFrame:
         read_index(spark, out_dir)
         .filter(F.col("kind") == 1)
         .select(
-            "bucket", "term_hash", "term", "df", "postings", "blockmeta",
-            "encode_secs",
+            "bucket", "term_hash", "term", "df", "postings", "blockmeta"
         )
     )
 

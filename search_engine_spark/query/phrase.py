@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from ..pipeline.common import sql_words, words_col
 from ..pipeline.textstats import _sql_ngrams
-from .. import corpus
 
 _WORD_RE = re.compile(r"\w+")
 
@@ -115,15 +114,6 @@ PHRASE_QUERIES: list[tuple[str, str]] = [
     ("p06", "fast scan"),
     ("p07", "value"),
 ]
-
-
-def reference_phrases() -> list[tuple[str, str]]:
-    """The reference's own query sentences as phrases (for corpora that
-    actually contain them, e.g. the embedded 100-doc reference corpus)."""
-    return [
-        (f"q{i:02d}", q)
-        for i, q in enumerate(corpus.REFERENCE_QUERIES, start=1)
-    ]
 
 
 def sql_phrase_topk(

@@ -432,13 +432,14 @@ def wand_topk(
     batch/pipeline shape — or a plain ``[(query_id, query_string)]``
     list for serving front-ends that already hold the batch on the
     driver (TCP server, REPL, CLI). Both are served the same way, and
-    the call is EAGER: a DataFrame batch is collected once through
-    Arrow (one Spark job), every query is tokenized and resolved against
-    the driver-side lexicon, the one kernel job scores every bucket, and
-    the per-bucket top-k lists are merged on the driver and returned as
-    a local relation, whose collect runs no Spark job. The driver holds
-    the batch and receives at most ``n_buckets * k`` candidate rows per
-    query. A null query string matches nothing.
+    the call is EAGER: a DataFrame batch is collected once (one Spark
+    job, none for a local relation), every query is tokenized and
+    resolved against the driver-side lexicon, the one kernel job scores
+    every bucket, and the per-bucket top-k lists are merged on the
+    driver and returned as a local relation, whose collect runs no
+    Spark job. The driver holds the batch and receives at most
+    ``n_buckets * k`` candidate rows per query. A null query string
+    matches nothing.
 
     ``k=None`` returns the FULL ranked list per query (every matched
     doc, ranked) — parity with the reference poll endpoint, which
@@ -455,11 +456,11 @@ def wand_topk(
 
 def _query_batch(queries: DataFrame | list[tuple[str, str]]) -> list[tuple]:
     """The batch as driver-held (query_id, query_string) pairs: a
-    DataFrame is collected once, through Arrow."""
+    DataFrame is collected once (a local relation, e.g. one built from
+    pandas, with no Spark job)."""
     if isinstance(queries, list):
         return queries
-    batch = queries.select("query_id", "query_string").toArrow()
-    return list(zip(*(c.to_pylist() for c in batch.columns)))
+    return [tuple(r) for r in queries.select("query_id", "query_string").collect()]
 
 
 def _kernel(

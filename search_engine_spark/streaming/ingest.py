@@ -18,7 +18,8 @@ into one WITHOUT re-reading any text: segments decode back to
 per-document postings and re-encode with union-global stats.
 
 ``foreachBatch`` is the right tool (vs a custom sink): the index build
-is a multi-job batch dataflow (encode, commit, stats/termstats), and
+is a multi-job batch dataflow (the encode kernel's write, then the
+termstats aggregate; the commit between them runs no job), and
 foreachBatch gives exactly-once per-batch semantics via the streaming
 checkpoint + the builder's idempotent lineage commits.
 """
@@ -280,8 +281,9 @@ def compact_generations(
     generation's ordinal and re-encoded by the one segment builder
     (``build_segments_from_postings``) — compaction moves
     compressed-postings-sized data, exactly like a Lucene segment merge.
-    No step infers a parquet schema, so a 2-generation compaction runs
-    12 Spark jobs (``tests/test_segment_build.py`` bounds it).
+    No step infers a parquet schema and the commit reads nothing back,
+    so a 2-generation compaction runs 6 Spark jobs
+    (``tests/test_segment_build.py`` bounds it).
     Documents are keyed by (url, generation, bucket, doc_idx), so a url
     captured by two generations stays two documents, as in a batch build
     over the same pages and in :func:`query_generations` before the

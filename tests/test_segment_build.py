@@ -11,7 +11,17 @@ and literal pages), so these run without the reference corpus:
   build read every internal parquet file with a declared schema and
   its committed-bucket set with pyarrow, they ran 16 and 20 (one
   1-task schema-inference job per undeclared read, plus a distinct
-  job per bucket-set read).
+  job per bucket-set read). Before the kernel reported its per-bucket
+  counts through an accumulator, and lineage, metrics, N and avgdl
+  were written and read with pyarrow, they ran 10 and 12 (a scan of
+  the fresh index for the commit counts, a Spark write each for
+  lineage and metrics, and a scan of the doc rows for N and avgdl).
+- the lineage and metrics rows of a build, a resumed build and a
+  compaction equal an independent aggregate over the written index
+  rows; a bucket with no token keeps its lineage row and gets no
+  metrics row
+- a build over a complete index runs no Spark job, leaves
+  ``stats.json`` untouched and keeps the index's serving cache
 """
 
 from __future__ import annotations
@@ -19,23 +29,27 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from search_engine_spark import corpus
 from search_engine_spark.index.segments import (
     build_segments,
     load_stats,
     read_docmeta,
+    read_index,
     read_lineage,
+    read_metrics,
     read_segments,
     read_termstats,
 )
+from search_engine_spark.query import wand
 from search_engine_spark.query.wand import wand_topk
 from search_engine_spark.streaming.ingest import compact_generations
 
 N_PAGES = 300
 N_BUCKETS = 4
-BUILD_JOBS = 10
-COMPACT_JOBS = 12
+BUILD_JOBS = 4
+COMPACT_JOBS = 6
 
 
 @pytest.fixture(scope="module")
@@ -54,6 +68,7 @@ def direct(spark, pages, tmp_path_factory):
         if pfor not in built:
             d = tmp_path_factory.mktemp("direct")
             build_segments(spark, pages, str(d), n_buckets=N_BUCKETS, run_id="d", pfor=pfor)
+            _assert_commit_rows_match_index(spark, d, N_BUCKETS)
             built[pfor] = _rows(spark, d), load_stats(str(d))
         return built[pfor]
 
@@ -67,6 +82,42 @@ def _rows(spark, d):
         for r in read_segments(spark, str(d)).collect()
     )
     return docs, terms
+
+
+def _assert_commit_rows_match_index(spark, d, n_buckets):
+    """One lineage row per bucket and one metrics row per bucket with a
+    term, equal to a Spark aggregate over the index rows of ``d``."""
+    kind = F.col("kind")
+    agg = {
+        r.bucket: r
+        for r in read_index(spark, str(d))
+        .groupBy("bucket")
+        .agg(
+            F.count(F.when(kind == 0, 1)).alias("docs"),
+            F.sum(F.when(kind == 0, F.col("dl"))).alias("dl_sum"),
+            F.count(F.when(kind == 1, 1)).alias("terms"),
+            F.sum(F.when(kind == 1, F.col("df"))).alias("postings"),
+            F.sum(F.length("postings") + F.length("blockmeta")).alias("bytes"),
+        )
+        .collect()
+    }
+    lineage = sorted(
+        (r.bucket, r.input_docs, r.dl_sum) for r in read_lineage(spark, str(d)).collect()
+    )
+    assert lineage == [
+        (b, agg[b].docs, agg[b].dl_sum) if b in agg else (b, 0, 0)
+        for b in range(n_buckets)
+    ]
+    metrics = sorted(
+        (r.bucket, r.input_docs, r.dl_sum, r.n_terms, r.n_postings, r.segment_bytes)
+        for r in read_metrics(spark, str(d)).collect()
+    )
+    assert metrics == sorted(
+        (b, r.docs, r.dl_sum, r.terms, r.postings, r.bytes)
+        for b, r in agg.items()
+        if r.terms
+    )
+    return agg
 
 
 @pytest.fixture(scope="module")
@@ -91,6 +142,7 @@ def test_compaction_writes_the_rows_of_a_direct_build(
     assert len(jobs) <= COMPACT_JOBS, jobs
     docs, terms = _rows(spark, dest)
     assert len(docs) == N_PAGES and len(terms) > 1000
+    _assert_commit_rows_match_index(spark, dest, N_BUCKETS)
     assert ((docs, terms), load_stats(dest)) == direct(pfor)
 
 
@@ -106,6 +158,40 @@ def test_resumed_build_equals_uninterrupted(spark, pages, direct, tmp_path):
     assert s2["built_buckets"] == 2 and s2["complete"]
     assert (_rows(spark, resumed), load_stats(str(resumed))) == direct(False)
     assert {r.run_id for r in read_lineage(spark, str(resumed)).collect()} == {"r1", "r2"}
+    _assert_commit_rows_match_index(spark, resumed, N_BUCKETS)
+
+
+def test_buckets_without_tokens_keep_lineage_without_metrics(spark, tmp_path):
+    """Pages with no token still count as documents of their bucket,
+    and a bucket with no page still gets its lineage row."""
+    d = tmp_path / "idx"
+    rows = [("u0", "apple pie")] + [(f"e{i}", " " * (i % 3)) for i in range(12)]
+    pages = spark.createDataFrame(rows, "url string, text string")
+    build_segments(spark, pages, str(d), n_buckets=16)
+    agg = _assert_commit_rows_match_index(spark, d, 16)
+    assert len(agg) < 16  # 13 pages leave a bucket empty
+    assert any(r.docs and not r.terms for r in agg.values()), agg
+    assert load_stats(str(d))["n_docs"] == len(rows)
+
+
+def test_build_over_complete_index_is_a_no_op(spark, pages, tmp_path, job_group):
+    """A second build runs no Spark job and leaves ``stats.json`` as it
+    was, so the index's serving cache (keyed by its mtime) stays."""
+    d = str(tmp_path / "idx")
+    first = build_segments(spark, pages, d, n_buckets=N_BUCKETS)
+    phases = [first[k] for k in ("encode_write_secs", "commit_secs", "finalize_secs")]
+    assert all(t > 0 for t in phases) and sum(phases) <= first["elapsed_secs"]
+    wand_topk(spark, d, [("q", "w1")], k=10).collect()
+    key = next(k for k in wand._INDEX_CACHE if k[0] == wand._index_fingerprint(d))
+    cached = wand._INDEX_CACHE[key]["index"]
+    mtime = (tmp_path / "idx" / "stats.json").stat().st_mtime_ns
+    with job_group() as jobs:
+        again = build_segments(spark, pages, d, n_buckets=N_BUCKETS)
+    assert jobs == []
+    assert (tmp_path / "idx" / "stats.json").stat().st_mtime_ns == mtime
+    assert again["built_buckets"] == 0 and again["complete"]
+    assert (again["n_docs"], again["avgdl"]) == (first["n_docs"], first["avgdl"])
+    assert wand._serving_state(spark, d)["index"] is cached
 
 
 def test_compaction_keeps_a_recrawled_url_two_documents(spark, tmp_path, job_group):

@@ -6,7 +6,8 @@ buckets), so they run without the reference corpus:
   both forms); a null query string matches nothing in either form
 - an in-vocabulary list query is one Spark job with one Python task
   wave, and collecting its result runs none; an OOV query runs no job;
-  a DataFrame batch is two jobs (its collect and the kernel)
+  a DataFrame batch is two jobs (its collect and the kernel), and a
+  pandas-built one (a local relation) only the kernel job
 - serving state for a fresh index runs no Spark job; the first kernel
   plan reads the (still empty) index cache with no Exchange above it
   and filters it by term_hash, with no live parquet scan; that filter
@@ -27,6 +28,7 @@ from __future__ import annotations
 import math
 import re
 import shutil
+import threading
 from pathlib import Path
 
 import pandas as pd
@@ -203,6 +205,18 @@ def test_dataframe_batch_runs_collect_and_kernel_jobs(spark, served, job_group):
     _assert_same_ranking(got, oracle({qid for qid, _ in QUERIES}, 10))
 
 
+def test_local_relation_batch_runs_only_the_kernel_job(spark, served, job_group):
+    """A pandas-built DataFrame batch is a local relation, collected
+    with no Spark job: on a warm index the batch is the kernel job."""
+    d, oracle = served
+    qdf = spark.createDataFrame(pd.DataFrame(QUERIES, columns=["query_id", "query_string"]))
+    wand_topk(spark, d, qdf, k=10).collect()  # warm
+    with job_group() as jobs:
+        res = wand_topk(spark, d, qdf, k=10)
+    assert len(jobs) == 1, jobs
+    _assert_same_ranking(res.collect(), oracle({qid for qid, _ in QUERIES}, 10))
+
+
 def test_null_query_string_matches_nothing(spark, tmp_path):
     """A null query string is skipped, in both batch forms: it must not
     search for the word "none", which this index holds."""
@@ -278,7 +292,16 @@ def test_term_filter_is_built_in_constant_py4j_calls(spark, served, monkeypatch)
     client = spark.sparkContext._gateway._gateway_client
     sent = []
     send = client.send_command
-    monkeypatch.setattr(client, "send_command", lambda *a, **kw: sent.append(1) or send(*a, **kw))
+    caller = threading.current_thread()
+
+    def count(*a, **kw):
+        # only this thread's commands: py4j's finalizer thread sends one
+        # command per garbage-collected JavaObject of any earlier test
+        if threading.current_thread() is caller:
+            sent.append(a[0])
+        return send(*a, **kw)
+
+    monkeypatch.setattr(client, "send_command", count)
     rows = wand._index_rows(state, set(range(1, 501)))
     monkeypatch.undo()
     assert 0 < len(sent) <= 10, len(sent)
